@@ -97,42 +97,6 @@ class CheckpointStore:
     def _paths(self, name: str) -> tuple[pathlib.Path, pathlib.Path]:
         return self.base / name, self.base / f"{name}.manifest.json"
 
-    def _table_name(self, name: str) -> str:
-        # catalog entry per (checkpoint dir, stage): the files under
-        # data_dir are the durable artifact; the table is just metadata
-        # (bucket spec) re-registerable from the manifest on resume
-        import hashlib
-
-        return f"ckpt_{name}_{hashlib.md5(str(self.base).encode()).hexdigest()[:8]}"
-
-    def _register_bucketed(
-        self,
-        name: str,
-        manifest: dict[str, Any],
-        data_dir: pathlib.Path,
-    ) -> DataFrame:
-        """(Re-)register the bucketed stage table from its manifest — a fresh
-        session resuming an existing checkpoint dir has the parquet files but
-        no catalog entry, and the bucket spec lives ONLY in the catalog (a
-        plain parquet read of the same files loses HashPartitioning)."""
-        tbl = self._table_name(name)
-        b = manifest["bucket"]
-        if not self.spark.catalog.tableExists(tbl):
-            part = (
-                f"PARTITIONED BY ({', '.join(b['partition_by'])}) "
-                if b.get("partition_by")
-                else ""
-            )
-            self.spark.sql(
-                f"CREATE TABLE {tbl} ({b['schema_ddl']}) USING parquet "
-                + part
-                + f"CLUSTERED BY ({', '.join(b['cols'])}) "
-                f"INTO {b['n']} BUCKETS LOCATION '{data_dir}'"
-            )
-            if b.get("partition_by"):
-                self.spark.sql(f"MSCK REPAIR TABLE {tbl}")
-        return self.spark.table(tbl)
-
     def run(
         self,
         name: str,
@@ -140,17 +104,13 @@ class CheckpointStore:
         build: Callable[[], DataFrame],
         extra_metrics: dict[str, Any] | None = None,
         partition_by: list[str] | None = None,
-        bucket_by: tuple[int, list[str]] | None = None,
     ) -> StageResult:
         data_dir, manifest_path = self._paths(name)
         t0 = time.time()
         if manifest_path.exists():
             manifest = json.loads(manifest_path.read_text())
             if manifest.get("signature") == signature:
-                if bucket_by and manifest.get("bucket"):
-                    df = self._register_bucketed(name, manifest, data_dir)
-                else:
-                    df = self.spark.read.parquet(str(data_dir))
+                df = self.spark.read.parquet(str(data_dir))
                 res = StageResult(
                     df,
                     manifest["rows"],
@@ -163,49 +123,14 @@ class CheckpointStore:
             # stale signature: rebuild from scratch
             manifest_path.unlink()
             shutil.rmtree(data_dir, ignore_errors=True)
-            if bucket_by:
-                self.spark.sql(
-                    f"DROP TABLE IF EXISTS {self._table_name(name)}"
-                )
 
         df = build()
         shutil.rmtree(data_dir, ignore_errors=True)
-        bucket_meta: dict[str, Any] | None = None
-        if bucket_by:
-            n_buckets, bcols = bucket_by
-            tbl = self._table_name(name)
-            # align write tasks to bucket ids (same hash pmod n as the
-            # bucket spec) so each task emits ~1 file per partition value
-            # instead of n_buckets files per task. This shuffle is the
-            # bucketing's whole cost — it buys consumers (scoring's payload
-            # distinct + score join-back) the scan's HashPartitioning with
-            # zero exchange of this table (the Iceberg bucket-partition
-            # story at prod scale).
-            writer = df.repartition(n_buckets, *bcols).write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            self.spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-            writer.bucketBy(n_buckets, *bcols).option(
-                "path", str(data_dir)
-            ).saveAsTable(tbl)
-            out = self.spark.table(tbl)
-            bucket_meta = {
-                "n": n_buckets,
-                "cols": bcols,
-                "partition_by": partition_by or [],
-                # DDL for resume-in-a-fresh-session re-registration;
-                # saveAsTable moves partition columns last, mirror that
-                "schema_ddl": ", ".join(
-                    f"{f.name} {f.dataType.simpleString()}"
-                    for f in out.schema.fields
-                ),
-            }
-        else:
-            writer = df.write.mode("overwrite")
-            if partition_by:
-                writer = writer.partitionBy(*partition_by)
-            writer.parquet(str(data_dir))
-            out = self.spark.read.parquet(str(data_dir))
+        writer = df.write.mode("overwrite")
+        if partition_by:
+            writer = writer.partitionBy(*partition_by)
+        writer.parquet(str(data_dir))
+        out = self.spark.read.parquet(str(data_dir))
         # row counts + per-partition lineage straight from parquet footers —
         # no extra Spark job per stage
         import pyarrow.parquet as pq
@@ -230,8 +155,6 @@ class CheckpointStore:
             "committed_at": time.time(),
             "wall_sec": time.time() - t0,
         }
-        if bucket_meta:
-            manifest["bucket"] = bucket_meta
         manifest_path.write_text(json.dumps(manifest, indent=2))
         self.log.append({"stage": name, "resumed": False, **manifest})
         return StageResult(out, rows, False, time.time() - t0, partition_rows)
@@ -243,7 +166,6 @@ class CheckpointStore:
         build: Callable[[], DataFrame],
         extra_metrics: dict[str, Any] | None = None,
         partition_by: list[str] | None = None,
-        bucket_by: tuple[int, list[str]] | None = None,
     ) -> StageResult:
         """Like :meth:`run`, but the parquet write happens on a background
         thread while the caller proceeds with downstream compute off the
@@ -257,15 +179,6 @@ class CheckpointStore:
 
         Resume fast-path is identical to :meth:`run` (read-back df, nothing
         persisted, nothing pending)."""
-        if bucket_by:
-            # async consumers read the PERSISTED build, not the written
-            # table, so the bucket spec would never reach a downstream plan
-            # in this run — reject rather than silently lose the property
-            raise NotImplementedError(
-                "bucket_by requires checkpoint_mode='sync' (async stages "
-                "serve downstream from the in-memory build, which carries "
-                "no bucketing)"
-            )
         data_dir, manifest_path = self._paths(name)
         t0 = time.time()
         if manifest_path.exists():
@@ -411,11 +324,7 @@ class EphemeralStore:
         build: Callable[[], DataFrame],
         extra_metrics: dict[str, Any] | None = None,
         partition_by: list[str] | None = None,
-        bucket_by: tuple[int, list[str]] | None = None,
     ) -> StageResult:
-        # bucket_by is accepted-and-ignored: with no materialized table
-        # there is no bucket spec to expose; the cached build serves
-        # downstream at whatever partitioning it was built with
         t0 = time.time()
         df = build().persist()
         rows = df.count()

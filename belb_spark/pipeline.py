@@ -61,35 +61,11 @@ class ERConfig:
     #   below ~10^5 rows where the builds fit comfortably in cache.
     # 'off': EphemeralStore — no parquet at all (no resume); the wall delta
     #   vs 'sync' measures the checkpoint I/O share for the scaling report.
+    # Written checkpoints are plain parquet at the build's own partitioning,
+    # not bucketed catalog tables: bucketing stages 01/03 by content key
+    # costs a repartition per write that exceeds the scoring shuffles it
+    # saves (measured at 1k-53k rows on 4 cores).
     checkpoint_mode: str = "sync"
-    # Write the 03_candidates checkpoint as a bucketed table
-    # (CLUSTERED BY (h_a, h_b) INTO n BUCKETS) instead of plain parquet.
-    # One extra shuffle at the stage-03 write buys the scoring stage a pair
-    # scan that already reports HashPartitioning(h_a, h_b): BOTH the payload
-    # distinct and the final score join-back consume it with zero exchange
-    # of the pair table — the two largest shuffles of stage 04 (measured in
-    # score_stage_lab: carry_h_bucket beat carry_h ~8% at 16c and scaled
-    # better N→4N). This is the sandbox twin of Iceberg bucket-partitioning
-    # the pair table at prod scale. Sync checkpoint mode only. Pick n as the
-    # stage-04 target parallelism (buckets are static once written).
-    # None (default, r6 — VERDICT r5 #4) = auto: $BELB_ER_BUCKETS (48)
-    # under sync mode — the configuration the r5 scaling evidence is built
-    # on — and 0 (off) under async/off modes, where bucketed writes are
-    # unsupported. An explicit int keeps the r5 behavior (incl. raising
-    # when combined with async).
-    bucket_candidates: int | None = None
-    # Write the 01_normalize checkpoint CLUSTERED BY (h) INTO n BUCKETS.
-    # The scoring stage derives its payload reps from this table with
-    # dropDuplicates(["h"]) followed by two h-keyed joins: bucketed by h,
-    # the distinct needs NO exchange and both payload joins reuse the
-    # bucketing on the reps side — the reps path was the last full shuffle
-    # of fat rows (norm_tokens ~0.5 kB/row) in stage 04, and in multi-
-    # executor deployments it is the stage's dominant inter-executor
-    # transfer (measured r5 standalone: stage-04 clean efficiency 0.63 vs
-    # 0.75 in single-JVM local mode — the delta IS this shuffle). Costs one
-    # exchange at the stage-01 write, identical at every cluster size.
-    # None = auto, as for bucket_candidates.
-    bucket_reps: int | None = None
 
 
 # bump when a stage's checkpoint schema changes (columns added/removed/
@@ -114,24 +90,6 @@ def run_pipeline(
     checkpoint_dir: str | None = None,
     cfg: ERConfig = ERConfig(),
 ) -> ERResult:
-    # resolve the 'auto' bucket defaults BEFORE the signature so resume
-    # keys on the EFFECTIVE configuration (None -> 48 under sync, 0 under
-    # async/off; see ERConfig)
-    if cfg.bucket_candidates is None or cfg.bucket_reps is None:
-        import os as _os
-
-        auto = (
-            int(_os.environ.get("BELB_ER_BUCKETS", "48"))
-            if cfg.checkpoint_mode == "sync"
-            else 0
-        )
-        cfg = dataclasses.replace(
-            cfg,
-            bucket_candidates=(
-                auto if cfg.bucket_candidates is None else cfg.bucket_candidates
-            ),
-            bucket_reps=auto if cfg.bucket_reps is None else cfg.bucket_reps,
-        )
     # the resume signature covers config, input identity AND the stage
     # schema version: re-running the same checkpoint_dir over changed input
     # (ADVICE r1) or across a stage-schema change (r4: candidates carry
@@ -197,14 +155,10 @@ def _run_pipeline_body(
     spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics, store,
     checks, synonym_dict,
 ) -> ERResult:
-    def run_stage(name, build, partition_by=None, bucket_by=None):
+    def run_stage(name, build, partition_by=None):
         if cfg.checkpoint_mode == "async":
-            return store.run_async(
-                name, sig, build, partition_by=partition_by, bucket_by=bucket_by
-            )
-        return store.run(
-            name, sig, build, partition_by=partition_by, bucket_by=bucket_by
-        )
+            return store.run_async(name, sig, build, partition_by=partition_by)
+        return store.run(name, sig, build, partition_by=partition_by)
 
     # explicit partitioning at ingest, before any expression-heavy stage.
     # 3 waves per core, matching shuffle partitions: a straggler split costs
@@ -238,7 +192,6 @@ def _run_pipeline_body(
             "norm_tokens",
             F.unhex(F.md5(F.to_json("norm_tokens"))).alias("h"),
         ),
-        bucket_by=(cfg.bucket_reps, ["h"]) if cfg.bucket_reps else None,
     )
     norm = norm_res.df.withColumn(
         "norm_text", F.array_join("norm_tokens", " ")
@@ -302,14 +255,7 @@ def _run_pipeline_body(
     if obs is not None:
         # partitioned by src so per-family row counts come from the manifest
         # (parquet footers) when the write is synchronous
-        cand_res = run_stage(
-            "03_candidates",
-            build_candidates,
-            partition_by=["src"],
-            bucket_by=(cfg.bucket_candidates, ["h_a", "h_b"])
-            if cfg.bucket_candidates
-            else None,
-        )
+        cand_res = run_stage("03_candidates", build_candidates, partition_by=["src"])
         if cand_res.resumed:
             # the observation never fired (no action ran); the stats were
             # annotated into the manifest by the run that built the stage
@@ -334,12 +280,7 @@ def _run_pipeline_body(
         with ThreadPoolExecutor(max_workers=1) as pool:
             stats_future = pool.submit(lambda: stats_df.collect()[0])
             cand_res = run_stage(
-                "03_candidates",
-                build_candidates,
-                partition_by=["src"],
-                bucket_by=(cfg.bucket_candidates, ["h_a", "h_b"])
-                if cfg.bucket_candidates
-                else None,
+                "03_candidates", build_candidates, partition_by=["src"]
             )
         stats = stats_future.result()
     metrics["pairs_theoretical"] = int(stats["theoretical"] or 0)
@@ -455,6 +396,12 @@ def _run_pipeline_body(
                 for e in stage_log
             ]
         ).to_parquet(pathlib.Path(checkpoint_dir) / "metrics.parquet", index=False)
-    except Exception:
-        pass  # metrics table is best-effort; metrics.json is authoritative
+    except Exception as err:  # noqa: BLE001 - metrics.json is authoritative
+        import warnings
+
+        warnings.warn(
+            f"metrics.parquet not written (metrics.json was): {err!r}",
+            RuntimeWarning,
+            stacklevel=3,
+        )
     return ERResult(assignment=assignment, metrics=metrics, stages=stage_log)

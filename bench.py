@@ -12,6 +12,7 @@ on the seeded synthetic corpus, and prints ONE JSON line:
 Each query is forced end-to-end with the noop sink (full materialization, no
 collect-to-driver skew). ER synthetic input is cached under /tmp keyed by
 scale so repeated runs measure compute, not datagen.
+``$SPARK_GRAFT_CPUS`` defaults to every CPU this process may run on.
 """
 
 from __future__ import annotations
@@ -50,7 +51,8 @@ def _cpu_jiffies() -> tuple[int, int]:
     """(steal, total) jiffies from /proc/stat — hypervisor CPU steal is the
     only in-guest signal that a co-tenant is eating the cores (guest loadavg
     cannot see it), so each query carries its steal share."""
-    p = open("/proc/stat").readline().split()
+    with open("/proc/stat") as f:
+        p = f.readline().split()
     vals = list(map(int, p[1:9]))  # user nice sys idle iowait irq softirq steal
     return vals[7], sum(vals)
 
@@ -92,7 +94,7 @@ def run_er(spark, scale: str) -> dict:
 
 def main() -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    cpus = os.environ.get("SPARK_GRAFT_CPUS") or str(len(os.sched_getaffinity(0)))
 
     import __spark_entry__ as entrymod
     from belb_spark.session import get_spark

@@ -43,12 +43,6 @@ strategy = sys.argv[5] if len(sys.argv) > 5 else "capped"
 n_part = int(sys.argv[6]) if len(sys.argv) > 6 and sys.argv[6] != "0" else None
 ckpt_base = sys.argv[7] if len(sys.argv) > 7 and sys.argv[7] else None
 bcast = sys.argv[8] if len(sys.argv) > 8 and sys.argv[8] else None
-# -1 = "pipeline auto" (ERConfig None: $BELB_ER_BUCKETS under sync, 0
-# otherwise — the r6 shipped default); 0 = explicitly unbucketed
-bucket = int(sys.argv[9]) if len(sys.argv) > 9 and sys.argv[9] else 0
-bucket_reps = int(sys.argv[10]) if len(sys.argv) > 10 and sys.argv[10] else 0
-bucket_arg = None if bucket < 0 else bucket
-bucket_reps_arg = None if bucket_reps < 0 else bucket_reps
 extra = {"spark.sql.autoBroadcastJoinThreshold": bcast} if bcast else {}
 from belb_spark.session import get_spark, cores_from_master
 from belb_spark.pipeline import ERConfig, run_pipeline
@@ -63,8 +57,7 @@ repos = spark.read.parquet(str(d / "repos.parquet"))
 syn = spark.read.parquet(str(d / "synonym_dict.parquet"))
 lp = spark.read.parquet(str(d / "labeled_pairs.parquet"))
 ckpt = tempfile.mkdtemp(prefix="belb_scaling_ckpt_", dir=ckpt_base)
-cfg = ERConfig(checkpoint_mode=mode, pairs_strategy=strategy, input_partitions=n_part,
-               bucket_candidates=bucket_arg, bucket_reps=bucket_reps_arg)
+cfg = ERConfig(checkpoint_mode=mode, pairs_strategy=strategy, input_partitions=n_part)
 t0 = time.time()
 res = run_pipeline(spark, repos, syn, lp, checkpoint_dir=ckpt, cfg=cfg)
 wall = time.time() - t0
@@ -73,7 +66,6 @@ m = res.metrics
 pairs = m["pairs_scored"] + m["exact_dup_edges"]
 print("RESULT " + json.dumps({
     "master": master, "cores": cores, "mode": mode, "strategy": strategy,
-    "bucket": bucket, "bucket_reps": bucket_reps,
     "ckpt_base": ckpt_base or "/tmp",
     "wall_sec": round(wall, 2),
     "rows": m["rows_in"], "pairs": pairs,
@@ -251,8 +243,6 @@ def run_level(
     ckpt_base: str = "",
     bcast: str = "",
     heap: str = "16g",
-    bucket: int = 0,
-    bucket_reps: int = 0,
     pin_cpus: int = 0,
     standalone: bool = False,
 ) -> dict:
@@ -316,8 +306,7 @@ def run_level(
                 "--conf", "spark.ui.enabled=false",
                 "--py-files", str(REPO / "dist" / "belb_spark.zip"),
                 str(runner), cluster.master_url, data_dir, scale, mode,
-                strategy, str(n_part), ckpt_base, bcast, str(bucket),
-                str(bucket_reps),
+                strategy, str(n_part), ckpt_base, bcast,
             ]
         else:
             cmd = [
@@ -328,7 +317,6 @@ def run_level(
                 "--driver-memory", heap,
                 "--py-files", str(REPO / "dist" / "belb_spark.zip"),
                 str(runner), master, data_dir, scale, mode, strategy, str(n_part), ckpt_base, bcast,
-                str(bucket), str(bucket_reps),
             ]
         if pin_cpus and not standalone:
             # Confine the whole process tree (driver JVM + forked python
@@ -723,27 +711,6 @@ def main() -> int:
     )
     ap.add_argument("--strategy", default="capped", choices=["capped", "salted"])
     ap.add_argument(
-        "--bucket",
-        type=int,
-        default=0,
-        help="ERConfig.bucket_candidates: write the candidates checkpoint "
-        "as an N-bucket CLUSTERED BY (h_a, h_b) table so scoring's payload "
-        "distinct and join-back start co-partitioned. 0 = plain parquet "
-        "(NOTE: the r6 pipeline default is auto-bucketed — pass -1 to "
-        "measure the shipped default). Fixed across levels — a table's "
-        "bucket count is static.",
-    )
-    ap.add_argument(
-        "--bucket-reps",
-        type=int,
-        default=0,
-        help="ERConfig.bucket_reps: write the 01_normalize checkpoint "
-        "CLUSTERED BY (h) so scoring's payload-reps distinct and h-keyed "
-        "joins start co-partitioned (the stage's dominant inter-executor "
-        "transfer in multi-executor deployments). 0 = plain parquet; "
-        "-1 = the pipeline's auto default (see --bucket).",
-    )
-    ap.add_argument(
         "--assemble",
         action="store_true",
         help="build BENCH/BASELINE.md + scaling_<scale>.json from the "
@@ -820,13 +787,6 @@ def main() -> int:
     )
     args = ap.parse_args()
 
-    # fail fast (ADVICE r5): bucketed checkpoint tables are sync-mode only;
-    # run_async otherwise raises at stage time, AFTER data generation
-    if args.mode != "sync" and (args.bucket > 0 or args.bucket_reps > 0):
-        ap.error(
-            f"--bucket/--bucket-reps require --mode sync (got --mode {args.mode})"
-        )
-
     if args.assemble:
         lines = [
             json.loads(l)
@@ -896,7 +856,6 @@ def main() -> int:
                     r = run_level(
                         f"local[{cores}]", data_dir, args.scale, 1, args.mode,
                         args.strategy, ckpt_base=args.ckpt_base, heap=heap,
-                        bucket=args.bucket, bucket_reps=args.bucket_reps,
                         pin_cpus=pin, standalone=args.standalone,
                     )
                 except RuntimeError:
@@ -904,7 +863,6 @@ def main() -> int:
                     r = run_level(
                         f"local[{cores}]", data_dir, args.scale, 1, args.mode,
                         args.strategy, ckpt_base=args.ckpt_base, heap=heap,
-                        bucket=args.bucket, bucket_reps=args.bucket_reps,
                         pin_cpus=pin, standalone=args.standalone,
                     )
                 r["pair"] = k
@@ -936,17 +894,14 @@ def main() -> int:
             })
         # merge with previously recorded evidence pairs of the same config
         # (long sessions run several batches; the record is cumulative)
-        # bucketed evidence gets its own file: the r4 non-bucketed record
-        # stays intact for before/after comparison
-        suffix = f"_b{args.bucket}" if args.bucket else ""
-        if args.bucket_reps:
-            suffix += f"_br{args.bucket_reps}"
         if args.standalone:
-            suffix += "_sa"
+            suffix = "_sa"
         elif args.pin_scale:
-            suffix += f"_pinx{args.pin_scale:g}"
+            suffix = f"_pinx{args.pin_scale:g}"
         elif args.pin_extra >= 0:
-            suffix += f"_pin{args.pin_extra}"
+            suffix = f"_pin{args.pin_extra}"
+        else:
+            suffix = ""
         out = REPO / "BENCH" / f"evidence_{args.scale}{suffix}.json"
         if out.exists():
             prior = json.loads(out.read_text())
@@ -954,11 +909,9 @@ def main() -> int:
                 prior.get("mode") == args.mode
                 and prior.get("strategy") == args.strategy
                 and prior.get("heap_per_core_gb") == args.heap_per_core
-                and prior.get("bucket", 0) == args.bucket
                 and prior.get("pin_extra", -1) == args.pin_extra
                 and prior.get("pin_scale", 0.0) == args.pin_scale
                 and prior.get("standalone", False) == args.standalone
-                and prior.get("bucket_reps", 0) == args.bucket_reps
             ):
                 base = len(prior["pairs"])
                 for t in table:
@@ -992,10 +945,9 @@ def main() -> int:
         clean_slice = _clean_effs("steal_slice_pct")
         summary = {
             "scale": args.scale, "mode": args.mode, "strategy": args.strategy,
-            "heap_per_core_gb": args.heap_per_core, "bucket": args.bucket,
+            "heap_per_core_gb": args.heap_per_core,
             "pin_extra": args.pin_extra, "pin_scale": args.pin_scale,
             "standalone": args.standalone,
-            "bucket_reps": args.bucket_reps,
             "pairs": table,
             "median_eff_pairs_scored": _median(effs),
             "n_pairs_ge_080": sum(e >= 0.8 for e in effs),
@@ -1024,8 +976,7 @@ def main() -> int:
         )
         r = run_level(
             args.one, data_dir, args.scale, 1, args.mode, args.strategy,
-            ckpt_base=args.ckpt_base, bcast=args.bcast, bucket=args.bucket,
-            bucket_reps=args.bucket_reps, heap=one_heap,
+            ckpt_base=args.ckpt_base, bcast=args.bcast, heap=one_heap,
             pin_cpus=(
                 0
                 if args.standalone

@@ -1,6 +1,8 @@
 """End-to-end gate: pairwise F1 ≥ 0.99 on the test split (BASELINE.json),
 row conservation, sha invariant, deterministic re-run, resume semantics."""
 
+import json
+import pathlib
 import shutil
 import tempfile
 
@@ -18,7 +20,13 @@ def ckpt_dir():
 
 
 @pytest.fixture(scope="module")
-def result(spark, tiny_spark, ckpt_dir):
+def tables_before(spark):
+    """Catalog contents before the module's pipeline run."""
+    return sorted(t.name for t in spark.catalog.listTables())
+
+
+@pytest.fixture(scope="module")
+def result(spark, tiny_spark, ckpt_dir, tables_before):
     return run_pipeline(
         spark,
         tiny_spark["repos"],
@@ -39,6 +47,18 @@ def test_f1_target(result):
     assert ev["test"]["f1"] >= 0.99, ev
     assert ev["dev"]["f1"] >= 0.99, ev
     assert ev["all"]["f1"] >= 0.99, ev
+
+
+def test_stage_checkpoints_are_plain_parquet(spark, result, ckpt_dir, tables_before):
+    """Stage checkpoints are parquet files plus a manifest: the run leaves
+    the catalog as it found it and records no bucket spec."""
+    assert sorted(t.name for t in spark.catalog.listTables()) == tables_before
+    manifests = sorted(pathlib.Path(ckpt_dir).glob("*.manifest.json"))
+    assert [m.name.split(".")[0] for m in manifests] == [
+        "01_normalize", "02_blocks", "03_candidates", "04_scores", "05_clusters"
+    ]
+    for m in manifests:
+        assert "bucket" not in json.loads(m.read_text()), m.name
 
 
 def test_row_conservation(result, tiny_spark):
@@ -102,6 +122,28 @@ def test_partial_resume_after_invalidation(spark, tiny_spark, ckpt_dir, result_r
     assert got == result_rows
 
 
+def test_metrics_table_failure_warns(spark, tiny_spark, ckpt_dir, result, monkeypatch):
+    """A failed metrics.parquet write is reported as a RuntimeWarning and
+    metrics.json is still written."""
+    import pandas as pd
+
+    def fail(*_a, **_k):
+        raise OSError("disk full")
+
+    monkeypatch.setattr(pd.DataFrame, "to_parquet", fail)
+    metrics_json = pathlib.Path(ckpt_dir) / "metrics.json"
+    metrics_json.unlink()
+    with pytest.warns(RuntimeWarning, match="metrics.parquet"):
+        run_pipeline(
+            spark,
+            tiny_spark["repos"],
+            tiny_spark["synonym_dict"],
+            labeled_pairs=None,
+            checkpoint_dir=ckpt_dir,
+        )
+    assert json.loads(metrics_json.read_text())["stages"]
+
+
 def test_resume_rebuilds_on_config_change(spark, tiny_spark, ckpt_dir):
     cfg = ERConfig(cc_max_iter=29)  # different signature
     res3 = run_pipeline(
@@ -116,8 +158,8 @@ def test_resume_rebuilds_on_config_change(spark, tiny_spark, ckpt_dir):
 
 
 def test_checkpoint_modes_agree(spark, tiny_spark):
-    """'sync' (r2 behavior), 'async' (overlapped writes, the default) and
-    'off' (EphemeralStore, no parquet) are physical strategies for the same
+    """'sync' (the default), 'async' (overlapped writes) and 'off'
+    (EphemeralStore, no parquet) are physical strategies for the same
     pipeline — identical clustering and metrics."""
     from belb_spark.pipeline import ERConfig, run_pipeline
 
@@ -139,114 +181,3 @@ def test_checkpoint_modes_agree(spark, tiny_spark):
             ),
         }
     assert outs["sync"] == outs["async"] == outs["off"]
-
-
-def test_bucketed_candidates_agree_and_reregister(spark, tiny_spark):
-    """bucket_candidates=N writes 03_candidates as a CLUSTERED BY (h_a, h_b)
-    table (the Iceberg bucket-partition twin): identical clustering/metrics
-    to the plain-parquet run, and a resume in a session WITHOUT the catalog
-    entry re-registers the table from the manifest's stored DDL."""
-    d = tempfile.mkdtemp(prefix="belb_bucket_ckpt_")
-    try:
-        cfg = ERConfig(bucket_candidates=8)
-        res = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-            checkpoint_dir=d,
-            cfg=cfg,
-        )
-        base = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-        )
-        assert res.metrics["eval"]["all"]["f1"] == base.metrics["eval"]["all"]["f1"]
-        assert res.metrics["pairs_scored"] == base.metrics["pairs_scored"]
-        got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
-        want = sorted((r["uid"], r["cluster"]) for r in base.assignment.collect())
-        assert got == want
-
-        # the scan of the bucketed stage reports its bucket spec (this is
-        # the property plain parquet loses): scoring's payload distinct and
-        # join-back consume it with no exchange of the pair table
-        from belb_spark.checkpoint import CheckpointStore
-
-        store = CheckpointStore(spark, d)
-        tbl = store._table_name("03_candidates")
-        assert spark.catalog.tableExists(tbl)
-        plan = (
-            spark.table(tbl)
-            .filter(F.col("src") == "block")
-            .select("h_a", "h_b")
-            .distinct()
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Bucketed: true" in plan, plan
-        assert "Exchange" not in plan, plan  # distinct consumes the scan
-
-        # fresh-session resume: no catalog entry, only files + manifest
-        spark.sql(f"DROP TABLE {tbl}")
-        res2 = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            labeled_pairs=None,
-            checkpoint_dir=d,
-            cfg=cfg,
-        )
-        assert all(s["resumed"] for s in res2.stages), res2.stages
-        got2 = sorted((r["uid"], r["cluster"]) for r in res2.assignment.collect())
-        assert got2 == want
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
-
-
-def test_bucketed_reps_agree_and_dedup_without_exchange(spark, tiny_spark):
-    """bucket_reps=N writes 01_normalize CLUSTERED BY (h): identical
-    clustering to the plain run, and the scoring stage's payload-reps
-    derivation — dropDuplicates(["h"]) on that table — needs NO exchange
-    (the reps path is stage 04's dominant inter-executor transfer in
-    multi-executor deployments; measured r5 standalone)."""
-    d = tempfile.mkdtemp(prefix="belb_breps_ckpt_")
-    try:
-        res = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-            checkpoint_dir=d,
-            cfg=ERConfig(bucket_candidates=8, bucket_reps=8),
-        )
-        base = run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            tiny_spark["labeled_pairs"],
-        )
-        assert res.metrics["eval"]["all"]["f1"] == base.metrics["eval"]["all"]["f1"]
-        got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
-        want = sorted((r["uid"], r["cluster"]) for r in base.assignment.collect())
-        assert got == want
-
-        from belb_spark.checkpoint import CheckpointStore
-
-        store = CheckpointStore(spark, d)
-        tbl = store._table_name("01_normalize")
-        assert spark.catalog.tableExists(tbl)
-        plan = (
-            spark.table(tbl)
-            .dropDuplicates(["h"])
-            .select("h")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert "Bucketed: true" in plan, plan
-        assert "Exchange" not in plan, plan  # reps dedup consumes the scan
-    finally:
-        shutil.rmtree(d, ignore_errors=True)
