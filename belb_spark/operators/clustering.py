@@ -77,15 +77,6 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return via_nbrs.union(self_edge)
 
 
-def _fingerprint(edges: DataFrame) -> tuple[int, int]:
-    # order-independent, overflow-free (ANSI-safe) checksum of the edge set
-    row = edges.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.expr("bit_xor(xxhash64(u, v))"), F.lit(0)).alias("h"),
-    ).collect()[0]
-    return int(row["n"]), int(row["h"])
-
-
 def _is_star_forest(edges: DataFrame) -> bool:
     """True iff the canonical (u > v) edge set is a star forest rooted at
     per-component minima — EXACTLY the large-star/small-star fixpoint:

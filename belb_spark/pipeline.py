@@ -27,11 +27,14 @@ from belb_spark.operators.pairs import (
     PairsConfig,
     candidate_pairs,
     exact_duplicate_edges,
-    pair_stats,
 )
 from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score_pairs
 
 
+# One physical path per stage: every stage checkpoints synchronously (build →
+# plain-Parquet write at the build's own partitioning → read back), and the
+# within-block self-join is the anchor-capped builder. Only logical knobs
+# live here; they are all part of the resume signature.
 @dataclass(frozen=True)
 class ERConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)
@@ -41,38 +44,14 @@ class ERConfig:
     # tune the edge threshold on labeled dev pairs (belb split discipline)
     # instead of using scoring.threshold verbatim
     tune_on_dev: bool = False
-    # physical strategy for the within-block self-join:
-    # 'capped' = anchor-capped join; 'salted' = replicated-anchor salting
-    # (same logical pair set — see operators/pairs.py)
-    pairs_strategy: str = "capped"
-    # explicit ingest partitioning (north rule): 0 = spark default
-    # parallelism. A single-file local parquet source otherwise yields ONE
-    # input split and serializes every expression-heavy stage.
-    input_partitions: int = 0
-    # stage-checkpoint mode:
-    # 'sync' (default): build → write → read back, serial. This IS the mode
-    #   the scaling evidence is collected in (BENCH/BASELINE.md): measured at
-    #   xxl on one 16 GB heap, async's persisted builds compete with the
-    #   scoring stage for cache and lose ~20% at BOTH parallelism levels
-    #   (VERDICT r3 "What's wrong" #1) — the default follows the evidence.
-    # 'async': stages 01-03 persist their build and write parquet on a
-    #   background thread, overlapped with downstream compute; resume
-    #   semantics unchanged (manifest only after a committed write). Wins
-    #   below ~10^5 rows where the builds fit comfortably in cache.
-    # 'off': EphemeralStore — no parquet at all (no resume); the wall delta
-    #   vs 'sync' measures the checkpoint I/O share for the scaling report.
-    # Written checkpoints are plain parquet at the build's own partitioning,
-    # not bucketed catalog tables: bucketing stages 01/03 by content key
-    # costs a repartition per write that exceeds the scoring shuffles it
-    # saves (measured at 1k-53k rows on 4 cores).
-    checkpoint_mode: str = "sync"
 
 
 # bump when a stage's checkpoint schema changes (columns added/removed/
 # retyped): a resume against parquet written by another version must rebuild
 # rather than fail mid-pipeline on a missing column. v2 = binary content key
-# h in 01_normalize + pre-keyed h_a/h_b in 03_candidates (r4).
-_STAGE_SCHEMA_VERSION = 2
+# h in 01_normalize + pre-keyed h_a/h_b in 03_candidates (r4). v3 = pair
+# stats are committed in the 03_candidates manifest.
+_STAGE_SCHEMA_VERSION = 3
 
 
 @dataclass
@@ -107,67 +86,34 @@ def run_pipeline(
         import tempfile
 
         checkpoint_dir = tempfile.mkdtemp(prefix="belb_spark_ckpt_")
-    if cfg.checkpoint_mode == "off":
-        from belb_spark.checkpoint import EphemeralStore
-
-        store = EphemeralStore(spark)
-    else:
-        store = CheckpointStore(spark, checkpoint_dir)
+    store = CheckpointStore(spark, checkpoint_dir)
 
     # sha-invariant / QAQC count jobs run on a side thread, overlapped with
     # the next stage's compute instead of serializing the critical path
     from concurrent.futures import ThreadPoolExecutor
 
     checks = ThreadPoolExecutor(max_workers=2)
-    # 'nothing outlives the call' must hold on the FAILURE path too: a
-    # mid-pipeline exception (sha assert, stage build error) would otherwise
-    # abandon in-flight async parquet writes and leak the persisted stage
-    # builds + the checks pool into the rest of the Spark session (ADVICE
-    # r3). finish()/shutdown() are idempotent, so the success path calling
-    # them explicitly first is fine.
     try:
-        result = _run_pipeline_body(
+        return _run_pipeline_body(
             spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics,
             store, checks, synonym_dict,
         )
     except BaseException:
-        # abort path: cancel queued sha-count jobs (not just stop accepting
-        # new ones) and never let a failed async write raised by finish()
-        # mask the root-cause stage exception (ADVICE r4)
+        # abort path: cancel queued sha-count jobs, not just stop accepting
+        # new ones, so none outlives the failed call
         checks.shutdown(wait=False, cancel_futures=True)
-        try:
-            store.finish()
-        except Exception as cleanup_err:  # noqa: BLE001 - secondary error
-            import warnings
-
-            warnings.warn(
-                f"checkpoint cleanup after pipeline abort failed: {cleanup_err!r}",
-                RuntimeWarning,
-                stacklevel=2,
-            )
         raise
-    checks.shutdown(wait=False)
-    store.finish()
-    return result
 
 
 def _run_pipeline_body(
     spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics, store,
     checks, synonym_dict,
 ) -> ERResult:
-    def run_stage(name, build, partition_by=None):
-        if cfg.checkpoint_mode == "async":
-            return store.run_async(name, sig, build, partition_by=partition_by)
-        return store.run(name, sig, build, partition_by=partition_by)
-
-    # explicit partitioning at ingest, before any expression-heavy stage.
-    # 3 waves per core, matching shuffle partitions: a straggler split costs
-    # 1/3 wave, and — decisive in async mode — every downstream stage reads
-    # the PERSISTED build at this same partitioning (no parquet read-back to
-    # re-split it), so cores×1 partitions would cap map-side parallelism of
-    # stages 02-04 at one task per core
-    n_part = cfg.input_partitions or 3 * spark.sparkContext.defaultParallelism
-    repos_in = repos.repartition(n_part)
+    # explicit partitioning at ingest, before any expression-heavy stage: a
+    # single-file local parquet source otherwise yields ONE input split and
+    # serializes stage 01. 3 waves per core, matching shuffle partitions: a
+    # straggler split costs 1/3 wave.
+    repos_in = repos.repartition(3 * spark.sparkContext.defaultParallelism)
     # content lives ONLY here — uid-addressable for the sha checks. The 01
     # checkpoint stores (uid, content_sha, norm_tokens): content was ~half
     # its bytes and nothing downstream needs it (VERDICT r2 #1).
@@ -184,8 +130,9 @@ def _run_pipeline_body(
     # pair table (r4: pairs ship pre-keyed so the scoring stage loses both
     # uid→h translation shuffles), and 16 bytes beat 32-char strings on
     # every one of those shuffles.
-    norm_res = run_stage(
+    norm_res = store.run(
         "01_normalize",
+        sig,
         lambda: normalize(repos_in, synonym_dict).select(
             "uid",
             "content_sha",
@@ -213,7 +160,7 @@ def _run_pipeline_body(
     # in the fused window tower — the compact parquet round-trip feeds the
     # self-join branches cheaper than re-flowing the live minhash, 52.5s vs
     # 45.8s for 02+03 at local[16]; keep the two-stage shape.)
-    blocks_res = run_stage("02_blocks", lambda: block_keys(norm, cfg.blocking))
+    blocks_res = store.run("02_blocks", sig, lambda: block_keys(norm, cfg.blocking))
     blocks = blocks_res.df
     metrics["block_rows"] = blocks_res.rows
 
@@ -221,22 +168,16 @@ def _run_pipeline_body(
     # One checkpoint for both pair families: block candidates (to be scored)
     # and ready exact-duplicate star edges (score 1.0 by construction).
     # The no-silent-caps accounting (emitted vs theoretical, max block,
-    # block rows) rides the candidates action as a Spark Observation on the
-    # capped path — zero extra jobs, zero re-evaluation of the live block-key
-    # derivation. The salted path (evidence/experiments) keeps a side-thread
-    # aggregate overlapped with the build.
+    # block rows) rides the candidates action as a Spark Observation — zero
+    # extra jobs, zero re-evaluation of the live block-key derivation.
     from pyspark.sql import Observation
 
-    obs = Observation("pair_stats") if cfg.pairs_strategy != "salted" else None
+    obs = Observation("pair_stats")
 
     def build_candidates() -> DataFrame:
-        if cfg.pairs_strategy == "salted":
-            from belb_spark.operators.pairs import candidate_pairs_salted
-
-            blk = candidate_pairs_salted(blocks, cfg.pairs)
-        else:
-            blk = candidate_pairs(blocks, cfg.pairs, observe=obs)
-        blk = blk.withColumn("src", F.lit("block"))
+        blk = candidate_pairs(blocks, cfg.pairs, observe=obs).withColumn(
+            "src", F.lit("block")
+        )
         # exact rows are never scored — null content keys keep the union
         # schema aligned with the pre-keyed block pairs
         exact = (
@@ -252,37 +193,18 @@ def _run_pipeline_body(
         )
         return blk_only.unionByName(exact)
 
-    if obs is not None:
-        # partitioned by src so per-family row counts come from the manifest
-        # (parquet footers) when the write is synchronous
-        cand_res = run_stage("03_candidates", build_candidates, partition_by=["src"])
-        if cand_res.resumed:
-            # the observation never fired (no action ran); the stats were
-            # annotated into the manifest by the run that built the stage
-            stats = store.log[-1].get("metrics") or {}
-            if "theoretical" not in stats:  # pre-annotation checkpoint dir
-                stats = pair_stats(blocks, cfg.pairs).agg(
-                    F.sum("pairs_theoretical").alias("theoretical"),
-                    F.sum("pairs_emitted").alias("emitted"),
-                    F.max("block_size").alias("max_block"),
-                ).collect()[0]
-        else:
-            stats = obs.get  # ready: the stage action has completed
-            store.annotate("03_candidates", dict(stats))
-    else:
-        from concurrent.futures import ThreadPoolExecutor
-
-        stats_df = pair_stats(blocks, cfg.pairs).agg(
-            F.sum("pairs_theoretical").alias("theoretical"),
-            F.sum("pairs_emitted").alias("emitted"),
-            F.max("block_size").alias("max_block"),
-        )
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            stats_future = pool.submit(lambda: stats_df.collect()[0])
-            cand_res = run_stage(
-                "03_candidates", build_candidates, partition_by=["src"]
-            )
-        stats = stats_future.result()
+    # partitioned by src so per-family row counts come from the manifest
+    # (parquet footers). The observed stats are read once the write action
+    # has run and commit in the same manifest, so a resumed run reports
+    # them without recomputing.
+    cand_res = store.run(
+        "03_candidates",
+        sig,
+        build_candidates,
+        metrics=lambda: dict(obs.get),
+        partition_by=["src"],
+    )
+    stats = cand_res.metrics
     metrics["pairs_theoretical"] = int(stats["theoretical"] or 0)
     metrics["pairs_capped_estimate"] = int(stats["emitted"] or 0)
     metrics["max_block_size"] = int(stats["max_block"] or 0)
@@ -293,21 +215,13 @@ def _run_pipeline_body(
     block_pairs = cand_res.df.filter(F.col("src") == "block").select(
         "uid_a", "uid_b", "h_a", "h_b"
     )
-    if cand_res.partition_rows:
-        n_exact = cand_res.partition_rows.get("src=exact", 0)
-    else:  # async/ephemeral: one cheap count off the persisted build
-        n_exact = exact_edges.count()
+    n_exact = cand_res.partition_rows.get("src=exact", 0)
     metrics["exact_dup_edges"] = n_exact
     metrics["candidate_pairs"] = cand_res.rows - n_exact
 
-    # 4. scoring (block candidates only). Join any in-flight background
-    # stage writes FIRST: the scoring-stage wall defines the reported
-    # pairs-scored/sec metric, and a parquet write overlapping it would
-    # silently eat cores out of the measured stage. 01-03 writes still
-    # overlap each other's downstream compute; the wait is recorded.
-    metrics["ckpt_drain_sec"] = round(store.drain(), 3)
-    scores_res = run_stage(
-        "04_scores", lambda: score_pairs(block_pairs, norm, cfg.scoring)
+    # 4. scoring (block candidates only)
+    scores_res = store.run(
+        "04_scores", sig, lambda: score_pairs(block_pairs, norm, cfg.scoring)
     )
     metrics["pairs_scored"] = scores_res.rows
     metrics["scoring_wall_sec"] = scores_res.wall_sec
@@ -355,8 +269,6 @@ def _run_pipeline_body(
             cc.withColumnRenamed("uid", "anchor"), "anchor"
         ).select("uid", "cluster")
 
-    # 5 writes synchronously: its read-back df is the RETURNED assignment and
-    # must stay valid after the persisted upstream builds are released
     assign_res = store.run("05_clusters", sig, build_assignment)
     assignment = assign_res.df
     metrics["rows_clustered"] = assign_res.rows
@@ -373,14 +285,12 @@ def _run_pipeline_body(
         ev = pairwise_metrics(assignment, labeled_pairs)
         metrics["eval"] = metrics_dict(ev)
 
-    # resolve the overlapped QAQC jobs, then join in-flight stage writes and
-    # release every persisted build (nothing outlives the call)
+    # resolve the overlapped QAQC jobs (nothing outlives the call)
     violations = sha_stage1.result()
     assert violations == 0, f"sha256 invariant broken in normalize: {violations}"
     violations = sha_final.result()
     assert violations == 0, f"sha256 invariant broken end-to-end: {violations}"
     checks.shutdown()
-    store.finish()
 
     stage_log = store.metrics_table()
     (pathlib.Path(checkpoint_dir) / "metrics.json").write_text(

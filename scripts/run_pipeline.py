@@ -28,7 +28,6 @@ def main() -> int:
     ap.add_argument("--master", default=None, help="e.g. local[8]; default env SPARK_GRAFT_CPUS")
     ap.add_argument("--f1-floor", type=float, default=0.99)
     ap.add_argument("--tune", action="store_true", help="tune edge threshold on dev split")
-    ap.add_argument("--pairs-strategy", choices=["capped", "salted"], default="capped")
     args = ap.parse_args()
 
     from belb_spark import datagen
@@ -51,7 +50,7 @@ def main() -> int:
 
     from belb_spark.pipeline import ERConfig
 
-    er_cfg = ERConfig(tune_on_dev=args.tune, pairs_strategy=args.pairs_strategy)
+    er_cfg = ERConfig(tune_on_dev=args.tune)
     res = run_pipeline(
         spark, repos, syn, lp, checkpoint_dir=args.checkpoint_dir, cfg=er_cfg
     )

@@ -1,27 +1,18 @@
 #!/usr/bin/env python
-"""Scaling evidence: the same ER job at two parallelism levels (local[N] vs
-local[4N] — the sandbox stand-in for N vs 4N executors, per BASELINE.md) on
-the same input; reports throughput at both plus scaling efficiency.
+"""Scaling evidence: the same ER job at local[N] and local[4N] on one box.
 
-Each level runs in its own subprocess (fresh JVM) via spark-submit --py-files
-(north-rule launch mode). Shuffle partitions = 3 × cores at each level (three
-task waves per shuffle: a straggler partition idles 1/3 of a wave, not a
-whole one — at 4N a single straggler otherwise idles 15 cores) so the
-comparison is honest. Results land in BENCH/BASELINE.md.
+Runs K interleaved (local[N], local[4N]) pairs back to back. Each run is its
+own spark-submit (fresh JVM, ``--py-files dist/belb_spark.zip``) over the
+same seeded input, with shuffle partitions = 3 × cores and the same driver
+heap at both levels. Every pair is reported, with no best-of: per run the
+wall, pairs scored per second of scoring-stage wall, test F1, CPU steal %
+and loadavg before/after; per pair the wall speedup and the pairs-scored/s
+scaling efficiency (4N rate / (4 × N rate)). N defaults to 1, so 4N = 4
+cores fits a 4-core box.
 
-Two ways to drive it:
+    python scripts/scaling_bench.py --scale tiny --pairs 1
 
-  # all-in-one (fine for small scales)
-  python scripts/scaling_bench.py --scale bench --repeats 2 --decompose --salted
-
-  # incremental (xl/xxl on a shared box: one spark-submit per call, loadavg
-  # recorded per run, poisoned runs discarded by best-of at assemble time)
-  python scripts/scaling_bench.py --scale xxl --one 'local[4]'
-  python scripts/scaling_bench.py --scale xxl --one 'local[16]'
-  python scripts/scaling_bench.py --scale xxl --one 'local[4]'  --mode off
-  python scripts/scaling_bench.py --scale xxl --one 'local[16]' --mode off
-  python scripts/scaling_bench.py --scale xxl --one 'local[16]' --strategy salted
-  python scripts/scaling_bench.py --scale xxl --assemble
+Writes BENCH/evidence_<scale>.json.
 """
 
 from __future__ import annotations
@@ -29,1008 +20,147 @@ from __future__ import annotations
 import argparse
 import json
 import pathlib
+import statistics
 import subprocess
 import sys
 
 REPO = pathlib.Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
+# one heap at both levels, sized to leave room for the Python workers of a
+# local[4] run on a 15 GB box
+DRIVER_MEMORY = "4g"
+
 RUNNER = r"""
-import json, sys, time, tempfile, shutil, pathlib
-master, data_dir, scale = sys.argv[1], sys.argv[2], sys.argv[3]
-mode = sys.argv[4] if len(sys.argv) > 4 else "sync"
-strategy = sys.argv[5] if len(sys.argv) > 5 else "capped"
-n_part = int(sys.argv[6]) if len(sys.argv) > 6 and sys.argv[6] != "0" else None
-ckpt_base = sys.argv[7] if len(sys.argv) > 7 and sys.argv[7] else None
-bcast = sys.argv[8] if len(sys.argv) > 8 and sys.argv[8] else None
-extra = {"spark.sql.autoBroadcastJoinThreshold": bcast} if bcast else {}
-from belb_spark.session import get_spark, cores_from_master
-from belb_spark.pipeline import ERConfig, run_pipeline
-import os
-# standalone masters (spark://...) carry no core count in the URL — the
-# launcher passes the level's total cores explicitly
-cores = int(os.environ.get("BELB_SCALING_CORES") or 0) or cores_from_master(master)
-spark = get_spark("scaling", master=master, shuffle_partitions=3 * cores, extra_conf=extra)
+import json, pathlib, shutil, sys, tempfile, time
+from belb_spark.pipeline import run_pipeline
+from belb_spark.session import cores_from_master, get_spark
+master, data = sys.argv[1], pathlib.Path(sys.argv[2])
+cores = cores_from_master(master)
+spark = get_spark("scaling", master=master, shuffle_partitions=3 * cores)
 spark.sparkContext.setLogLevel("ERROR")
-d = pathlib.Path(data_dir)
-repos = spark.read.parquet(str(d / "repos.parquet"))
-syn = spark.read.parquet(str(d / "synonym_dict.parquet"))
-lp = spark.read.parquet(str(d / "labeled_pairs.parquet"))
-ckpt = tempfile.mkdtemp(prefix="belb_scaling_ckpt_", dir=ckpt_base)
-cfg = ERConfig(checkpoint_mode=mode, pairs_strategy=strategy, input_partitions=n_part)
+repos, syn, lp = (
+    spark.read.parquet(str(data / f"{t}.parquet"))
+    for t in ("repos", "synonym_dict", "labeled_pairs")
+)
+ckpt = tempfile.mkdtemp(prefix="belb_scaling_ckpt_")
 t0 = time.time()
-res = run_pipeline(spark, repos, syn, lp, checkpoint_dir=ckpt, cfg=cfg)
+res = run_pipeline(spark, repos, syn, lp, checkpoint_dir=ckpt)
 wall = time.time() - t0
 shutil.rmtree(ckpt, ignore_errors=True)
 m = res.metrics
-pairs = m["pairs_scored"] + m["exact_dup_edges"]
 print("RESULT " + json.dumps({
-    "master": master, "cores": cores, "mode": mode, "strategy": strategy,
-    "ckpt_base": ckpt_base or "/tmp",
+    "master": master, "cores": cores,
     "wall_sec": round(wall, 2),
-    "rows": m["rows_in"], "pairs": pairs,
-    "pairs_per_sec": round(pairs / wall, 1),
-    "rows_per_sec": round(m["rows_in"] / wall, 1),
-    "test_f1": m["eval"]["test"]["f1"],
-    "score_wall_sec": round(m["scoring_wall_sec"], 2),
+    "rows": m["rows_in"],
     "pairs_scored": m["pairs_scored"],
+    "score_wall_sec": round(m["scoring_wall_sec"], 2),
     "pairs_scored_per_sec": round(m["pairs_scored"] / m["scoring_wall_sec"], 1),
-    "stage_walls": {s["stage"]: round(s.get("wall_sec", 0), 1) for s in res.stages},
+    "test_f1": m["eval"]["test"]["f1"],
+    "stage_walls": {s["stage"]: round(s["wall_sec"], 2) for s in res.stages},
 }))
 """
+RUNNER_PATH = REPO / "scripts" / "_scaling_runner.py"
 
 
-def _loadavg() -> str:
-    return open("/proc/loadavg").read().split()[0]
+def _loadavg() -> float:
+    with open("/proc/loadavg") as f:
+        return float(f.read().split()[0])
 
 
 def _cpu_jiffies() -> tuple[int, int]:
     """(steal, total) jiffies from /proc/stat. Guest loadavg cannot see a
-    hypervisor neighbor — CPU steal is the only in-guest signal that the
-    physical cores were taken mid-run (observed r5: a 4N run read 2x slow
-    at loadavg 10.9 with steal ~5%), so the evidence record carries it."""
-    p = open("/proc/stat").readline().split()
-    vals = list(map(int, p[1:9]))  # user nice sys idle iowait irq softirq steal
+    hypervisor neighbour; CPU steal is the in-guest signal that the physical
+    cores were taken mid-run."""
+    with open("/proc/stat") as f:
+        vals = list(map(int, f.readline().split()[1:9]))
     return vals[7], sum(vals)
 
 
-def _slice_jiffies(cpus: range) -> tuple[int, int]:
-    """(steal, total) jiffies summed over the given CPUs only. Box-wide
-    steal dilutes per-slice impact by n_host/n_slice (a 6-CPU-pinned N run
-    reading 0.78% box steal can be eating ~4% on ITS cpus while the other
-    26 idle clean) — the clean-pair filter must see the slice the run
-    actually lives on."""
-    steal = total = 0
-    want = {f"cpu{i}" for i in cpus}
-    for line in open("/proc/stat"):
-        p = line.split()
-        if p and p[0] in want:
-            vals = list(map(int, p[1:9]))
-            steal += vals[7]
-            total += sum(vals)
-    return steal, total
-
-
-def _wait_port(port: int, timeout: float = 45.0) -> bool:
-    import socket
-    import time as _time
-
-    t0 = _time.time()
-    while _time.time() - t0 < timeout:
-        with socket.socket() as s:
-            s.settimeout(1)
-            try:
-                s.connect(("127.0.0.1", port))
-                return True
-            except OSError:
-                _time.sleep(0.5)
-    return False
-
-
-class StandaloneCluster:
-    """Localhost Spark standalone cluster: one Worker JVM per 4-core
-    executor, each taskset-pinned to its own fixed-width CPU slice.
-
-    This is the closest sandbox analog of the north rule's "N executors
-    -> 4N executors": scaling adds MORE IDENTICAL executors (separate
-    heaps, real executor-to-executor shuffle over localhost TCP,
-    per-executor CPU isolation — a worker's executor and its forked
-    python daemons inherit the worker's affinity), instead of widening
-    one shared-heap local[N] JVM whose GC/shuffle structures are shared
-    across all cores. The driver JVM is pinned to its own constant slice
-    at every cluster size, like a cluster's separate driver node.
-    """
-
-    MASTER_PORT = 7077
-
-    def __init__(
-        self,
-        n_workers: int,
-        cores_per: int = 4,
-        worker_mem: str = "9g",
-        cpus_per_slice: int = 6,
-        first_cpu: int = 0,
-    ):
-        self.n_workers = n_workers
-        self.cores_per = cores_per
-        self.worker_mem = worker_mem
-        self.cpus_per_slice = cpus_per_slice
-        self.first_cpu = first_cpu
-        self.procs: list[subprocess.Popen] = []
-        self.master_url = f"spark://127.0.0.1:{self.MASTER_PORT}"
-
-    def __enter__(self):
-        import os
-
-        # topology sanity (ADVICE r5): the worker slices must fit the box
-        # AND must not overlap the driver slice, which run_level pins to
-        # the FIXED range 24-29 (not "above the workers") — otherwise
-        # taskset either fails outright or silently overlaps the slices the
-        # isolation evidence depends on
-        n_cpu = os.cpu_count() or 0
-        driver_lo, driver_hi = 24, 29
-        worker_hi = self.first_cpu + self.n_workers * self.cpus_per_slice - 1
-        if worker_hi >= n_cpu or driver_hi >= n_cpu:
-            raise RuntimeError(
-                f"standalone layout needs CPUs up to "
-                f"{max(worker_hi, driver_hi)} "
-                f"({self.n_workers} workers x {self.cpus_per_slice} from cpu "
-                f"{self.first_cpu}, driver {driver_lo}-{driver_hi}), "
-                f"host has {n_cpu}"
-            )
-        if self.first_cpu <= driver_hi and worker_hi >= driver_lo:
-            raise RuntimeError(
-                f"worker slices {self.first_cpu}-{worker_hi} overlap the "
-                f"pinned driver slice {driver_lo}-{driver_hi}"
-            )
-        env = dict(os.environ)
-        env.setdefault("SPARK_NO_DAEMONIZE", "1")
-        env.setdefault("PYSPARK_PYTHON", sys.executable)
-        spark_class = "/opt/spark/bin/spark-class"
-        self.procs.append(
-            subprocess.Popen(
-                [
-                    spark_class, "org.apache.spark.deploy.master.Master",
-                    "--host", "127.0.0.1", "--port", str(self.MASTER_PORT),
-                    "--webui-port", "0",
-                ],
-                stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, env=env,
-            )
-        )
-        if not _wait_port(self.MASTER_PORT):
-            self.__exit__(None, None, None)
-            raise RuntimeError("standalone master did not come up")
-        for i in range(self.n_workers):
-            lo = self.first_cpu + i * self.cpus_per_slice
-            hi = lo + self.cpus_per_slice - 1
-            wd = f"/tmp/belb_standalone_w{i}"
-            subprocess.run(["rm", "-rf", wd], check=False)
-            self.procs.append(
-                subprocess.Popen(
-                    [
-                        "taskset", "-c", f"{lo}-{hi}",
-                        spark_class, "org.apache.spark.deploy.worker.Worker",
-                        self.master_url,
-                        "--cores", str(self.cores_per),
-                        "--memory", self.worker_mem,
-                        "--webui-port", "0",
-                        "--work-dir", wd,
-                    ],
-                    stdout=subprocess.DEVNULL, stderr=subprocess.DEVNULL, env=env,
-                )
-            )
-        return self
-
-    def __exit__(self, *exc):
-        for p in reversed(self.procs):
-            p.terminate()
-        for p in reversed(self.procs):
-            try:
-                p.wait(timeout=10)
-            except subprocess.TimeoutExpired:
-                p.kill()
-        self.procs.clear()
-
-
-def run_level(
-    master: str,
-    data_dir: str,
-    scale: str,
-    repeats: int,
-    mode: str = "sync",
-    strategy: str = "capped",
-    n_part: int = 0,
-    ckpt_base: str = "",
-    bcast: str = "",
-    heap: str = "16g",
-    pin_cpus: int = 0,
-    standalone: bool = False,
-) -> dict:
-    import os
-
-    runner = REPO / "scripts" / "_scaling_runner.py"
-    runner.write_text(RUNNER)
-    best = None
-    cores_n = int(master.split("[")[1].rstrip("]")) if "[" in master else 0
-    for _ in range(repeats):
-        load_before = _loadavg()
-        steal0, total0 = _cpu_jiffies()
-        # the CPU slice this run's COMPUTE is pinned to (standalone: the
-        # worker slices; pinned local: 0..pin-1; unpinned: whole box)
-        if standalone:
-            comp_slice = range(0, (cores_n // 4) * 6)
-        elif pin_cpus:
-            comp_slice = range(0, pin_cpus)
-        else:
-            comp_slice = range(0, 32)
-        ssteal0, stotal0 = _slice_jiffies(comp_slice)
-        loads_during: list[float] = []
-        cluster = None
-        env = None
-        if standalone:
-            # N vs 4N EXECUTORS: 1 vs 4 identical 4-core/fixed-heap worker
-            # JVMs, each pinned to its own 6-CPU slice; constant 6-CPU
-            # driver slice (a cluster's separate driver node). `heap` is
-            # the PER-EXECUTOR memory here (constant across levels).
-            # worker registered memory must cover the requested executor
-            # heap (ADVICE r5: a heap > the fixed 9g worker memory meant NO
-            # executor could ever schedule and the submit polled forever) —
-            # derive it as heap + 1g overhead, floor 9g. Parse the unit
-            # honestly: '9216m' is 9 GB, not 9216 GB.
-            import math
-            import re as _re
-
-            m = _re.fullmatch(r"(\d+)([gGmM]?)", heap.strip())
-            if not m:
-                raise ValueError(
-                    f"cannot derive standalone worker memory from heap "
-                    f"{heap!r}; use '<int>g' or '<int>m'"
-                )
-            heap_gb = int(m.group(1))
-            if m.group(2).lower() == "m":
-                heap_gb = math.ceil(heap_gb / 1024)
-            cluster = StandaloneCluster(
-                n_workers=cores_n // 4,
-                worker_mem=f"{max(9, heap_gb + 1)}g",
-            )
-            cluster.__enter__()
-            env = dict(os.environ, BELB_SCALING_CORES=str(cores_n))
-            cmd = [
-                "taskset", "-c", "24-29",
-                "/opt/spark/bin/spark-submit",
-                "--master", cluster.master_url,
-                "--driver-memory", "4g",
-                "--conf", "spark.executor.cores=4",
-                "--conf", f"spark.executor.memory={heap}",
-                "--conf", f"spark.cores.max={cores_n}",
-                "--conf", "spark.ui.enabled=false",
-                "--py-files", str(REPO / "dist" / "belb_spark.zip"),
-                str(runner), cluster.master_url, data_dir, scale, mode,
-                strategy, str(n_part), ckpt_base, bcast,
-            ]
-        else:
-            cmd = [
-                "/opt/spark/bin/spark-submit",
-                "--master", master,
-                # the builder's spark.driver.memory is ignored once the JVM is
-                # up — must be a submit-time flag
-                "--driver-memory", heap,
-                "--py-files", str(REPO / "dist" / "belb_spark.zip"),
-                str(runner), master, data_dir, scale, mode, strategy, str(n_part), ckpt_base, bcast,
-            ]
-        if pin_cpus and not standalone:
-            # Confine the whole process tree (driver JVM + forked python
-            # workers, which inherit affinity) to exactly pin_cpus CPUs.
-            # Unpinned, a local[4] run leaks GC / python-worker / daemon
-            # threads onto all 32 host cores — headroom a real 4-core
-            # executor never has — inflating N throughput and deflating
-            # the N→4N ratio; a real cluster gives each level exactly its
-            # core budget.
-            cmd = ["taskset", "-c", f"0-{pin_cpus - 1}"] + cmd
-        # sample loadavg every 10 s during the run: a co-tenant burst that
-        # starts and ends MID-run is invisible to the before/after samples
-        # but poisons the walls (the r3 judge's best-of critique cuts both
-        # ways — the record must show which pairs were clean)
-        import tempfile as _tf
-        import time as _time
-
-        try:
-            with _tf.TemporaryFile("w+") as so, _tf.TemporaryFile("w+") as se:
-                proc = subprocess.Popen(cmd, stdout=so, stderr=se, cwd="/tmp", env=env)
-                while proc.poll() is None:
-                    _time.sleep(10)
-                    loads_during.append(float(_loadavg()))
-                so.seek(0)
-                se.seek(0)
-
-                class _Out:
-                    stdout = so.read()
-                    stderr = se.read()
-        finally:
-            if cluster is not None:
-                cluster.__exit__(None, None, None)
-
-        out = _Out()
-        line = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")]
-        if not line:
-            print(out.stdout[-8000:], out.stderr[-8000:], file=sys.stderr)
-            raise RuntimeError(f"no RESULT from {master}")
-        r = json.loads(line[-1][len("RESULT "):])
-        r["heap"] = heap
-        if standalone:
-            r["standalone_workers"] = cores_n // 4
-            r["level"] = master
-        if pin_cpus:
-            r["pinned_cpus"] = pin_cpus
-        r["load_before"] = load_before
-        r["load_after"] = _loadavg()
-        r["load_max_during"] = max(loads_during) if loads_during else None
-        steal1, total1 = _cpu_jiffies()
-        r["steal_pct"] = round(
-            100 * (steal1 - steal0) / max(1, total1 - total0), 2
-        )
-        ssteal1, stotal1 = _slice_jiffies(comp_slice)
-        r["steal_slice_pct"] = round(
-            100 * (ssteal1 - ssteal0) / max(1, stotal1 - stotal0), 2
-        )
-        if best is None or r["wall_sec"] < best["wall_sec"]:
-            best = r
-    return best
-
-
-def prepare(scale: str):
-    """Build the py-files zip and the shared input once; return (cfg, dir)."""
+def prepare(scale: str) -> str:
+    """Write the runner, build the py-files zip and the shared input once;
+    return the input dir."""
+    RUNNER_PATH.write_text(RUNNER)
     (REPO / "dist").mkdir(exist_ok=True)
+    zip_path = REPO / "dist" / "belb_spark.zip"
+    zip_path.unlink(missing_ok=True)
     subprocess.run(
-        ["bash", "-c", "cd %s && rm -f dist/belb_spark.zip && zip -qr dist/belb_spark.zip belb_spark -x '*__pycache__*'" % REPO],
+        ["zip", "-qr", str(zip_path), "belb_spark", "-x", "*__pycache__*"],
+        cwd=REPO,
         check=True,
     )
     from belb_spark import datagen
 
-    cfg = datagen.SCALES[scale]
     data_dir = datagen.cache_dir(scale)
-    if not pathlib.Path(f"{data_dir}/repos.parquet").exists():
-        datagen.generate_and_save(data_dir, cfg)
-    return cfg, data_dir
+    if not pathlib.Path(data_dir, "repos.parquet").exists():
+        datagen.generate_and_save(data_dir, datagen.SCALES[scale])
+    return data_dir
 
 
-def runs_file(scale: str) -> pathlib.Path:
-    return REPO / "BENCH" / f"scaling_runs_{scale}.jsonl"
-
-
-# Orchestration floor: the same 5-stage pipeline on the `tiny` input
-# (1013 rows — compute ~0) measured 2026-08-17 on this box, sync mode.
-# Reproduce: scripts/scaling_bench.py --scale tiny --one local[4|16] --mode sync
-FLOOR_N_SEC = 15.5     # local[4]
-FLOOR_4N_SEC = 19.1    # local[16] — the floor GROWS with cores (task
-                       # scheduling, python-worker spin-up, AQE re-planning)
-
-
-def write_report(scale, seed, n, n4, off_n, off_n4, s4, loads, repeats_desc):
-    eff = (n4["pairs_per_sec"]) / (4 * n["pairs_per_sec"])
-    eff_score = (n4["pairs_scored_per_sec"]) / (4 * n["pairs_scored_per_sec"])
-    speedup = n["wall_sec"] / n4["wall_sec"]
-    eff_xfloor = (n["wall_sec"] - FLOOR_N_SEC) / (
-        4 * (n4["wall_sec"] - FLOOR_4N_SEC)
+def run_level(master: str, data_dir: str) -> dict:
+    """One spark-submit of the pipeline at ``master``; its RESULT line plus
+    the load and steal stamps of the window it ran in."""
+    load_before = _loadavg()
+    steal0, total0 = _cpu_jiffies()
+    # the builder's spark.driver.memory is ignored once the JVM is up; it
+    # must be a submit-time flag
+    out = subprocess.run(
+        [
+            "spark-submit", "--master", master,
+            "--driver-memory", DRIVER_MEMORY,
+            "--py-files", str(REPO / "dist" / "belb_spark.zip"),
+            str(RUNNER_PATH), master, data_dir,
+        ],
+        capture_output=True,
+        text=True,
     )
-
-    report = {
-        "scale": scale,
-        "N": n,
-        "4N": n4,
-        "speedup_wall": round(speedup, 3),
-        "scaling_efficiency_e2e": round(eff, 3),
-        "scaling_efficiency_pairs_scored": round(eff_score, 3),
-        "orchestration_floor_sec": {"N": FLOOR_N_SEC, "4N": FLOOR_4N_SEC},
-        "scaling_efficiency_e2e_excl_floor": round(eff_xfloor, 3),
-        "host_loadavg_during_runs": loads,
-    }
-
-    decomp_md = ""
-    if off_n and off_n4:
-        eff_off = (off_n4["pairs_per_sec"]) / (4 * off_n["pairs_per_sec"])
-        ckpt_n = n["wall_sec"] - off_n["wall_sec"]
-        ckpt_n4 = n4["wall_sec"] - off_n4["wall_sec"]
-        report["off_N"] = off_n
-        report["off_4N"] = off_n4
-        report["scaling_efficiency_e2e_no_checkpoint"] = round(eff_off, 3)
-        decomp_md = f"""
-## Decomposition 1: checkpoint I/O is NOT the gap
-
-Same job with `checkpoint_mode='off'` (EphemeralStore: stages persist into
-executor cache, NO parquet writes) and with the checkpoint store on tmpfs
-(`--ckpt-base /dev/shm`) both land within run-to-run noise of the default:
-
-| level | wall off (s) | wall default (s) | delta (s) |
-|---|---|---|---|
-| N  | {off_n["wall_sec"]} | {n["wall_sec"]} | {ckpt_n:.1f} |
-| 4N | {off_n4["wall_sec"]} | {n4["wall_sec"]} | {ckpt_n4:.1f} |
-
-The OS page cache absorbs the per-stage parquet writes on this box, so
-"one shared disk" does not explain the gap (r2's hypothesis, now measured
-and rejected). e2e efficiency without any checkpointing: {eff_off:.3f}.
-F1 at both levels: {off_n["test_f1"]}/{off_n4["test_f1"]}.
-"""
-
-    salted_md = ""
-    if s4:
-        report["salted_4N"] = s4
-        salted_md = f"""
-## Capped vs salted pair strategy (4N, same input)
-
-| strategy | wall (s) | pairs scored | test F1 |
-|---|---|---|---|
-| capped | {n4["wall_sec"]} | {n4["pairs_scored"]} | {n4["test_f1"]} |
-| salted | {s4["wall_sec"]} | {s4["pairs_scored"]} | {s4["test_f1"]} |
-
-Identical logical pair set — same pairs_scored and same F1 (the table IS
-the equivalence evidence); salted bounds every reducer group to
-~rows_per_salt members under hot keys (pairs.salt_distribution). Walls come
-from different co-tenant windows; compare pairs_scored/F1, not seconds.
-"""
-
-    print(json.dumps(report, indent=2))
-
-    md = f"""# BENCH/BASELINE — scaling evidence
-
-Same ER job (normalize → block → pairs → score → cluster → eval), same input
-({n["rows"]} rows, synthetic `{scale}` scale, seed {seed}), launched via
-`spark-submit --py-files dist/belb_spark.zip` at two parallelism levels —
-the sandbox stand-in for N vs 4N executors (BASELINE.md). Shuffle
-partitions = 3 × cores at each level. {repeats_desc}
-
-| level | cores | heap | wall (s) | pairs scored | pairs/sec | rows/sec | test F1 |
-|---|---|---|---|---|---|---|---|
-| N  (local[{n["cores"]}])  | {n["cores"]}  | {n.get("heap", "16g")} | {n["wall_sec"]} | {n["pairs"]} | {n["pairs_per_sec"]} | {n["rows_per_sec"]} | {n["test_f1"]} |
-| 4N (local[{n4["cores"]}]) | {n4["cores"]} | {n4.get("heap", "16g")} | {n4["wall_sec"]} | {n4["pairs"]} | {n4["pairs_per_sec"]} | {n4["rows_per_sec"]} | {n4["test_f1"]} |
-
-- **Wall-clock speedup N → 4N: {speedup:.2f}×**
-- **Scaling efficiency, pairs-scored/sec (BASELINE.md metric: scored pairs /
-  scoring-stage wall): {eff_score:.3f}** — N: {n["pairs_scored_per_sec"]}/s,
-  4N: {n4["pairs_scored_per_sec"]}/s
-- Scaling efficiency, end-to-end: {eff:.3f}
-  (target ≥ 0.8 per BASELINE.json)
-- **Orchestration floor, measured**: the same pipeline on the `tiny` input
-  (compute ≈ 0) takes {FLOOR_N_SEC}s at N and {FLOOR_4N_SEC}s at 4N — pure
-  driver/job machinery (task scheduling, python-worker spin-up, AQE
-  re-planning, commit protocol), and it GROWS with local cores. e2e
-  efficiency excluding the measured floor: **{eff_xfloor:.3f}**. At the
-  contracted 10^12-file scale each stage runs for hours and this floor is
-  <0.1% of wall; at xxl on one box it is ~{100*FLOOR_4N_SEC/n4["wall_sec"]:.0f}%
-  of the 4N wall and bounds the measurable ratio.
-- Single-box caveats: CPU scaling only (shuffle/network needs a real
-  cluster); cores are shared with bursty co-tenants whose activity is NOT
-  visible in start-of-run loadavg (mid-run bursts poison individual runs —
-  hence best-of over repeats, every run + loadavg recorded in
-  scaling_runs_{scale}.jsonl).
-
-Per-stage wall seconds:
-
-| stage | N ({n["cores"]} cores) | 4N ({n4["cores"]} cores) |
-|---|---|---|
-""" + "\n".join(
-        f"| {k} | {n['stage_walls'].get(k)} | {n4['stage_walls'].get(k)} |"
-        for k in n["stage_walls"]
-    ) + decomp_md + salted_md + """
-
-## History (r1 → r4)
-
-Round 1: 0.831 pairs-scored efficiency at 18.5k pairs-scored/sec (4N) with
-pure-Python kernels — an easy ratio over slow, embarrassingly-parallel work.
-Round 2: vectorized kernels + slim hash-keyed scoring shuffle raised absolute
-throughput ~13× ; e2e efficiency 0.653, attributed to checkpoint round-trips.
-Round 3 measured that attribution and REJECTED it (off-mode and tmpfs land
-within noise of sync); it pinned single-evaluation plans (ReusedExchange),
-moved pair stats onto a Spark Observation, and measured the orchestration
-floor. Round 4 decomposed the scoring stage itself (BENCH/lab_runs.jsonl +
-/proc CPU sampling + event-log task metrics): the stage ran as two serial
-phases — JVM joins, then Python scoring with the JVM idle — plus a constant
-head. What round 4 changed: the content key is 16-byte binary computed at
-normalize and CARRIED through the block explode and the candidate self-join,
-so scoring starts from pre-keyed pairs (both uid→key translation shuffles
-gone); the blocks stage dropped a semantically-no-op global distinct (a full
-17M-row shuffle — keys are family-prefixed and per-row unique); sync became
-the ERConfig default (the evidence mode); and the evidence
-protocol itself moved to interleaved (N, 4N) pairs with per-pair reporting
-(no best-of) and per-core-constant heap — the honest stand-in for a cluster
-where 4N executors bring 4× the aggregate memory of N at a fixed executor
-spec. A measured-but-rejected r4 candidate: removing the scorer's
-repartition barrier overlaps JVM and Python phases and cuts the local[4]
-wall ~30% while leaving local[16] flat — higher absolute low-core
-throughput, LOWER N→4N ratio — kept as ScoringConfig(udf_waves=0) for
-throughput-first deployments.
-
-## Iceberg probe (SURVEY §7.2 step 1)
-
-Probed this sandbox for an Iceberg backend (2026-08-16): no
-`iceberg-spark-runtime` jar under /opt/spark/jars, no `pyiceberg` module,
-no network to fetch either. CheckpointStore therefore runs its documented
-Parquet+manifest fallback (belb_spark/checkpoint.py:1-19); on a real
-cluster the same interface binds to an Iceberg catalog (snapshot id in
-place of the manifest).
-"""
-
-    # clean-window decomposition: per-stage minima over ALL recorded runs
-    # per level (each stage's cleanest observed wall) vs the as-run medians,
-    # pricing the co-tenant share that the pair table shows via load stamps
-    def _stage_min(rows_, cores):
-        sel = [r for r in rows_ if r["cores"] == cores]
-        out = {}
-        for r in sel:
-            for k, v in r["stage_walls"].items():
-                out[k] = min(out.get(k, 1e9), v)
-        return out, len(sel)
-
-    runs_path = runs_file(scale)
-    decomp2_md = ""
-    if runs_path.exists():
-        all_rows = [
-            json.loads(l) for l in runs_path.read_text().splitlines() if l.strip()
-        ]
-        all_rows = [
-            r for r in all_rows
-            if r.get("mode") == "sync" and r.get("strategy") == "capped"
-        ]
-        mn, kn = _stage_min(all_rows, n["cores"])
-        m4, k4 = _stage_min(all_rows, n4["cores"])
-        if mn and m4:
-            sc_n, sc_4 = mn.get("04_scores"), m4.get("04_scores")
-            eff_clean = (sc_n / (4 * sc_4)) if sc_n and sc_4 else None
-            rows_md = "\n".join(
-                f"| {k} | {mn.get(k)} | {m4.get(k)} | "
-                f"{round(mn.get(k, 0) / (4 * m4[k]), 2) if m4.get(k) else ''} |"
-                for k in sorted(set(mn) | set(m4))
-            )
-            # measured per-stage floors from the tiny-scale runs file
-            # (compute ~0 → stage wall = pure machinery), min per level
-            floors_md = ""
-            eff_netfloor = None
-            tiny_f = REPO / "BENCH" / "scaling_runs_tiny.jsonl"
-            if tiny_f.exists():
-                tiny_rows = [
-                    json.loads(l)
-                    for l in tiny_f.read_text().splitlines()
-                    if l.strip() and "stage_walls" in l
-                ]
-                tn, _ = _stage_min(tiny_rows, n["cores"])
-                t4, _ = _stage_min(tiny_rows, n4["cores"])
-                f_n, f_4 = tn.get("04_scores"), t4.get("04_scores")
-                if sc_n and sc_4 and f_n is not None and f_4 is not None:
-                    eff_netfloor = (sc_n - f_n) / (4 * (sc_4 - f_4))
-                    floors_md = f"""
-- measured scoring-stage FLOOR (same stage on the `tiny` input, compute ~0):
-  N {f_n}s, 4N {f_4}s — pure stage machinery (AQE planning, python-worker
-  spin-up, checkpoint manifest+footers)
-- **clean-window scoring efficiency net of the measured floor:
-  {eff_netfloor:.3f}** = (minN - floorN) / (4 x (min4N - floor4N))
-"""
-            decomp2_md = f"""
-## Decomposition 2: clean-window stage walls (co-tenant share priced)
-
-Co-tenant activity is steady-plus-bursts (a 16c run's OWN threads put
-loadavg at ~10-12, so mid-run stamps of 14-17 mark a co-tenant burst on top;
-an idle-box baseline of 3-5 cores is visible before every N run), and that
-load costs the local[16] run disproportionately — it needs 32 threads of
-headroom (16 JVM tasks + 16 python workers) on a 32-core box where local[4]
-needs 8 and is effectively immune. The
-cleanest observed wall per stage per level over all {kn}+{k4} recorded runs
-estimates the co-tenant-free stage cost:
-
-| stage | N min wall (s) | 4N min wall (s) | clean eff |
-|---|---|---|---|
-{rows_md}
-
-- **clean-window scoring-stage efficiency (contract metric): {f"{eff_clean:.3f}" if eff_clean else "n/a"}**
-  = min N scoring wall / (4 x min 4N scoring wall)
-- every run behind these minima is in scaling_runs_{scale}.jsonl with its
-  before/after/max-during loadavg — the minima are clean-window estimates
-  with the full distribution disclosed, not a silent best-of.
-{floors_md}"""
-
-    md += decomp2_md
-
-    ev_path = REPO / "BENCH" / f"evidence_{scale}.json"
-    if ev_path.exists():
-        ev = json.loads(ev_path.read_text())
-        rows_md = "\n".join(
-            f"| {t['pair']} | {t['N_score_wall']} | {t['x4N_score_wall']} | "
-            f"{t['eff_pairs_scored']} | {t['eff_e2e']} | "
-            f"{'/'.join(str(x) for x in t['f1'])} | {', '.join(t['loads'])} |"
-            for t in ev["pairs"]
-        )
-        md += f"""
-## Contract evidence: interleaved (N, 4N) pairs — no best-of
-
-Protocol (VERDICT r3 #1): {len(ev['pairs'])} back-to-back interleaved pairs,
-every pair reported, heap scaled at {ev['heap_per_core_gb']} GB/core (a fixed
-executor spec: 4N executors bring 4x the aggregate memory of N — the
-previous fixed-16g-at-both-levels comparison handed the N side 4x the
-per-core memory of a real cluster). Mode {ev['mode']}, strategy
-{ev['strategy']}; co-tenant bursts hit pairs, not levels.
-
-| pair | N score wall (s) | 4N score wall (s) | eff pairs-scored | eff e2e | F1 N/4N | loadavg |
-|---|---|---|---|---|---|---|
-{rows_md}
-
-- **median pairs-scored efficiency: {ev['median_eff_pairs_scored']}**
-- pairs at >= 0.8: {ev['n_pairs_ge_080']} of {len(ev['pairs'])}
-- median e2e efficiency: {ev['median_eff_e2e']}
-
-### Bottom line (read this, not one number)
-
-The as-run pair distribution and the clean-window decomposition above are
-the SAME system measured under different co-tenant conditions. The honest
-summary: on a quiet box the contracted pairs-scored ratio sits at the
-clean-window value above (Decomposition 2, floor-netted); pairs where a
-burst hits the N side read spuriously HIGH (the 0.85-class pairs), pairs
-where it hits the 32-thread 4N side read spuriously LOW (the 0.35-0.5
-pairs). Neither tail is the system. r2's recorded 0.803 was a single
-never-reproduced run of this same flavor. At the contracted 10^12-file
-scale the orchestration floor and the single-box thread-headroom asymmetry
-both vanish (each executor owns its cores); the co-located-join/broadcast/
-salting design — not this box's ratio — is the scaling argument that
-matters there.
-"""
-
-    # the headline report lives at BASELINE.md; non-headline scales write a
-    # scale-suffixed file so a tiny floor run cannot clobber the xxl report
-    out_md = (
-        REPO / "BENCH" / "BASELINE.md"
-        if scale == "xxl"
-        else REPO / "BENCH" / f"BASELINE_{scale}.md"
-    )
-    out_md.parent.mkdir(exist_ok=True)
-    out_md.write_text(md)
-    (REPO / "BENCH" / f"scaling_{scale}.json").write_text(json.dumps(report, indent=2))
-    print(f"wrote {out_md}")
+    steal1, total1 = _cpu_jiffies()
+    line = [l for l in out.stdout.splitlines() if l.startswith("RESULT ")]
+    if not line:
+        print(out.stdout[-8000:], out.stderr[-8000:], file=sys.stderr)
+        raise RuntimeError(f"no RESULT from {master} (exit {out.returncode})")
+    r = json.loads(line[-1][len("RESULT "):])
+    r["driver_memory"] = DRIVER_MEMORY
+    r["load_before"] = load_before
+    r["load_after"] = _loadavg()
+    r["steal_pct"] = round(100 * (steal1 - steal0) / max(1, total1 - total0), 2)
+    return r
 
 
 def main() -> int:
-    ap = argparse.ArgumentParser()
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--scale", default="bench", choices=["tiny", "small", "bench", "scaling", "xl", "xxl"])
-    ap.add_argument("--repeats", type=int, default=2)
-    ap.add_argument("--n-cores", type=int, default=4, help="N; the run compares local[N] vs local[4N]")
-    ap.add_argument(
-        "--one",
-        default=None,
-        metavar="MASTER",
-        help="incremental mode: run ONE spark-submit at this master (with "
-        "--mode/--strategy), append the result to BENCH/scaling_runs_"
-        "<scale>.jsonl, and exit. Assemble later with --assemble.",
-    )
-    # sync is both the ERConfig default and the evidence mode (VERDICT r3 #2)
-    ap.add_argument("--mode", default="sync", choices=["async", "sync", "off"])
-    ap.add_argument("--bcast", default="", help="override spark.sql.autoBroadcastJoinThreshold for the run")
-    ap.add_argument(
-        "--ckpt-base",
-        default="",
-        help="base dir for the per-run stage-checkpoint store; /dev/shm is "
-        "the single-box stand-in for per-node distributed storage (a real "
-        "cluster writes stage checkpoints to per-node disks / an Iceberg "
-        "catalog, not one shared spindle)",
-    )
-    ap.add_argument("--strategy", default="capped", choices=["capped", "salted"])
-    ap.add_argument(
-        "--assemble",
-        action="store_true",
-        help="build BENCH/BASELINE.md + scaling_<scale>.json from the "
-        "recorded incremental runs (best wall per level/mode/strategy)",
-    )
-    ap.add_argument(
-        "--evidence",
-        type=int,
-        default=0,
-        metavar="K",
-        help="run K interleaved (N, 4N) pairs back-to-back and write the "
-        "per-pair efficiency table (BENCH/evidence_<scale>.json) — the "
-        "contract-grade protocol: no best-of, every pair reported with "
-        "loadavg. Combine with --heap-per-core.",
-    )
-    ap.add_argument(
-        "--heap-per-core",
-        type=float,
-        default=0.0,
-        metavar="GB",
-        help="scale the driver heap with cores (GB per core): the honest "
-        "stand-in for a cluster where 4N executors bring 4x the aggregate "
-        "memory of N executors at a fixed executor spec. 0 = legacy fixed "
-        "16g at both levels.",
-    )
-    ap.add_argument(
-        "--pin-extra",
-        type=int,
-        default=-1,
-        metavar="E",
-        help="pin each level's process tree with taskset to (cores + E) "
-        "CPUs — the faithful fixed-spec-executor stand-in (unpinned, a "
-        "local[4] run's GC/python/daemon threads ride all 32 host cores). "
-        "E is the shared driver/OS allowance, identical at both levels so "
-        "the compute-core ratio stays exactly 4x. -1 = no pinning (legacy).",
-    )
-    ap.add_argument(
-        "--pin-scale",
-        type=float,
-        default=0.0,
-        metavar="S",
-        help="pin each level's process tree to round(cores * S) CPUs — the "
-        "PROPORTIONAL pin: the CPU allotment ratio between 4N and N stays "
-        "exactly 4x and thread oversubscription (tasks + python workers vs "
-        "CPUs) is identical at both levels. --pin-extra's additive allowance "
-        "breaks that ratio (4+2=6 vs 16+2=18 is 3x, capping the measurable "
-        "pairs-scored efficiency at 18/(6*4)=0.75 in the CPU-bound limit — "
-        "below the contract target on perfect hardware). S=1.5 gives each "
-        "level 1.33x thread oversubscription (2 threads/core demand on "
-        "1.5 CPUs/core). Overrides --pin-extra when set.",
-    )
-    ap.add_argument(
-        "--standalone",
-        action="store_true",
-        help="run each level on a localhost standalone cluster: one 4-core "
-        "worker JVM per 4 cores (N=1 worker, 4N=4 workers), each pinned to "
-        "its own 6-CPU slice, fixed per-executor heap (--heap-per-core x 4), "
-        "constant 6-CPU driver slice — the literal 'N vs 4N executors' "
-        "model: separate heaps, real inter-executor shuffle over localhost, "
-        "per-executor CPU isolation. Overrides --pin-extra/--pin-scale.",
-    )
-    ap.add_argument(
-        "--decompose",
-        action="store_true",
-        help="also run checkpoint_mode='off' at both levels: the wall delta "
-        "vs the default measures the per-stage checkpoint I/O share (serial "
-        "on one shared disk, per-node on a cluster)",
-    )
-    ap.add_argument(
-        "--salted",
-        action="store_true",
-        help="also run pairs_strategy='salted' at 4N for the capped-vs-salted "
-        "wall comparison",
-    )
+    ap.add_argument("--pairs", type=int, default=3, metavar="K", help="interleaved (N, 4N) pairs to run")
+    ap.add_argument("--n-cores", type=int, default=1, metavar="N", help="the run compares local[N] vs local[4N]")
     args = ap.parse_args()
 
-    if args.assemble:
-        lines = [
-            json.loads(l)
-            for l in runs_file(args.scale).read_text().splitlines()
-            if l.strip()
-        ]
-
-        def best(cores, mode="sync", strategy="capped"):
-            cand = [
-                r for r in lines
-                if r["cores"] == cores and r["mode"] == mode and r["strategy"] == strategy
-            ]
-            return min(cand, key=lambda r: r["wall_sec"]) if cand else None
-
-        n = best(args.n_cores)
-        n4 = best(4 * args.n_cores)
-        if n is None or n4 is None:
-            print("need at least one sync/capped run at N and 4N", file=sys.stderr)
-            return 1
-        from belb_spark import datagen
-
-        seed = datagen.SCALES[args.scale].seed
-        loads = [x for r in lines for x in (r["load_before"], r["load_after"])]
-        counts = {}
-        for r in lines:
-            k = f"{r['cores']}c/{r['mode']}/{r['strategy']}"
-            counts[k] = counts.get(k, 0) + 1
-        desc = "Best of recorded runs per level (" + ", ".join(
-            f"{k}: {v}" for k, v in sorted(counts.items())
-        ) + "); per-run loadavg in scaling_runs_%s.jsonl." % args.scale
-        write_report(
-            args.scale, seed, n, n4,
-            best(args.n_cores, mode="off"), best(4 * args.n_cores, mode="off"),
-            best(4 * args.n_cores, strategy="salted"),
-            loads, desc,
-        )
-        return 0
-
-    cfg, data_dir = prepare(args.scale)
-
-    if args.evidence:
-        # contract-grade protocol (VERDICT r3 #1): K interleaved (N, 4N)
-        # pairs, every pair reported (no best-of), loadavg per run, heap
-        # scaled per-core when --heap-per-core is set
-        rows = []
-        for k in range(args.evidence):
-            for cores in (args.n_cores, 4 * args.n_cores):
-                if args.standalone:
-                    # heap is PER-EXECUTOR (4 cores), constant at both levels
-                    heap = (
-                        f"{max(2, round(args.heap_per_core * 4))}g"
-                        if args.heap_per_core
-                        else "8g"
-                    )
-                    pin = 0
-                else:
-                    heap = (
-                        f"{max(2, round(args.heap_per_core * cores))}g"
-                        if args.heap_per_core
-                        else "16g"
-                    )
-                    if args.pin_scale:
-                        pin = round(cores * args.pin_scale)
-                    else:
-                        pin = cores + args.pin_extra if args.pin_extra >= 0 else 0
-                try:
-                    r = run_level(
-                        f"local[{cores}]", data_dir, args.scale, 1, args.mode,
-                        args.strategy, ckpt_base=args.ckpt_base, heap=heap,
-                        pin_cpus=pin, standalone=args.standalone,
-                    )
-                except RuntimeError:
-                    # transient co-tenant OOM/kill: one retry keeps the pair
-                    r = run_level(
-                        f"local[{cores}]", data_dir, args.scale, 1, args.mode,
-                        args.strategy, ckpt_base=args.ckpt_base, heap=heap,
-                        pin_cpus=pin, standalone=args.standalone,
-                    )
-                r["pair"] = k
-                f = runs_file(args.scale)
-                f.parent.mkdir(exist_ok=True)
-                with f.open("a") as fh:
-                    fh.write(json.dumps(r) + "\n")
-                rows.append(r)
-                print(json.dumps(r))
-        table = []
-        for k in range(args.evidence):
-            n = next(r for r in rows if r["pair"] == k and r["cores"] == args.n_cores)
-            n4 = next(r for r in rows if r["pair"] == k and r["cores"] == 4 * args.n_cores)
-            table.append({
-                "pair": k,
-                "eff_pairs_scored": round(
-                    n4["pairs_scored_per_sec"] / (4 * n["pairs_scored_per_sec"]), 3),
-                "eff_e2e": round(n4["pairs_per_sec"] / (4 * n["pairs_per_sec"]), 3),
-                "N_wall": n["wall_sec"], "x4N_wall": n4["wall_sec"],
-                "N_score_wall": n["score_wall_sec"],
-                "x4N_score_wall": n4["score_wall_sec"],
-                "f1": [n["test_f1"], n4["test_f1"]],
-                "loads": [n["load_before"], n["load_after"],
-                          n4["load_before"], n4["load_after"]],
-                "steal_pct": [n.get("steal_pct"), n4.get("steal_pct")],
-                "steal_slice_pct": [
-                    n.get("steal_slice_pct"), n4.get("steal_slice_pct")
-                ],
-            })
-        # merge with previously recorded evidence pairs of the same config
-        # (long sessions run several batches; the record is cumulative)
-        if args.standalone:
-            suffix = "_sa"
-        elif args.pin_scale:
-            suffix = f"_pinx{args.pin_scale:g}"
-        elif args.pin_extra >= 0:
-            suffix = f"_pin{args.pin_extra}"
-        else:
-            suffix = ""
-        out = REPO / "BENCH" / f"evidence_{args.scale}{suffix}.json"
-        if out.exists():
-            prior = json.loads(out.read_text())
-            if (
-                prior.get("mode") == args.mode
-                and prior.get("strategy") == args.strategy
-                and prior.get("heap_per_core_gb") == args.heap_per_core
-                and prior.get("pin_extra", -1) == args.pin_extra
-                and prior.get("pin_scale", 0.0) == args.pin_scale
-                and prior.get("standalone", False) == args.standalone
-            ):
-                base = len(prior["pairs"])
-                for t in table:
-                    t["pair"] += base
-                table = prior["pairs"] + table
-        def _median(xs):
-            # true median: average the two middle elements for even-length
-            # lists (the upper-middle pick biased contract-grade evidence
-            # upward — ADVICE r4)
-            xs = sorted(xs)
-            m = len(xs) // 2
-            if len(xs) % 2:
-                return xs[m]
-            return round((xs[m - 1] + xs[m]) / 2, 4)
-
-        effs = sorted(t["eff_pairs_scored"] for t in table)
-        # steal-clean slice: pairs where BOTH runs recorded hypervisor
-        # steal < 1% — an instrument-based (not outcome-based) filter, so
-        # it cannot cherry-pick good ratios, only steal-free windows; the
-        # full distribution stays published above it
-        def _clean_effs(key):
-            return [
-                t["eff_pairs_scored"] for t in table
-                if None not in (t.get(key) or [None])
-                and max(t[key]) < 1.0
-            ]
-
-        clean = _clean_effs("steal_pct")
-        # per-slice steal is the honest filter where runs are pinned: box
-        # steal under-reads a 6-CPU N slice by up to 32/6
-        clean_slice = _clean_effs("steal_slice_pct")
-        summary = {
-            "scale": args.scale, "mode": args.mode, "strategy": args.strategy,
-            "heap_per_core_gb": args.heap_per_core,
-            "pin_extra": args.pin_extra, "pin_scale": args.pin_scale,
-            "standalone": args.standalone,
-            "pairs": table,
-            "median_eff_pairs_scored": _median(effs),
-            "n_pairs_ge_080": sum(e >= 0.8 for e in effs),
-            "median_eff_e2e": _median([t["eff_e2e"] for t in table]),
-            "n_pairs_steal_clean": len(clean),
-            "median_eff_steal_clean": _median(clean) if clean else None,
-            "n_pairs_slice_clean": len(clean_slice),
-            "median_eff_slice_clean": (
-                _median(clean_slice) if clean_slice else None
+    data_dir = prepare(args.scale)
+    pairs = []
+    for k in range(args.pairs):
+        n = run_level(f"local[{args.n_cores}]", data_dir)
+        n4 = run_level(f"local[{4 * args.n_cores}]", data_dir)
+        pair = {
+            "pair": k,
+            "N": n,
+            "4N": n4,
+            "speedup_wall": round(n["wall_sec"] / n4["wall_sec"], 3),
+            "eff_pairs_scored": round(
+                n4["pairs_scored_per_sec"] / (4 * n["pairs_scored_per_sec"]), 3
             ),
         }
-        out.write_text(json.dumps(summary, indent=2))
-        print(json.dumps(summary, indent=2))
-        return 0
-
-    if args.one:
-        cores_one = int(args.one.split("[")[1].rstrip("]")) if "[" in args.one else 0
-        one_heap = (
-            f"{max(2, round(args.heap_per_core * 4))}g"
-            if args.standalone and args.heap_per_core
-            else "8g"
-            if args.standalone
-            else f"{max(2, round(args.heap_per_core * cores_one))}g"
-            if args.heap_per_core and cores_one
-            else "16g"
-        )
-        r = run_level(
-            args.one, data_dir, args.scale, 1, args.mode, args.strategy,
-            ckpt_base=args.ckpt_base, bcast=args.bcast, heap=one_heap,
-            pin_cpus=(
-                0
-                if args.standalone
-                else round(cores_one * args.pin_scale)
-                if args.pin_scale and cores_one
-                else cores_one + args.pin_extra
-                if args.pin_extra >= 0 and cores_one
-                else 0
-            ),
-            standalone=args.standalone,
-        )
-        f = runs_file(args.scale)
-        f.parent.mkdir(exist_ok=True)
-        with f.open("a") as fh:
-            fh.write(json.dumps(r) + "\n")
-        print(json.dumps(r, indent=2))
-        # auto-assemble after every append (VERDICT r3 #3: the report was a
-        # stale snapshot that missed the best recorded runs) — the table is
-        # now best-of over ALL recorded runs by construction
-        import subprocess as _sp
-
-        _sp.run(
-            [sys.executable, __file__, "--scale", args.scale, "--assemble",
-             "--n-cores", str(args.n_cores)],
-            capture_output=True,
-        )
-        return 0
-
-    # interleave repeats (N, 4N, N, 4N, ...) so bursty co-tenant load on this
-    # shared box hits both levels symmetrically; keep the best of each
-    n = n4 = None
-    loads = []
-    for _ in range(args.repeats):
-        loads.append(_loadavg())
-        r8 = run_level(f"local[{args.n_cores}]", data_dir, args.scale, 1)
-        loads.append(_loadavg())
-        r32 = run_level(f"local[{4 * args.n_cores}]", data_dir, args.scale, 1)
-        if n is None or r8["wall_sec"] < n["wall_sec"]:
-            n = r8
-        if n4 is None or r32["wall_sec"] < n4["wall_sec"]:
-            n4 = r32
-    loads.append(_loadavg())
-
-    off_n = off_n4 = s4 = None
-    if args.decompose:
-        off_n = run_level(f"local[{args.n_cores}]", data_dir, args.scale, 1, mode="off")
-        off_n4 = run_level(f"local[{4 * args.n_cores}]", data_dir, args.scale, 1, mode="off")
-    if args.salted:
-        s4 = run_level(f"local[{4 * args.n_cores}]", data_dir, args.scale, 1, strategy="salted")
-
-    write_report(
-        args.scale, cfg.seed, n, n4, off_n, off_n4, s4, loads,
-        f"Best of {args.repeats} runs per level.",
-    )
+        pairs.append(pair)
+        print(json.dumps(pair))
+    summary = {
+        "scale": args.scale,
+        "n_cores": args.n_cores,
+        "driver_memory": DRIVER_MEMORY,
+        "pairs": pairs,
+        "median_speedup_wall": statistics.median(p["speedup_wall"] for p in pairs),
+        "median_eff_pairs_scored": statistics.median(p["eff_pairs_scored"] for p in pairs),
+    }
+    out = REPO / "BENCH" / f"evidence_{args.scale}.json"
+    out.write_text(json.dumps(summary, indent=2) + "\n")
+    print(f"wrote {out}")
     return 0
 
 
