@@ -1074,8 +1074,8 @@ def q_kb_identifier_mapping(spark, sf_dir):
 
 
 def q_norm_patch_map(spark, sf_dir):
-    """J8 manual patch map (normalize.canonicalize strategy='map' — the
-    pure-JVM create_map substitution, reference belb's hand-maintained
+    """J8 manual patch map (normalize.canonicalize — the pure-JVM
+    create_map substitution, reference belb's hand-maintained
     identifier patch dicts, belb/kbs/kb.py:251-263): customer rows carry a
     (nation-name, mktsegment) token pair; the 50-entry patch dict rewrites
     every nation alias to its canonical ``nation_<key>`` symbol while
@@ -1101,7 +1101,7 @@ def q_norm_patch_map(spark, sf_dir):
         "c_custkey",
         F.array(F.lower("n_name"), F.lower("c_mktsegment")).alias("tokens"),
     )
-    out = canonicalize(df, syn, strategy="map")
+    out = canonicalize(df, syn)
     return out.select(
         F.col("c_custkey").cast("long"),
         F.array_join("norm_tokens", " ").alias("norm_text"),

@@ -8,9 +8,8 @@ normalized-token prefixes"):
   code corpus: identical files vendored across repos).
 - ``pfx:`` canonical tokens [2:4] (skipping the 2-token boilerplate prefix)
   — the analogue of belb's name-based grouping (belb/kbs/query.py:234-291).
-- ``mh{b}:`` MinHash band keys: token-3gram shingles → P seeded xxhash64
-  min-hashes → bands of r values. All JVM-side (xxhash64 inside a
-  higher-order ``transform`` — no Python, no UDF).
+- ``mh{b}:`` MinHash band keys: token-3gram shingles → P affine min-hashes
+  over one blake2b per shingle → bands of r values, in one Arrow UDF.
 
 Scale design: keys are emitted as one exploded (uid, block_key) table,
 repartitioned by block_key (aligned with the downstream self-join shuffle).
@@ -38,12 +37,6 @@ class BlockingConfig:
     use_prefix: bool = True
     prefix_start: int = 2        # 0-based token offset of the prefix key
     prefix_len: int = 2
-    # 'udf': one Arrow UDF — blake2b per shingle once + affine permutations
-    #        in numpy (fast, the default); 'jvm': pure-JVM xxhash64 inside
-    #        higher-order transforms (no Python at all, ~interpreted-expr
-    #        cost). Key *sets* differ between strategies (different hash
-    #        families) but both are deterministic and near-dup-equivalent.
-    strategy: str = "udf"
 
     @property
     def n_bands(self) -> int:
@@ -126,26 +119,6 @@ def shingles_col(tokens: str | Column, width: int = 3) -> Column:
     return F.array_remove(F.array_distinct(gram), "")
 
 
-def minhash_signature(shingles: Column, perms: int) -> Column:
-    """array<long> of length ``perms``: sig[p] = min over shingles of
-    xxhash64(p, shingle). Deterministic under the fixed seed set 0..perms-1."""
-    return F.array(
-        *[F.array_min(F.transform(shingles, lambda s: F.xxhash64(F.lit(p), s))) for p in range(perms)]
-    )
-
-
-def band_keys(sig: Column, cfg: BlockingConfig) -> Column:
-    """array<string> of LSH band keys ``mh{b}:h1_h2_...``."""
-    keys = []
-    for b in range(cfg.n_bands):
-        parts = [
-            F.element_at(sig, b * cfg.band_size + r + 1).cast("string")
-            for r in range(cfg.band_size)
-        ]
-        keys.append(F.concat_ws("_", F.lit(f"mh{b}:"), *parts))
-    return F.array(*keys)
-
-
 def block_keys(normalized: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> DataFrame:
     """normalized (from normalize.normalize) -> (uid, block_key) exploded.
 
@@ -171,12 +144,7 @@ def block_keys(normalized: DataFrame, cfg: BlockingConfig = BlockingConfig()) ->
         )
         keys.append(F.array(pfx))
     if cfg.minhash_perms > 0:
-        if cfg.strategy == "udf":
-            keys.append(make_band_keys_udf(cfg)(F.col("norm_tokens")))
-        else:
-            sh = shingles_col("norm_tokens", cfg.shingle_width)
-            sig = minhash_signature(sh, cfg.minhash_perms)
-            keys.append(band_keys(sig, cfg))
+        keys.append(make_band_keys_udf(cfg)(F.col("norm_tokens")))
 
     # the content key h (when the normalize stage stored one) rides the
     # explode: the candidate self-join then emits PRE-KEYED pairs

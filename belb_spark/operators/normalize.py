@@ -7,11 +7,10 @@ Re-expresses belb's surface-form normalization (quote/tab stripping
 dedup ``belb/kbs/kb.py:251-263`` + broadcast dictionary joins
 ``belb/kbs/kb.py:538-570``) as pure DataFrame expressions.
 
-Everything is JVM-side whole-stage-codegen: tokenization is one
-``split(lower(content))``, and dictionary canonicalization is either a
-map-literal ``transform`` (small dict — zero shuffle, the common case: belb's
-dictionaries are broadcast-sized) or an explode + broadcast-join + re-agg
-(large dict).
+Tokenization and dictionary canonicalization run fused in ONE Arrow UDF
+pass over ``content`` (C-regex + dict lookups with the dictionary in the
+closure — no shuffle). :func:`canonicalize` is the pure-JVM map-literal
+form of the same token rewrite for callers that already hold a token array.
 
 The per-row invariant column ``content_sha = sha2(content, 256)`` is computed
 here once and carried through every later stage (BASELINE.json north rule).
@@ -23,13 +22,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
-
-# tokens = maximal runs of [a-z0-9_] over the lowercased content; everything
-# else (quotes, tabs, unicode spaces, punctuation) acts as a separator, which
-# subsumes belb's strip/replace normalizations X1-X4 (SURVEY.md §2.9)
-_TOKEN_SPLIT = "[^a-z0-9_]+"
-
-MAP_LITERAL_MAX = 20_000  # retained for API compat; see canonicalize() strategies
 
 
 def assign_uids(repos: DataFrame) -> DataFrame:
@@ -143,121 +135,53 @@ def canonical_token_map(synonym_dict: DataFrame) -> dict[str, str]:
     return {r.name: symbol[r.identifier] for r in rows if r.identifier in symbol}
 
 
-def normalize(
-    repos: DataFrame,
-    synonym_dict: DataFrame | None = None,
-    strategy: str = "udf",
-) -> DataFrame:
+def normalize(repos: DataFrame, synonym_dict: DataFrame | None = None) -> DataFrame:
     """repos(uid?, repo, path, commit, lang, content) ->
     + content_sha, norm_tokens (canonicalized), norm_text, token_set.
 
-    Default strategy fuses tokenize + canonicalize into ONE Arrow pass over
-    ``content`` (C-regex + dict lookups — both serial bottlenecks when done
-    as interpreted higher-order JVM expressions). ``map``/``join`` keep the
-    whole stage JVM-side; all strategies are result-identical (tested).
+    Tokenize + canonicalize run fused in ONE Arrow pass over ``content``
+    (C-regex + dict lookups — both serial bottlenecks when done as
+    interpreted higher-order JVM expressions). Result-identical to a JVM
+    ``split`` + :func:`canonicalize` (tested).
     """
     df = assign_uids(repos)
     df = df.withColumn("content_sha", F.sha2(F.col("content"), 256))
+    cmap = canonical_token_map(synonym_dict) if synonym_dict is not None else {}
 
-    if strategy == "udf":
-        cmap = (
-            canonical_token_map(synonym_dict) if synonym_dict is not None else {}
-        )
+    def _tok_canon(content: pd.Series) -> pd.Series:
+        import re
 
-        def _tok_canon(content: pd.Series) -> pd.Series:
-            import re
+        # tokens = maximal runs of [a-z0-9_] over the lowercased content;
+        # everything else (quotes, tabs, unicode spaces, punctuation) acts as
+        # a separator, which subsumes belb's strip/replace normalizations
+        # X1-X4 (SURVEY.md §2.9)
+        tok = re.compile(r"[a-z0-9_]+")
+        get = cmap.get
+        return content.map(lambda c: [get(t, t) for t in tok.findall(c.lower())])
 
-            tok = re.compile(r"[a-z0-9_]+")
-            get = cmap.get
-            return content.map(
-                lambda c: [get(t, t) for t in tok.findall(c.lower())]
-            )
-
-        tc = F.pandas_udf(_tok_canon, ArrayType(StringType()))
-        df = df.withColumn("norm_tokens", tc(F.col("content")))
-    else:
-        df = df.withColumn(
-            "tokens",
-            F.filter(
-                F.split(F.lower(F.col("content")), _TOKEN_SPLIT),
-                lambda t: t != F.lit(""),
-            ),
-        )
-        if synonym_dict is not None:
-            df = canonicalize(df, synonym_dict, strategy)
-        else:
-            df = df.withColumn("norm_tokens", F.col("tokens"))
-        df = df.drop("tokens")
-
+    tc = F.pandas_udf(_tok_canon, ArrayType(StringType()))
+    df = df.withColumn("norm_tokens", tc(F.col("content")))
     df = df.withColumn("norm_text", F.array_join("norm_tokens", " "))
     df = df.withColumn("token_set", F.array_sort(F.array_distinct("norm_tokens")))
     return df
 
 
-def canonicalize(
-    df: DataFrame, synonym_dict: DataFrame, strategy: str = "udf"
-) -> DataFrame:
-    """tokens -> norm_tokens via the synonym dictionary. Three physical
-    strategies with the same semantics:
-
-    - ``udf`` (default): one vectorized Arrow UDF with the dict broadcast in
-      the closure — NO shuffle, O(1) hash lookups. The dict is belb-kb-sized
-      (≤ millions of entries), the corpus is not; keeping the big side
-      narrow wins at scale.
-    - ``map``: pure-JVM map-literal ``transform`` — no shuffle, no Python,
-      but GetMapValue is a linear scan per token: right only for tiny dicts.
-    - ``join``: posexplode + broadcast-join + re-agg — pure JVM with hash
-      lookups, but shuffles the entire token stream twice; the belb-style
-      J3 re-expression (belb/kbs/kb.py:538-570) for when the dict outgrows
-      a broadcast variable.
-    """
-    if strategy == "join":
-        return _canonicalize_via_join(df, synonym_dict)
+def canonicalize(df: DataFrame, synonym_dict: DataFrame) -> DataFrame:
+    """tokens -> norm_tokens via the synonym dictionary, as a pure-JVM
+    map-literal ``transform`` — no shuffle, no Python. GetMapValue is a
+    linear scan per token, so this suits patch-sized dictionaries; the
+    pipeline's bulk path is the fused UDF in :func:`normalize`."""
     cmap = canonical_token_map(synonym_dict)
     if not cmap:
         return df.withColumn("norm_tokens", F.col("tokens"))
-    if strategy == "map" or (strategy == "udf" and len(cmap) <= 64):
-        pairs = []
-        for k, v in sorted(cmap.items()):
-            pairs.append(F.lit(k))
-            pairs.append(F.lit(v))
-        m = F.create_map(*pairs)
-        return df.withColumn(
-            "norm_tokens", F.transform("tokens", lambda t: F.coalesce(m[t], t))
-        )
-
-    def _canon(tokens: pd.Series) -> pd.Series:
-        get = cmap.get
-        return tokens.map(lambda ts: [get(t, t) for t in ts])
-
-    canon_udf = F.pandas_udf(_canon, ArrayType(StringType()))
-    return df.withColumn("norm_tokens", canon_udf(F.col("tokens")))
-
-
-def _canonicalize_via_join(df: DataFrame, synonym_dict: DataFrame) -> DataFrame:
-    """Large-dictionary path: posexplode tokens, broadcast-join the dict
-    (belb J3 semantics, belb/kbs/kb.py:538-570), re-assemble ordered."""
-    sym = (
-        synonym_dict.filter(F.col("description") == 0)
-        .select("identifier", F.col("name").alias("symbol"))
+    pairs = []
+    for k, v in sorted(cmap.items()):
+        pairs.append(F.lit(k))
+        pairs.append(F.lit(v))
+    m = F.create_map(*pairs)
+    return df.withColumn(
+        "norm_tokens", F.transform("tokens", lambda t: F.coalesce(m[t], t))
     )
-    lookup = (
-        synonym_dict.join(sym, "identifier")
-        .select(F.col("name").alias("tok"), "symbol")
-        .distinct()
-    )
-    exploded = df.select("uid", F.posexplode("tokens").alias("pos", "tok"))
-    mapped = (
-        exploded.join(F.broadcast(lookup), "tok", "left")
-        .withColumn("ntok", F.coalesce("symbol", "tok"))
-        .groupBy("uid")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "ntok"))), lambda s: s["ntok"]
-            ).alias("norm_tokens")
-        )
-    )
-    return df.join(mapped, "uid")
 
 
 def check_sha_invariant(df: DataFrame) -> int:

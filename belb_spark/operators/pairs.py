@@ -24,7 +24,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -75,6 +75,18 @@ def exact_duplicate_edges(normalized: DataFrame) -> DataFrame:
     ).distinct()
 
 
+def _cap_policy(n: Column, cfg: PairsConfig) -> tuple[Column, Column]:
+    """(theoretical, emitted) pair counts of a block of ``n`` rows under the
+    anchor cap: all n(n-1)/2 pairs up to ``full_join_max``, else the first
+    ``anchor_rank`` rows pair with every later row."""
+    theoretical = (n * (n - 1) / 2).cast("long")
+    k = cfg.anchor_rank
+    emitted = F.when(n <= cfg.full_join_max, theoretical).otherwise(
+        (F.lit(k) * (n - 1) - F.lit(k * (k - 1) // 2)).cast("long")
+    )
+    return theoretical, emitted
+
+
 def observed_pair_stats(cfg: PairsConfig) -> list:
     """Aggregate expressions for a Spark Observation over the ranked LEFT
     side of the candidate self-join: per-block facts are read off the
@@ -82,15 +94,8 @@ def observed_pair_stats(cfg: PairsConfig) -> list:
     no-silent-caps accounting (emitted vs theoretical pairs, max block,
     block rows) rides the candidates action itself — no second evaluation
     of the live block-key derivation, no separate stats job."""
-    n = F.col("bn").cast("long")
+    theoretical, emitted = _cap_policy(F.col("bn").cast("long"), cfg)
     first = F.col("rn_a") == 1
-    theoretical = (n * (n - 1) / 2).cast("long")
-    emitted = F.when(n <= cfg.full_join_max, theoretical).otherwise(
-        (
-            F.lit(cfg.anchor_rank) * (n - 1)
-            - F.lit(cfg.anchor_rank * (cfg.anchor_rank - 1) // 2)
-        ).cast("long")
-    )
     zero = F.lit(0).cast("long")
     return [
         F.count(F.lit(1)).alias("block_rows"),
@@ -162,7 +167,6 @@ def candidate_pairs(
 def candidate_pairs_salted(
     blocks: DataFrame,
     cfg: PairsConfig = PairsConfig(),
-    salt_threshold: int = 1024,
     rows_per_salt: int = 512,
     hot_tier: str = "anchor",
 ) -> DataFrame:
@@ -322,12 +326,7 @@ def pair_stats(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> DataFrame
     """Per-block emitted vs theoretical pair counts (logged, not silent)."""
     sizes = blocks.groupBy("block_key").agg(F.count(F.lit(1)).alias("n"))
     n = F.col("n")
-    theoretical = (n * (n - 1) / 2).cast("long")
-    emitted = F.when(
-        n <= cfg.full_join_max, theoretical
-    ).otherwise(
-        (F.lit(cfg.anchor_rank) * (n - 1) - F.lit(cfg.anchor_rank * (cfg.anchor_rank - 1) // 2)).cast("long")
-    )
+    theoretical, emitted = _cap_policy(n, cfg)
     return sizes.select(
         "block_key",
         n.alias("block_size"),

@@ -34,24 +34,6 @@ class ScoringConfig:
     w_cos: float = 0.40
     clip_chars: int = 600
     threshold: float = 0.62           # final edge cut (dev-tuned)
-    # partitions for the Arrow-UDF stage as waves-per-core. 3 (default) =
-    # the r2-r4 evidence shape: an explicit exchange isolates the python
-    # scorer on 3 waves/core. 0 = no exchange: the UDF pipelines directly
-    # off the payload join (JVM join work and python scoring overlap per
-    # task). Measured r4 at xxl: overlap cuts local[4] wall ~30%
-    # (142→102 s) but leaves local[16] flat (~52 s) — the 4N side's python
-    # phase is already short relative to its join phase — so it RAISES
-    # absolute low-core throughput while LOWERING the N→4N scaling ratio.
-    # Kept as an option for throughput-first deployments.
-    udf_waves: int = 3
-    # Join strategy for the payload joins and the final score join-back.
-    # False (default) = let Catalyst pick (sort-merge at scale). True =
-    # hint shuffle_hash: same shuffles, no sort of the 13M-row pair table
-    # — the scores/reps side builds a per-partition hash map instead.
-    # Safe wherever the per-partition build side fits in executor memory
-    # (scores ≈ distinct payload pairs × 40 B; at 10^12-file scale size
-    # shuffle partitions so build ≤ a few hundred MB per task).
-    hash_joins: bool = False
 
 
 def score_pairs(
@@ -75,12 +57,8 @@ def score_pairs(
         # branches below (both pair sides + payload reps) read a stored
         # 16-byte column instead of re-deriving md5(to_json(tokens)) each
         key = F.col("h")
-    elif "norm_tokens" in normalized.columns:
-        key = F.unhex(F.md5(F.to_json("norm_tokens")))
     else:
-        key = F.unhex(
-            F.md5(F.concat_ws("", F.to_json("token_set"), "norm_text"))
-        )
+        key = F.unhex(F.md5(F.to_json("norm_tokens")))
     feats = normalized.select("uid", "token_set", "norm_text", key.alias("h"))
     if "h_a" in pairs.columns and "h_b" in pairs.columns:
         # pairs arrive pre-keyed (the candidates stage emitted h_a/h_b
@@ -109,8 +87,6 @@ def score_pairs(
     # distinct ships ~the distinct count. Two slim scans of the pair table
     # are cheaper than one fat pinned exchange.)
     reps = feats.dropDuplicates(["h"]).select("h", "token_set", "norm_text")
-    if cfg.hash_joins:
-        reps = reps.hint("shuffle_hash")
     payloads = (
         keyed.select("h_a", "h_b")
         .distinct()
@@ -133,14 +109,11 @@ def score_pairs(
         .withColumn("jacc", token_jaccard("ts_a", "ts_b"))
         .filter(F.col("jacc") >= F.lit(cfg.jaccard_prefilter))
     )
-    # udf_waves > 0: spread the Python-UDF stage across its own exchange
-    # (3 waves/core was the r2-r3 shape). udf_waves == 0: no barrier — the
-    # scorer consumes the join's output within the same stage, overlapping
-    # JVM and python compute (see ScoringConfig.udf_waves).
-    if cfg.udf_waves:
-        payloads = payloads.repartition(
-            cfg.udf_waves * spark.sparkContext.defaultParallelism
-        )
+    # the Python-UDF stage gets its own exchange at 3 waves per core:
+    # pipelining the UDF straight off the payload join raised local[4]
+    # throughput but left local[16] flat, lowering the N→4N scaling ratio
+    # (measured r4 at xxl)
+    payloads = payloads.repartition(3 * spark.sparkContext.defaultParallelism)
     rich = make_rich_score_udf(cfg.w_jw, cfg.w_lev, cfg.w_cos, cfg.clip_chars)
     payload_scores = payloads.select(
         "h_a",
@@ -152,8 +125,6 @@ def score_pairs(
     )
     # inner join implements the prefilter on the pair table (sub-threshold
     # payloads have no score row)
-    if cfg.hash_joins:
-        payload_scores = payload_scores.hint("shuffle_hash")
     return keyed.join(payload_scores, ["h_a", "h_b"]).select(
         "uid_a", "uid_b", "score"
     )

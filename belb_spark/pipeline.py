@@ -34,7 +34,9 @@ from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score
 # One physical path per stage: every stage checkpoints synchronously (build →
 # plain-Parquet write at the build's own partitioning → read back), and the
 # within-block self-join is the anchor-capped builder. Only logical knobs
-# live here; they are all part of the resume signature.
+# live here; they are all part of the resume signature. Physical choices
+# are not knobs: CC checkpoint durability follows the master
+# (clustering.reliable_checkpoints).
 @dataclass(frozen=True)
 class ERConfig:
     blocking: BlockingConfig = field(default_factory=BlockingConfig)

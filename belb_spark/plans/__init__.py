@@ -39,10 +39,6 @@ def arrow_eval_count(df: DataFrame) -> int:
     return plan_string(df, "simple").count("ArrowEvalPython")
 
 
-def wholestage_codegen_spans(df: DataFrame) -> int:
-    return plan_string(df).count("WholeStageCodegen")
-
-
 def final_plan_section(df: DataFrame) -> str:
     """The '== Final Plan ==' section of an EXECUTED adaptive plan (falls
     back to the whole string pre-execution / with AQE off). Runtime facts —

@@ -77,9 +77,3 @@ def ensure_checkpoint_dir(spark: SparkSession) -> None:
         import tempfile
 
         sc.setCheckpointDir(tempfile.mkdtemp(prefix="belb_spark_rdd_ckpt_"))
-
-
-def stop_spark() -> None:
-    active = SparkSession.getActiveSession()
-    if active is not None:
-        active.stop()

@@ -31,8 +31,8 @@ def main() -> int:
     from belb_spark.plans import plan_string
     from belb_spark.session import get_spark
 
-    # dedup ops are lazy by default (materialize=False), so .explain shows
-    # the designed plan — no checkpoint-RDD scans to work around
+    # dedup ops are lazy, so .explain shows the designed plan — no
+    # checkpoint-RDD scans to work around
 
     sf_dir = "/root/testdata/sf0.01"
     spark = get_spark("explain", master="local[4]", shuffle_partitions=8)

@@ -1,7 +1,9 @@
 """Connected components on hand-built graphs (SURVEY.md §5 strategy 3):
 chains, stars, cycles, multiple components, singletons."""
 
-from belb_spark.operators.clustering import connected_components
+import pytest
+
+from belb_spark.operators.clustering import connected_components, reliable_checkpoints
 
 
 def _cc(spark, edges, nodes=None):
@@ -62,3 +64,20 @@ def test_star_input_jobs_budget(spark):
     got = {r["uid"]: r["cluster"] for r in out.collect()}
     assert got == {10: 2, 2: 2, 3: 2, 4: 2, 20: 20, 21: 20, 22: 20}
     assert jobs_loop <= 14, f"CC loop launched {jobs_loop} driver jobs (>14)"
+
+
+@pytest.mark.parametrize(
+    "master, reliable",
+    [
+        ("local", False),
+        ("local[4]", False),
+        ("local[*]", False),
+        ("local-cluster[2,1,1024]", True),
+        ("spark://h:7077", True),
+        ("yarn", True),
+    ],
+)
+def test_checkpoint_durability_from_master(master, reliable):
+    """CC rounds take local checkpoints under a local master and reliable
+    ones under any cluster master."""
+    assert reliable_checkpoints(master) is reliable

@@ -97,8 +97,6 @@ def test_dedup_ops_leave_no_persisted_rdds(spark):
 
     before = spark.sparkContext._jsc.getPersistentRDDs().size()
     docs = _hot_corpus(spark)
-    minhash_lsh_pairs(docs, "doc_id", "text", materialize=True).collect()
-    ngram_jaccard_pairs(docs, "doc_id", "text", materialize=True).collect()
     minhash_lsh_pairs(docs, "doc_id", "text").collect()
     ngram_jaccard_pairs(docs, "doc_id", "text").collect()
     for _ in range(40):  # cleanup is async; nudge both GCs and wait

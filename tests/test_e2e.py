@@ -105,6 +105,28 @@ def test_resume_skips_committed_stages(spark, tiny_spark, ckpt_dir, result):
     assert result.metrics["pairs_theoretical"] > 0
 
 
+
+def test_pair_ledgers_agree(spark, result, ckpt_dir):
+    """The pipeline's Observation ledger (committed with 03_candidates) and
+    the per-block pairs.pair_stats table price the cap identically over
+    the same committed non-exact blocks."""
+    from belb_spark.operators.pairs import PairsConfig, pair_stats
+
+    blocks = spark.read.parquet(f"{ckpt_dir}/02_blocks").filter(
+        ~F.col("block_key").startswith("exact:")
+    )
+    agg = pair_stats(blocks, PairsConfig()).agg(
+        F.sum("pairs_theoretical").alias("theoretical"),
+        F.sum("pairs_emitted").alias("emitted"),
+        F.max("block_size").alias("max_block"),
+    ).first()
+    assert (
+        result.metrics["pairs_theoretical"],
+        result.metrics["pairs_capped_estimate"],
+        result.metrics["max_block_size"],
+    ) == (agg["theoretical"], agg["emitted"], agg["max_block"])
+    assert agg["emitted"] < agg["theoretical"]  # the cap binds on TINY
+
 def test_partial_resume_after_invalidation(spark, tiny_spark, ckpt_dir, result_rows):
     """Kill-after-stage-N simulation: only the invalidated stage rebuilds;
     earlier committed stages are read back; output is identical."""

@@ -4,6 +4,7 @@ from pyspark.sql import functions as F
 
 from belb_spark.operators.normalize import (
     assign_uids,
+    canonicalize,
     check_sha_invariant,
     normalize,
 )
@@ -47,24 +48,20 @@ def test_normalize_without_dict(spark, tiny_spark):
     assert norm.filter(F.col("norm_tokens").isNull()).count() == 0
 
 
-def test_canonicalize_strategies_agree(spark, tiny_spark):
-    """udf (Arrow, no shuffle), map (JVM literal), join (broadcast J3) are
-    three physical plans for one logical op — results must be identical."""
-    from belb_spark.operators.normalize import assign_uids, canonicalize
-    from pyspark.sql import functions as F
-
+def test_fused_udf_matches_split_and_map_canonicalize(spark, tiny_spark):
+    """normalize()'s fused Arrow tokenize+canonicalize equals the pure-JVM
+    reference on TINY: ``split`` on non-[a-z0-9_] runs of the lowercased
+    content, then the map-literal :func:`canonicalize`."""
+    syn = tiny_spark["synonym_dict"]
+    fused = normalize(tiny_spark["repos"], syn).select("uid", "norm_tokens")
     base = assign_uids(tiny_spark["repos"]).withColumn(
         "tokens",
         F.filter(F.split(F.lower("content"), "[^a-z0-9_]+"), lambda t: t != F.lit("")),
     )
-    outs = {
-        s: canonicalize(base, tiny_spark["synonym_dict"], strategy=s)
-        .select("uid", F.array_join("norm_tokens", " ").alias("nt"))
-        for s in ["udf", "map", "join"]
-    }
-    for s in ["map", "join"]:
-        assert outs["udf"].exceptAll(outs[s]).count() == 0, s
-        assert outs[s].exceptAll(outs["udf"]).count() == 0, s
+    ref = canonicalize(base, syn).select("uid", "norm_tokens")
+    assert fused.count() == tiny_spark["repos"].count()
+    assert fused.exceptAll(ref).count() == 0
+    assert ref.exceptAll(fused).count() == 0
 
 
 def test_assign_uids_scalable_matches_global(spark, tiny_spark):

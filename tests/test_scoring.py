@@ -40,24 +40,3 @@ def test_whitespace_symbols_not_conflated(spark):
     # prefilter — must NOT inherit row 1's payload through a shared hash
     assert (1, 2) not in scored
 
-
-def test_hash_joins_equivalent_and_in_plan(spark):
-    """hash_joins=True swaps SMJ for shuffled-hash on the pair-table joins
-    without changing a single score (pure physical-strategy hint)."""
-    rows = [(i, [f"t{i % 7}", f"t{(i * 3) % 11}", "common"]) for i in range(40)]
-    normalized = (
-        spark.createDataFrame(rows, "uid long, norm_tokens array<string>")
-        .withColumn("norm_text", F.array_join("norm_tokens", " "))
-        .withColumn("token_set", F.array_sort(F.array_distinct("norm_tokens")))
-    )
-    pairs = spark.createDataFrame(
-        [(i, (i + 1) % 40) for i in range(40)], "uid_a long, uid_b long"
-    )
-    base = score_pairs(pairs, normalized, ScoringConfig())
-    hashed = score_pairs(pairs, normalized, ScoringConfig(hash_joins=True))
-    plan = hashed._jdf.queryExecution().executedPlan().toString()
-    assert "ShuffledHashJoin" in plan
-    key = lambda r: (r["uid_a"], r["uid_b"])
-    b = {key(r): round(r["score"], 9) for r in base.collect()}
-    h = {key(r): round(r["score"], 9) for r in hashed.collect()}
-    assert b == h and len(b) > 0
