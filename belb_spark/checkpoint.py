@@ -77,10 +77,6 @@ class StageResult:
     rows: int
     resumed: bool
     wall_sec: float
-    # per-partition-directory row counts (e.g. {"src=exact": 629}) when the
-    # stage was written with partition_by — row-count metrics per slice come
-    # from parquet footers, never from an extra count() job
-    partition_rows: dict[str, int] = field(default_factory=dict)
     # the stage's committed metrics (see CheckpointStore.run's ``metrics``):
     # the same values whether the stage was built or resumed
     metrics: dict[str, Any] = field(default_factory=dict)
@@ -102,7 +98,6 @@ class CheckpointStore:
         signature: str,
         build: Callable[[], DataFrame],
         metrics: Callable[[], dict[str, Any]] | None = None,
-        partition_by: list[str] | None = None,
     ) -> StageResult:
         """Build, write and commit stage ``name`` — or read it back if a
         manifest with this ``signature`` exists. ``metrics`` is called after
@@ -121,7 +116,6 @@ class CheckpointStore:
                     manifest["rows"],
                     True,
                     time.time() - t0,
-                    manifest.get("partition_rows", {}),
                     manifest.get("metrics") or {},
                 )
                 self.log.append({"stage": name, "resumed": True, **manifest})
@@ -132,10 +126,7 @@ class CheckpointStore:
 
         df = build()
         shutil.rmtree(data_dir, ignore_errors=True)
-        writer = df.write.mode("overwrite")
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.parquet(str(data_dir))
+        df.write.mode("overwrite").parquet(str(data_dir))
         out = self.spark.read.parquet(str(data_dir))
         # row counts + per-partition lineage straight from parquet footers —
         # no extra Spark job per stage
@@ -143,30 +134,22 @@ class CheckpointStore:
 
         lineage = []
         rows = 0
-        partition_rows: dict[str, int] = {}
-        for p in sorted(data_dir.rglob("*.parquet")):
+        for p in sorted(data_dir.glob("*.parquet")):
             n = pq.ParquetFile(p).metadata.num_rows
             rows += n
-            rel = p.relative_to(data_dir)
-            lineage.append({"file": str(rel), "bytes": p.stat().st_size, "rows": n})
-            if len(rel.parts) > 1:  # partitioned layout: key=value dirs
-                key = "/".join(rel.parts[:-1])
-                partition_rows[key] = partition_rows.get(key, 0) + n
+            lineage.append({"file": p.name, "bytes": p.stat().st_size, "rows": n})
         stage_metrics = metrics() if metrics else {}
         manifest = {
             "signature": signature,
             "rows": rows,
             "partitions": lineage,
-            "partition_rows": partition_rows,
             "metrics": stage_metrics,
             "committed_at": time.time(),
             "wall_sec": time.time() - t0,
         }
         manifest_path.write_text(json.dumps(manifest, indent=2))
         self.log.append({"stage": name, "resumed": False, **manifest})
-        return StageResult(
-            out, rows, False, time.time() - t0, partition_rows, stage_metrics
-        )
+        return StageResult(out, rows, False, time.time() - t0, stage_metrics)
 
     def invalidate(self, name: str) -> None:
         data_dir, manifest_path = self._paths(name)

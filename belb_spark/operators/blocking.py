@@ -1,15 +1,17 @@
-"""Stage 2 — blocking: MinHash-LSH band keys ∪ token-prefix keys ∪ exact key.
+"""Stage 2 — blocking: MinHash-LSH band keys ∪ token-prefix keys.
 
-Three key families per row (north rule: "MinHash-LSH band keys plus
+Two key families per row (north rule: "MinHash-LSH band keys plus
 normalized-token prefixes"):
 
-- ``exact:`` sha256 of the canonicalized text — exact-duplicate groups come
-  out for free and never enter the pairwise scorer (the dominant case in a
-  code corpus: identical files vendored across repos).
 - ``pfx:`` canonical tokens [2:4] (skipping the 2-token boilerplate prefix)
   — the analogue of belb's name-based grouping (belb/kbs/query.py:234-291).
 - ``mh{b}:`` MinHash band keys: token-3gram shingles → P affine min-hashes
   over one blake2b per shingle → bands of r values, in one Arrow UDF.
+
+Exact duplicates never get here: the pipeline contracts each group of rows
+with one token sequence to its min-uid representative at normalize (the
+dominant case in a code corpus: identical files vendored across repos), and
+every key here is a pure function of ``norm_tokens``.
 
 Scale design: keys are emitted as one exploded (uid, block_key) table,
 repartitioned by block_key (aligned with the downstream self-join shuffle).
@@ -120,7 +122,7 @@ def shingles_col(tokens: str | Column, width: int = 3) -> Column:
 
 
 def block_keys(normalized: DataFrame, cfg: BlockingConfig = BlockingConfig()) -> DataFrame:
-    """normalized (from normalize.normalize) -> (uid, block_key) exploded.
+    """normalized (uid, norm_tokens) -> (uid, block_key) exploded.
 
     Returns one row per (uid, key); repartitioned by block_key so the
     downstream within-block self-join shuffles once on an aligned layout.
@@ -130,11 +132,11 @@ def block_keys(normalized: DataFrame, cfg: BlockingConfig = BlockingConfig()) ->
     never removed a row on the pipeline path, where normalize guarantees
     uniqueness). A caller passing duplicate-uid rows gets duplicate
     (uid, block_key) rows that inflate block sizes, window ranks, and the
-    observed pair stats downstream.
+    observed pair stats downstream. Both key families depend on
+    ``norm_tokens`` alone, so exact duplicates share every key: the
+    pipeline passes one representative per token sequence.
     """
-    df = normalized
-    exact = F.concat(F.lit("exact:"), F.sha2(F.col("norm_text"), 256))
-    keys = [F.array(exact)]
+    keys = []
     if cfg.use_prefix:
         pfx = F.concat(
             F.lit("pfx:"),
@@ -146,19 +148,13 @@ def block_keys(normalized: DataFrame, cfg: BlockingConfig = BlockingConfig()) ->
     if cfg.minhash_perms > 0:
         keys.append(make_band_keys_udf(cfg)(F.col("norm_tokens")))
 
-    # the content key h (when the normalize stage stored one) rides the
-    # explode: the candidate self-join then emits PRE-KEYED pairs
-    # (uid, h per side) and the scoring stage needs no uid→h translation
-    # joins at all (r4). 16 bytes per exploded row, dictionary-encoded at
-    # rest (each uid's h repeats once per key family).
-    carry = ["uid", "h"] if "h" in df.columns else ["uid"]
-    # dedupe PER ROW, not globally: every key is family-prefixed ("exact:",
-    # "pfx:", "mh{b}:") and unique within its family, so a (uid, key) pair
-    # can only repeat inside one row's concat array — array_distinct is the
-    # whole dedup. The r1-r3 global `.distinct()` here was semantically a
-    # no-op that shuffled + hash-aggregated the full exploded table once
-    # per run (removed r4).
-    out = df.select(
-        *carry, F.explode(F.array_distinct(F.concat(*keys))).alias("block_key")
+    # dedupe PER ROW, not globally: every key is family-prefixed ("pfx:",
+    # "mh{b}:") and unique within its family, so a (uid, key) pair can only
+    # repeat inside one row's concat array — array_distinct is the whole
+    # dedup. The r1-r3 global `.distinct()` here was semantically a no-op
+    # that shuffled + hash-aggregated the full exploded table once per run
+    # (removed r4).
+    out = normalized.select(
+        "uid", F.explode(F.array_distinct(F.concat(*keys))).alias("block_key")
     )
     return out.repartition("block_key")

@@ -5,10 +5,11 @@ Training-data-pipeline dedup family, each expressed Spark-first:
 - exact dedup — hash-groupBy (belb A7 ``dropDuplicates`` analogue,
   belb/preprocessing/data.py:472-491)
 - MinHash-LSH near-dup — shingle → minhash → band → bucket-join. Two hash
-  backends: ``xxhash64`` (fast JVM path used by the ER pipeline's blocking,
-  blocking.py) and ``md5`` (portable path whose signature is reproducible in
-  any engine — used for oracle checks; min over fixed-width lowercase hex ==
-  numeric min, so no integer casts are needed anywhere)
+  backends: ``xxhash64`` (fast JVM path) and ``md5`` (portable path whose
+  signature is reproducible in any engine — used for oracle checks; min over
+  fixed-width lowercase hex == numeric min, so no integer casts are needed
+  anywhere). The ER pipeline's blocking uses neither: its band keys come
+  from a blake2b Arrow UDF (blocking.py)
 - SimHash — bitwise majority over token hashes, built from md5 nibbles so it
   is engine-portable too
 - n-gram Jaccard — shingle-set similarity over candidate pairs

@@ -166,6 +166,17 @@ def normalize(repos: DataFrame, synonym_dict: DataFrame | None = None) -> DataFr
     return df
 
 
+def exact_anchor(normalized: DataFrame) -> DataFrame:
+    """+ ``anchor``: the min uid among rows with the same token sequence —
+    belb's exact dedup and identical-synset merge as one contraction
+    (cluster id = min uid, FIXTURES.md invariant 4). Keyed on
+    ``md5(to_json(norm_tokens))``, not on the space-joined text: a canonical
+    symbol containing whitespace makes two tokenizations share norm_text
+    (ADVICE r2). One window, no self-join."""
+    h = Window.partitionBy(F.md5(F.to_json("norm_tokens")))
+    return normalized.withColumn("anchor", F.min("uid").over(h))
+
+
 def canonicalize(df: DataFrame, synonym_dict: DataFrame) -> DataFrame:
     """tokens -> norm_tokens via the synonym dictionary, as a pure-JVM
     map-literal ``transform`` — no shuffle, no Python. GetMapValue is a

@@ -3,15 +3,17 @@
 belb never self-joins at scale (its joins are dict lookups, SURVEY.md §2.4);
 this is the operator the new engine adds. Naively a block of n rows yields
 n(n-1)/2 pairs — a hot key (vendored file duplicated 10^5×) would emit 5e9
-pairs. Two structural defenses, both shuffle-aligned and AQE-friendly:
+pairs. Two structural defenses:
 
-1. **Exact-duplicate collapse.** ``exact:`` blocks need no scoring at all —
-   their pairs are emitted as ready edges (score 1.0) built from a groupBy,
-   star-shaped (min-uid anchor → member), O(n) per group instead of O(n²).
+1. **Exact-duplicate contraction, before blocking.** The pipeline's
+   normalize stage maps every row to the min-uid anchor of its token
+   sequence, and only those representatives are blocked, paired and
+   scored; clustering expands the result through the anchor. A vendored
+   file duplicated 10^5× is one row here.
 
-2. **Anchor-capped join.** For every other block, rows are ranked by uid
-   within the block; the join keeps a pair only if the smaller side is one of
-   the first ``anchor_rank`` rows OR the block is small (≤ full_join_max).
+2. **Anchor-capped join.** Rows are ranked by uid within each block; the
+   join keeps a pair only if the smaller side is one of the first
+   ``anchor_rank`` rows OR the block is small (≤ full_join_max).
    Connectivity to the block's anchors is preserved (that is all transitive
    clustering needs), while a hot block of n rows emits ≤ anchor_rank·n pairs.
    Dropped-pair counts are observable: emitted vs theoretical pair counts per
@@ -59,22 +61,6 @@ def _rank_and_size(blocks: DataFrame) -> DataFrame:
     )
 
 
-def exact_duplicate_edges(normalized: DataFrame) -> DataFrame:
-    """Star edges (min-uid → member) within identical-norm_text groups.
-    O(n) per group via a window min — no self-join, no O(n²) blowup."""
-    w = Window.partitionBy("exact_key")
-    df = (
-        normalized.select(
-            "uid", F.sha2(F.col("norm_text"), 256).alias("exact_key")
-        )
-        .withColumn("anchor", F.min("uid").over(w))
-        .filter(F.col("uid") != F.col("anchor"))
-    )
-    return df.select(
-        F.col("anchor").alias("uid_a"), F.col("uid").alias("uid_b")
-    ).distinct()
-
-
 def _cap_policy(n: Column, cfg: PairsConfig) -> tuple[Column, Column]:
     """(theoretical, emitted) pair counts of a block of ``n`` rows under the
     anchor cap: all n(n-1)/2 pairs up to ``full_join_max``, else the first
@@ -110,25 +96,19 @@ def candidate_pairs(
 ) -> DataFrame:
     """(uid, block_key) -> unique (uid_a, uid_b), uid_a < uid_b.
 
-    ``exact:`` keys are excluded here (handled by exact_duplicate_edges).
     ``observe``: optional ``pyspark.sql.Observation`` that receives the
     :func:`observed_pair_stats` aggregates when the returned plan executes.
     """
-    b = blocks.filter(~F.col("block_key").startswith("exact:"))
-    # a content key h in the block table rides both self-join sides, so the
-    # output pairs are pre-keyed for scoring (no uid→h joins there)
-    has_h = "h" in blocks.columns
     # pinned exchange above the window: left/right prune different columns,
     # so without it each side re-evaluates the window AND the (expensive)
     # block-key derivation below it — decisive once blocks stopped being a
     # checkpointed stage and carry the live minhash computation
-    ranked = _rank_and_size(b).repartition("block_key")
+    ranked = _rank_and_size(blocks).repartition("block_key")
     left = ranked.select(
         F.col("block_key"),
         F.col("uid").alias("uid_a"),
         F.col("rn").alias("rn_a"),
         F.col("bn"),
-        *([F.col("h").alias("h_a")] if has_h else []),
     )
     if observe is not None:
         left = left.observe(observe, *observed_pair_stats(cfg))
@@ -143,14 +123,9 @@ def candidate_pairs(
     # shuffle-based join keeps both sides on the one materialized exchange
     right = (
         ranked.filter(F.col("bn") > 0)
-        .select(
-            F.col("block_key"),
-            F.col("uid").alias("uid_b"),
-            *([F.col("h").alias("h_b")] if has_h else []),
-        )
+        .select(F.col("block_key"), F.col("uid").alias("uid_b"))
         .hint("merge")
     )
-    out_cols = ["uid_a", "uid_b"] + (["h_a", "h_b"] if has_h else [])
     pairs = (
         left.join(right, "block_key")
         .filter(F.col("uid_a") < F.col("uid_b"))
@@ -158,7 +133,7 @@ def candidate_pairs(
             (F.col("bn") <= F.lit(cfg.full_join_max))
             | (F.col("rn_a") <= F.lit(cfg.anchor_rank))
         )
-        .select(*out_cols)
+        .select("uid_a", "uid_b")
         .distinct()
     )
     return pairs
@@ -207,14 +182,6 @@ def candidate_pairs_salted(
         raise ValueError(
             f"hot_tier must be 'anchor' or 'within_salt', got {hot_tier!r}"
         )
-    # the exact: exclusion only applies to the pipeline's string key space;
-    # dedup callers pass xxhash64-compressed (long) keys with no exact tier
-    if dict(blocks.dtypes).get("block_key") == "string":
-        blocks = blocks.filter(~F.col("block_key").startswith("exact:"))
-    has_h = "h" in blocks.columns
-    h_a = [F.col("h").alias("h_a")] if has_h else []
-    h_b = [F.col("h").alias("h_b")] if has_h else []
-    out_cols = ["uid_a", "uid_b"] + (["h_a", "h_b"] if has_h else [])
     ranked = _rank_and_size(blocks).repartition("block_key")
 
     # small blocks: plain within-block self-join, both sides off the reused
@@ -226,21 +193,19 @@ def candidate_pairs_salted(
     # builder wall at sf1.0); a shuffle-based join keeps both sides on the
     # one materialized exchange and spills gracefully at any scale
     small = ranked.filter(F.col("bn") <= cfg.full_join_max)
-    s_left = small.select("block_key", F.col("uid").alias("uid_a"), *h_a)
-    s_right = small.select("block_key", F.col("uid").alias("uid_b"), *h_b).hint(
-        "merge"
-    )
+    s_left = small.select("block_key", F.col("uid").alias("uid_a"))
+    s_right = small.select("block_key", F.col("uid").alias("uid_b")).hint("merge")
     small_pairs = (
         s_left.join(s_right, "block_key")
         .filter(F.col("uid_a") < F.col("uid_b"))
-        .select(*out_cols)
+        .select("uid_a", "uid_b")
     )
 
     # hot blocks: salt members; replicate anchors to every salt bucket
     hot = ranked.filter(F.col("bn") > cfg.full_join_max)
     n_salts = _n_salts(rows_per_salt)
     members = _salted_hot_members(hot, rows_per_salt).select(
-        "block_key", "salt", F.col("uid").alias("uid_b"), *h_b
+        "block_key", "salt", F.col("uid").alias("uid_b")
     )
     anchors = (
         hot.filter(F.col("rn") <= cfg.anchor_rank)
@@ -249,44 +214,28 @@ def candidate_pairs_salted(
             "block_key",
             F.explode("salt_arr").alias("salt"),
             F.col("uid").alias("uid_a"),
-            *h_a,
         )
     )
     # same merge hint as the small self-join: keep the members side on its
     # pinned (block_key, salt) exchange instead of a broadcast re-evaluation
     members_p = members.repartition("block_key", "salt").hint("merge")
-    # orient (uid_a < uid_b); when carrying h, swap h alongside the uids
-    fwd = F.col("uid_a") < F.col("uid_b")
-    oriented = [
-        F.least("uid_a", "uid_b").alias("uid_a"),
-        F.greatest("uid_a", "uid_b").alias("uid_b"),
-    ] + (
-        [
-            F.when(fwd, F.col("h_a")).otherwise(F.col("h_b")).alias("h_a"),
-            F.when(fwd, F.col("h_b")).otherwise(F.col("h_a")).alias("h_b"),
-        ]
-        if has_h
-        else []
-    )
     hot_pairs = (
         anchors.join(members_p, ["block_key", "salt"])
         .filter(F.col("uid_a") != F.col("uid_b"))
-        .select(*oriented)
+        .select(
+            F.least("uid_a", "uid_b").alias("uid_a"),
+            F.greatest("uid_a", "uid_b").alias("uid_b"),
+        )
     )
     if hot_tier == "within_salt":
         # exhaustive pairs inside each salt bucket: both sides read the same
         # pinned (block_key, salt) exchange, every reducer group is bounded
         # by ~rows_per_salt members
-        w_left = members_p.select(
-            "block_key",
-            "salt",
-            F.col("uid_b").alias("uid_a"),
-            *([F.col("h_b").alias("h_a")] if has_h else []),
-        )
+        w_left = members_p.select("block_key", "salt", F.col("uid_b").alias("uid_a"))
         within = (
             w_left.join(members_p, ["block_key", "salt"])
             .filter(F.col("uid_a") < F.col("uid_b"))
-            .select(*out_cols)
+            .select("uid_a", "uid_b")
         )
         hot_pairs = hot_pairs.unionByName(within)
     return small_pairs.unionByName(hot_pairs).distinct()
@@ -311,8 +260,6 @@ def salt_distribution(
     salting, no join task reads a group materially bigger than
     ``rows_per_salt`` (hash jitter aside), no matter how hot the key. One
     row per group: (block_key, salt, members)."""
-    if dict(blocks.dtypes).get("block_key") == "string":
-        blocks = blocks.filter(~F.col("block_key").startswith("exact:"))
     ranked = _rank_and_size(blocks)
     hot = ranked.filter(F.col("bn") > cfg.full_join_max)
     return (

@@ -1,13 +1,11 @@
 """Stage 4 — pairwise scoring: JVM Jaccard prefilter → one pandas UDF.
 
-Plan shape (what .explain should show): the pair table is joined with ONLY a
-16-byte content hash per side — the big payloads (token_set, norm_text)
-never ride the 4.6M-pair shuffle. The full score is a pure function of
-(nt_a, nt_b), so every computation — the codegen Jaccard prefilter AND the
-rich-score ArrowEvalPython — runs once per DISTINCT payload pair and hash-
-joins back onto the slim pair rows. At the xl scale this cuts the stage's
-shuffle volume ~10× (VERDICT r1 round 2: the stage had become byte-bound,
-not kernel-bound, after the kernels were vectorized).
+Plan shape (what .explain should show): both payloads (token_set,
+norm_text) join onto the pair table by uid, the codegen Jaccard prefilter
+drops weak pairs JVM-side, and the survivors cross into ONE ArrowEvalPython.
+The score is a pure function of the two token sequences, and the pipeline
+contracts exact duplicates to one representative at normalize, so each
+pair is its own payload pair and every payload pair is scored once.
 
 Combined score = w_jacc·token_jaccard + (1-w_jacc)·rich(norm_text) where
 rich = Jaro-Winkler + norm-Levenshtein + char-3gram cosine (simfns.py).
@@ -39,72 +37,33 @@ class ScoringConfig:
 def score_pairs(
     pairs: DataFrame, normalized: DataFrame, cfg: ScoringConfig = ScoringConfig()
 ) -> DataFrame:
-    """(uid_a, uid_b) + normalized features -> (uid_a, uid_b, score).
+    """(uid_a, uid_b) + normalized (uid, token_set, norm_text) ->
+    (uid_a, uid_b, score).
 
-    Pairs whose payload fails the Jaccard prefilter are dropped (same
-    semantics as filtering per pair — the score depends only on content).
+    Both payloads join onto the pairs by uid; pairs that fail the Jaccard
+    prefilter are dropped before the one Arrow UDF. The pipeline passes
+    representatives only (one row per token sequence), so no two pairs
+    carry the same payload pair.
     """
     spark = pairs.sparkSession
-    # md5 = 128-bit content key: collision-free at any realistic corpus
-    # size, engine-portable, and 16 bytes instead of ~0.5 kB of payload.
-    # Keyed on the TOKEN SEQUENCE, not its space-join: the score is a pure
-    # function of norm_tokens (norm_text and token_set both derive from it),
-    # while md5(norm_text) collides across different tokenizations when a
-    # canonical dictionary symbol contains whitespace (ADVICE r2) — two rows
-    # would share a key but carry different token_sets and score wrongly.
-    if "h" in normalized.columns:
-        # precomputed once at the normalize stage (pipeline.py): the three
-        # branches below (both pair sides + payload reps) read a stored
-        # 16-byte column instead of re-deriving md5(to_json(tokens)) each
-        key = F.col("h")
-    else:
-        key = F.unhex(F.md5(F.to_json("norm_tokens")))
-    feats = normalized.select("uid", "token_set", "norm_text", key.alias("h"))
-    if "h_a" in pairs.columns and "h_b" in pairs.columns:
-        # pairs arrive pre-keyed (the candidates stage emitted h_a/h_b
-        # alongside the uids): both uid→h translation joins — two full
-        # shuffles of the pair table — drop out of this stage entirely.
-        # PRECONDITION (ADVICE r4): pre-keyed pairs must come from the SAME
-        # normalize build as `normalized` — a pair table materialized under
-        # a different tokenization carries foreign hashes that silently
-        # vanish at the payload inner join below instead of erroring. The
-        # in-pipeline path guarantees this (candidates and reps share one
-        # stage signature, and _STAGE_SCHEMA_VERSION invalidates stale
-        # checkpoints); external callers must re-derive keys by dropping
-        # h_a/h_b if provenance is unknown.
-        keyed = pairs.select("uid_a", "uid_b", "h_a", "h_b")
-    else:
-        ha = feats.select(F.col("uid").alias("uid_a"), F.col("h").alias("h_a"))
-        hb = feats.select(F.col("uid").alias("uid_b"), F.col("h").alias("h_b"))
-        keyed = pairs.join(ha, "uid_a").join(hb, "uid_b")
-
-    # one representative payload per distinct content hash.
-    # (Measured r4 dead end: pinning keyed behind one repartition(h_a, h_b)
-    # for the distinct + join-back to share — the vacuous-uid-filter trick
-    # that keeps the subtrees canonically equal dies to NOT-NULL
-    # simplification, and the explicit exchange also defeats the distinct's
-    # map-side partial aggregate, shuffling 12.8M rows where the plain
-    # distinct ships ~the distinct count. Two slim scans of the pair table
-    # are cheaper than one fat pinned exchange.)
-    reps = feats.dropDuplicates(["h"]).select("h", "token_set", "norm_text")
+    feats = normalized.select("uid", "token_set", "norm_text")
     payloads = (
-        keyed.select("h_a", "h_b")
-        .distinct()
+        pairs.select("uid_a", "uid_b")
         .join(
-            reps.select(
-                F.col("h").alias("h_a"),
+            feats.select(
+                F.col("uid").alias("uid_a"),
                 F.col("token_set").alias("ts_a"),
                 F.col("norm_text").alias("nt_a"),
             ),
-            "h_a",
+            "uid_a",
         )
         .join(
-            reps.select(
-                F.col("h").alias("h_b"),
+            feats.select(
+                F.col("uid").alias("uid_b"),
                 F.col("token_set").alias("ts_b"),
                 F.col("norm_text").alias("nt_b"),
             ),
-            "h_b",
+            "uid_b",
         )
         .withColumn("jacc", token_jaccard("ts_a", "ts_b"))
         .filter(F.col("jacc") >= F.lit(cfg.jaccard_prefilter))
@@ -115,18 +74,13 @@ def score_pairs(
     # (measured r4 at xxl)
     payloads = payloads.repartition(3 * spark.sparkContext.defaultParallelism)
     rich = make_rich_score_udf(cfg.w_jw, cfg.w_lev, cfg.w_cos, cfg.clip_chars)
-    payload_scores = payloads.select(
-        "h_a",
-        "h_b",
+    return payloads.select(
+        "uid_a",
+        "uid_b",
         (
             F.col("jacc") * cfg.w_jacc
             + rich(F.col("nt_a"), F.col("nt_b")) * (1.0 - cfg.w_jacc)
         ).alias("score"),
-    )
-    # inner join implements the prefilter on the pair table (sub-threshold
-    # payloads have no score row)
-    return keyed.join(payload_scores, ["h_a", "h_b"]).select(
-        "uid_a", "uid_b", "score"
     )
 
 

@@ -15,19 +15,15 @@ import pathlib
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from belb_spark.checkpoint import CheckpointStore, config_signature, input_fingerprint
 from belb_spark.operators.blocking import BlockingConfig, block_keys
 from belb_spark.operators.clustering import connected_components
 from belb_spark.operators.evaluate import metrics_dict, pairwise_metrics
-from belb_spark.operators.normalize import normalize
-from belb_spark.operators.pairs import (
-    PairsConfig,
-    candidate_pairs,
-    exact_duplicate_edges,
-)
+from belb_spark.operators.normalize import exact_anchor, normalize
+from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score_pairs
 
 
@@ -50,10 +46,10 @@ class ERConfig:
 
 # bump when a stage's checkpoint schema changes (columns added/removed/
 # retyped): a resume against parquet written by another version must rebuild
-# rather than fail mid-pipeline on a missing column. v2 = binary content key
-# h in 01_normalize + pre-keyed h_a/h_b in 03_candidates (r4). v3 = pair
-# stats are committed in the 03_candidates manifest.
-_STAGE_SCHEMA_VERSION = 3
+# rather than fail mid-pipeline on a missing column. v3 = pair stats are
+# committed in the 03_candidates manifest. v4 = 01_normalize stores the
+# exact-duplicate anchor and 02–04 hold representatives only.
+_STAGE_SCHEMA_VERSION = 4
 
 
 @dataclass
@@ -73,8 +69,8 @@ def run_pipeline(
 ) -> ERResult:
     # the resume signature covers config, input identity AND the stage
     # schema version: re-running the same checkpoint_dir over changed input
-    # (ADVICE r1) or across a stage-schema change (r4: candidates carry
-    # binary h_a/h_b) rebuilds instead of reusing incompatible parquet
+    # (ADVICE r1) or across a stage-schema change rebuilds instead of
+    # reusing incompatible parquet
     sig = config_signature(
         {
             "cfg": dataclasses.asdict(cfg),
@@ -117,35 +113,46 @@ def _run_pipeline_body(
     # straggler split costs 1/3 wave.
     repos_in = repos.repartition(3 * spark.sparkContext.defaultParallelism)
     # content lives ONLY here — uid-addressable for the sha checks. The 01
-    # checkpoint stores (uid, content_sha, norm_tokens): content was ~half
-    # its bytes and nothing downstream needs it (VERDICT r2 #1).
+    # checkpoint stores (uid, content_sha, norm_tokens, anchor): content was
+    # ~half its bytes and nothing downstream needs it (VERDICT r2 #1).
     from belb_spark.operators.normalize import assign_uids
 
     repos_uid = assign_uids(repos_in)
 
-    # 1. normalize (content untouched; sha carried). norm_text/token_set are
-    # derived again after read — cheap JVM expressions, not worth the bytes.
-    # The content key h IS stored: scoring's slim shuffle needs it on three
-    # branches (both pair sides + the payload reps), so computing the
-    # md5(to_json(tokens)) here once beats re-deriving it 3× per run. Stored
-    # as BINARY(16), not hex — it rides the block explode and the candidate
-    # pair table (r4: pairs ship pre-keyed so the scoring stage loses both
-    # uid→h translation shuffles), and 16 bytes beat 32-char strings on
-    # every one of those shuffles.
+    # 1. normalize (content untouched; sha carried) + exact-duplicate
+    # contraction. Every block key and every score is a pure function of
+    # norm_tokens, so rows with one token sequence are one entity to every
+    # later stage: each row stores its anchor (min uid of its token
+    # sequence) and only representatives (uid == anchor) enter 02–04. The
+    # representative count rides the write action as an Observation and
+    # commits in the manifest. norm_text/token_set are derived again after
+    # read — cheap JVM expressions, not worth the bytes.
+    norm_obs = Observation("normalize")
+
+    def build_normalized() -> DataFrame:
+        return (
+            exact_anchor(
+                normalize(repos_in, synonym_dict).select(
+                    "uid", "content_sha", "norm_tokens"
+                )
+            )
+            .observe(
+                norm_obs,
+                F.count(F.when(F.col("uid") == F.col("anchor"), 1)).alias(
+                    "representatives"
+                ),
+            )
+        )
+
     norm_res = store.run(
-        "01_normalize",
-        sig,
-        lambda: normalize(repos_in, synonym_dict).select(
-            "uid",
-            "content_sha",
-            "norm_tokens",
-            F.unhex(F.md5(F.to_json("norm_tokens"))).alias("h"),
-        ),
+        "01_normalize", sig, build_normalized, metrics=lambda: dict(norm_obs.get)
     )
     norm = norm_res.df.withColumn(
         "norm_text", F.array_join("norm_tokens", " ")
     ).withColumn("token_set", F.array_sort(F.array_distinct("norm_tokens")))
+    reps = norm.filter(F.col("uid") == F.col("anchor"))
     metrics["rows_in"] = norm_res.rows
+    metrics["exact_dup_edges"] = norm_res.rows - norm_res.metrics["representatives"]
 
     def _sha_violations(df: DataFrame) -> int:
         joined = repos_uid.select("uid", "content").join(
@@ -157,73 +164,36 @@ def _run_pipeline_body(
 
     sha_stage1 = checks.submit(_sha_violations, norm)
 
-    # 2. blocking keys — checkpointed. (Measured alternative at xxl: fusing
-    # blocks into the candidates stage saved one stage floor but cost MORE
-    # in the fused window tower — the compact parquet round-trip feeds the
-    # self-join branches cheaper than re-flowing the live minhash, 52.5s vs
-    # 45.8s for 02+03 at local[16]; keep the two-stage shape.)
-    blocks_res = store.run("02_blocks", sig, lambda: block_keys(norm, cfg.blocking))
-    blocks = blocks_res.df
+    # 2. blocking keys of the representatives — checkpointed. (Measured
+    # alternative at xxl: fusing blocks into the candidates stage saved one
+    # stage floor but cost MORE in the fused window tower — the compact
+    # parquet round-trip feeds the self-join branches cheaper than
+    # re-flowing the live minhash, 52.5s vs 45.8s for 02+03 at local[16];
+    # keep the two-stage shape.)
+    blocks_res = store.run("02_blocks", sig, lambda: block_keys(reps, cfg.blocking))
     metrics["block_rows"] = blocks_res.rows
 
-    # candidate pairs (+ exact-dup edges, logged drop stats).
-    # One checkpoint for both pair families: block candidates (to be scored)
-    # and ready exact-duplicate star edges (score 1.0 by construction).
-    # The no-silent-caps accounting (emitted vs theoretical, max block,
-    # block rows) rides the candidates action as a Spark Observation — zero
-    # extra jobs, zero re-evaluation of the live block-key derivation.
-    from pyspark.sql import Observation
-
-    obs = Observation("pair_stats")
-
-    def build_candidates() -> DataFrame:
-        blk = candidate_pairs(blocks, cfg.pairs, observe=obs).withColumn(
-            "src", F.lit("block")
-        )
-        # exact rows are never scored — null content keys keep the union
-        # schema aligned with the pre-keyed block pairs
-        exact = (
-            exact_duplicate_edges(norm)
-            .withColumn("src", F.lit("exact"))
-            .withColumn("h_a", F.lit(None).cast("binary"))
-            .withColumn("h_b", F.lit(None).cast("binary"))
-        )
-        # a pair that is an exact duplicate needs no scoring — keep the
-        # exact row, drop the block duplicate
-        blk_only = blk.join(
-            exact.select("uid_a", "uid_b"), ["uid_a", "uid_b"], "left_anti"
-        )
-        return blk_only.unionByName(exact)
-
-    # partitioned by src so per-family row counts come from the manifest
-    # (parquet footers). The observed stats are read once the write action
-    # has run and commit in the same manifest, so a resumed run reports
-    # them without recomputing.
+    # 3. candidate pairs between representatives. The no-silent-caps
+    # accounting (emitted vs theoretical, max block, block rows) rides the
+    # candidates action as a Spark Observation — zero extra jobs — and
+    # commits in the 03_candidates manifest, so a resumed run reports it
+    # without recomputing.
+    pair_obs = Observation("pair_stats")
     cand_res = store.run(
         "03_candidates",
         sig,
-        build_candidates,
-        metrics=lambda: dict(obs.get),
-        partition_by=["src"],
+        lambda: candidate_pairs(blocks_res.df, cfg.pairs, observe=pair_obs),
+        metrics=lambda: dict(pair_obs.get),
     )
     stats = cand_res.metrics
     metrics["pairs_theoretical"] = int(stats["theoretical"] or 0)
     metrics["pairs_capped_estimate"] = int(stats["emitted"] or 0)
     metrics["max_block_size"] = int(stats["max_block"] or 0)
+    metrics["candidate_pairs"] = cand_res.rows
 
-    exact_edges = cand_res.df.filter(F.col("src") == "exact").select("uid_a", "uid_b")
-    # pre-keyed (h_a/h_b rode the self-join): score_pairs skips both uid→h
-    # translation shuffles
-    block_pairs = cand_res.df.filter(F.col("src") == "block").select(
-        "uid_a", "uid_b", "h_a", "h_b"
-    )
-    n_exact = cand_res.partition_rows.get("src=exact", 0)
-    metrics["exact_dup_edges"] = n_exact
-    metrics["candidate_pairs"] = cand_res.rows - n_exact
-
-    # 4. scoring (block candidates only)
+    # 4. scoring
     scores_res = store.run(
-        "04_scores", sig, lambda: score_pairs(block_pairs, norm, cfg.scoring)
+        "04_scores", sig, lambda: score_pairs(cand_res.df, reps, cfg.scoring)
     )
     metrics["pairs_scored"] = scores_res.rows
     metrics["scoring_wall_sec"] = scores_res.wall_sec
@@ -232,42 +202,38 @@ def _run_pipeline_body(
     if cfg.tune_on_dev and labeled_pairs is not None:
         from belb_spark.operators.evaluate import tune_threshold
 
-        threshold, dev_f1s = tune_threshold(scores_res.df, labeled_pairs, "dev")
+        # labeled pairs are priced on their representatives; a pair inside
+        # one exact-duplicate group is identical content and scores 1.0
+        anc = norm.select("uid", "anchor")
+        lp = (
+            labeled_pairs.join(anc.toDF("uid_a", "anc_a"), "uid_a")
+            .join(anc.toDF("uid_b", "anc_b"), "uid_b")
+            .select(
+                F.least("anc_a", "anc_b").alias("uid_a"),
+                F.greatest("anc_a", "anc_b").alias("uid_b"),
+                "is_match",
+                "split",
+            )
+        )
+        same = reps.select(
+            F.col("uid").alias("uid_a"),
+            F.col("uid").alias("uid_b"),
+            F.lit(1.0).alias("score"),
+        )
+        threshold, dev_f1s = tune_threshold(scores_res.df.unionByName(same), lp, "dev")
         metrics["tuned_threshold"] = threshold
         metrics["dev_f1_at_tuned"] = dev_f1s[threshold]
 
-    # 5. edges + connected components to fixpoint.
-    # Exact-duplicate groups are pre-contracted to their anchor (they are
-    # already star edges); CC runs on the contracted graph — typically far
-    # smaller — then membership expands back through the anchor map.
+    # 5. connected components to fixpoint over the representatives, then
+    # every row takes its anchor's cluster. Anchors are group minima, so the
+    # component minimum over representatives is the minimum over all rows.
     def build_assignment() -> DataFrame:
-        scored_edges = edges_from_scores(scores_res.df, threshold)
-        anchor_map = exact_edges.select(
-            F.col("uid_b").alias("uid"), F.col("uid_a").alias("anchor")
+        cc = connected_components(
+            edges_from_scores(scores_res.df, threshold),
+            nodes=reps.select("uid"),
+            max_iter=cfg.cc_max_iter,
         )
-        node_anchor = (
-            norm.select("uid")
-            .join(anchor_map, "uid", "left")
-            .select("uid", F.coalesce("anchor", F.col("uid")).alias("anchor"))
-        )
-        a_of = node_anchor.select(
-            F.col("uid").alias("uid_a"), F.col("anchor").alias("anchor_a")
-        )
-        b_of = node_anchor.select(
-            F.col("uid").alias("uid_b"), F.col("anchor").alias("anchor_b")
-        )
-        contracted = (
-            scored_edges.join(a_of, "uid_a")
-            .join(b_of, "uid_b")
-            .select(
-                F.least("anchor_a", "anchor_b").alias("uid_a"),
-                F.greatest("anchor_a", "anchor_b").alias("uid_b"),
-            )
-            .filter(F.col("uid_a") != F.col("uid_b"))
-        )
-        anchors = node_anchor.select(F.col("anchor").alias("uid")).distinct()
-        cc = connected_components(contracted, nodes=anchors, max_iter=cfg.cc_max_iter)
-        return node_anchor.join(
+        return norm.select("uid", "anchor").join(
             cc.withColumnRenamed("uid", "anchor"), "anchor"
         ).select("uid", "cluster")
 

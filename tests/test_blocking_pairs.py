@@ -2,13 +2,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from belb_spark.operators.blocking import BlockingConfig, block_keys
-from belb_spark.operators.normalize import normalize
-from belb_spark.operators.pairs import (
-    PairsConfig,
-    candidate_pairs,
-    exact_duplicate_edges,
-    pair_stats,
-)
+from belb_spark.operators.normalize import exact_anchor, normalize
+from belb_spark.operators.pairs import PairsConfig, candidate_pairs, pair_stats
 
 
 @pytest.fixture(scope="module")
@@ -34,8 +29,9 @@ def test_key_families_present(blocks):
             F.split("block_key", ":").getItem(0).alias("fam")
         ).distinct().collect()
     }
-    assert "exact" in fams and "pfx" in fams
-    assert any(f.startswith("mh") for f in fams)
+    # exactly two families: exact duplicates are contracted at normalize
+    mh = {f for f in fams if f.startswith("mh")}
+    assert mh and fams - mh == {"pfx"}
 
 
 def test_positive_pairs_covered_by_blocking(blocks, tiny_spark):
@@ -81,13 +77,16 @@ def test_salted_strategy_emits_same_pairs(blocks):
     assert salted.exceptAll(plain).count() == 0
 
 
-def test_exact_duplicate_edges_star_shape(norm):
-    edges = exact_duplicate_edges(norm)
-    assert edges.filter(F.col("uid_a") >= F.col("uid_b")).count() == 0
-    # anchor is the min uid of its dup group: anchors never appear as uid_b
-    a_set = {r["uid_a"] for r in edges.select("uid_a").distinct().collect()}
-    b_set = {r["uid_b"] for r in edges.select("uid_b").distinct().collect()}
-    assert not (a_set & b_set)
+def test_exact_duplicates_contract_to_min_uid_anchor(spark):
+    """exact_anchor keys on the token SEQUENCE: rows 1 and 3 share anchor 1,
+    while row 2 shares their norm_text but not their tokens (multi-word
+    canonical symbols, ADVICE r2) and is its own representative. TINY is
+    checked on a pipeline run's checkpoints in
+    test_e2e.py::test_blocks_hold_only_anchors."""
+    rows = [(1, ["a b", "c"]), (2, ["a", "b c"]), (3, ["a b", "c"])]
+    df = spark.createDataFrame(rows, "uid long, norm_tokens array<string>")
+    got = {r["uid"]: r["anchor"] for r in exact_anchor(df).collect()}
+    assert got == {1: 1, 2: 2, 3: 1}
 
 
 def test_within_salt_hot_tier_recovers_member_pairs(spark):

@@ -66,6 +66,16 @@ def test_star_input_jobs_budget(spark):
     assert jobs_loop <= 14, f"CC loop launched {jobs_loop} driver jobs (>14)"
 
 
+def test_exhausted_round_budget_raises(spark):
+    """A chain too long for the round budget must fail loudly rather than
+    return labels from a non-converged edge set."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(1, 200)], "uid_a long, uid_b long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=1"):
+        connected_components(edges, max_iter=1)
+
+
 @pytest.mark.parametrize(
     "master, reliable",
     [

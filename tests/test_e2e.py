@@ -109,23 +109,51 @@ def test_resume_skips_committed_stages(spark, tiny_spark, ckpt_dir, result):
 def test_pair_ledgers_agree(spark, result, ckpt_dir):
     """The pipeline's Observation ledger (committed with 03_candidates) and
     the per-block pairs.pair_stats table price the cap identically over
-    the same committed non-exact blocks."""
-    from belb_spark.operators.pairs import PairsConfig, pair_stats
+    the same committed blocks — at the default config, and at a tighter
+    one where the cap binds on TINY."""
+    from pyspark.sql import Observation
 
-    blocks = spark.read.parquet(f"{ckpt_dir}/02_blocks").filter(
-        ~F.col("block_key").startswith("exact:")
-    )
-    agg = pair_stats(blocks, PairsConfig()).agg(
-        F.sum("pairs_theoretical").alias("theoretical"),
-        F.sum("pairs_emitted").alias("emitted"),
-        F.max("block_size").alias("max_block"),
-    ).first()
+    from belb_spark.operators.pairs import PairsConfig, candidate_pairs, pair_stats
+
+    blocks = spark.read.parquet(f"{ckpt_dir}/02_blocks")
+
+    def ledger(cfg):
+        agg = pair_stats(blocks, cfg).agg(
+            F.sum("pairs_theoretical").alias("theoretical"),
+            F.sum("pairs_emitted").alias("emitted"),
+            F.max("block_size").alias("max_block"),
+        ).first()
+        return agg["theoretical"], agg["emitted"], agg["max_block"]
+
     assert (
         result.metrics["pairs_theoretical"],
         result.metrics["pairs_capped_estimate"],
         result.metrics["max_block_size"],
-    ) == (agg["theoretical"], agg["emitted"], agg["max_block"])
-    assert agg["emitted"] < agg["theoretical"]  # the cap binds on TINY
+    ) == ledger(PairsConfig())
+
+    tight = PairsConfig(full_join_max=16, anchor_rank=4)
+    obs = Observation("tight_pair_stats")
+    candidate_pairs(blocks, tight, observe=obs).count()
+    seen = obs.get
+    assert (seen["theoretical"], seen["emitted"], seen["max_block"]) == ledger(tight)
+    assert seen["emitted"] < seen["theoretical"]  # the cap binds
+
+
+def test_blocks_hold_only_anchors(spark, result, ckpt_dir):
+    """Exact duplicates are contracted at normalize: the committed anchor
+    is the min uid of each token sequence, and exactly the anchors (one
+    row per token sequence) are blocked."""
+    norm = spark.read.parquet(f"{ckpt_dir}/01_normalize").collect()
+    expected: dict[tuple, int] = {}
+    for r in norm:
+        key = tuple(r["norm_tokens"])
+        expected[key] = min(expected.get(key, r["uid"]), r["uid"])
+    assert all(r["anchor"] == expected[tuple(r["norm_tokens"])] for r in norm)
+    blocks = spark.read.parquet(f"{ckpt_dir}/02_blocks")
+    blocked = {r["uid"] for r in blocks.select("uid").distinct().collect()}
+    assert blocked == set(expected.values())
+    assert 0 < result.metrics["exact_dup_edges"] == len(norm) - len(expected)
+
 
 def test_partial_resume_after_invalidation(spark, tiny_spark, ckpt_dir, result_rows):
     """Kill-after-stage-N simulation: only the invalidated stage rebuilds;

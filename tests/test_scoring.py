@@ -1,10 +1,8 @@
-"""score_pairs content-hash keying (ADVICE r2).
+"""score_pairs scores the token sequences, not their space-join (ADVICE r2).
 
-The slim scoring shuffle keys payloads by a content hash and scores one
-representative per distinct key. The key must be the TOKEN SEQUENCE, not its
-space-join: a canonical dictionary symbol containing whitespace makes two
-different tokenizations share norm_text — under the old md5(norm_text) key
-one of them was silently scored with the other's token_set.
+A canonical dictionary symbol containing whitespace makes two different
+tokenizations share norm_text. Each must be scored with its own token_set:
+an earlier md5(norm_text) payload key silently scored one with the other's.
 """
 
 from __future__ import annotations
