@@ -22,6 +22,10 @@ Jaro-Winkler mirrors the rapidfuzz/textdistance definition (prefix weight
 0.1, max prefix 4). belb itself uses Levenshtein.ratio for its surface-form
 stats (belb/scripts/stats.py:203-216); the combined score here plays that
 role in the scoring stage.
+
+The UDF calls :func:`belb_spark.functions.pyworker.drop_archive_finders`
+first, so a reused worker's next task does not re-read pyspark.zip and the
+spark-core jar (~0.17 s per task, more than the kernels on small batches).
 """
 
 from __future__ import annotations
@@ -34,6 +38,8 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType
+
+from belb_spark.functions.pyworker import drop_archive_finders
 
 
 # ---------------------------------------------------------------- JVM tier
@@ -444,6 +450,7 @@ def make_rich_score_udf(
 
     @F.pandas_udf(DoubleType())
     def rich_score(a: pd.Series, b: pd.Series) -> pd.Series:
+        drop_archive_finders()
         return rich_score_batch(a, b, w_jw, w_lev, w_cos, clip)
 
     return rich_score

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from belb_spark.functions.pyworker import drop_archive_finders
+
 
 @dataclass(frozen=True)
 class BlockingConfig:
@@ -67,6 +69,7 @@ def make_band_keys_udf(cfg: BlockingConfig):
     A, B = _affine_consts(perms)
 
     def _band_keys(tokens: pd.Series) -> pd.Series:
+        drop_archive_finders()
         out = []
         for ts in tokens:
             n = len(ts)

@@ -36,6 +36,8 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from belb_spark.functions.pyworker import drop_archive_finders
+
 MEDIA_SCHEMA = StructType(
     [
         StructField("media_id", LongType()),
@@ -210,6 +212,7 @@ def extract_features(
     import hashlib
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         for pdf in it:
             if fake_decode:
                 feats = pdf["payload"].map(_fake_decode_features)

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
+from belb_spark.functions.pyworker import drop_archive_finders
+
 
 def assign_uids(repos: DataFrame) -> DataFrame:
     """Deterministic uid = row_number over the natural key (repo, path,
@@ -149,6 +151,7 @@ def normalize(repos: DataFrame, synonym_dict: DataFrame | None = None) -> DataFr
     cmap = canonical_token_map(synonym_dict) if synonym_dict is not None else {}
 
     def _tok_canon(content: pd.Series) -> pd.Series:
+        drop_archive_finders()
         import re
 
         # tokens = maximal runs of [a-z0-9_] over the lowercased content;

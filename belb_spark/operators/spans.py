@@ -36,6 +36,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from belb_spark.functions.pyworker import drop_archive_finders
+
 MARK_START = "[MS] "
 MARK_END = " [ME]"
 
@@ -97,6 +99,7 @@ def clean_intra_word_spans(docs: DataFrame, spans: DataFrame) -> DataFrame:
     """
 
     def rewrite(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         text = pdf["text"].iloc[0]
         has = pdf["span_id"].notna()
         rows = pdf[has]
@@ -151,6 +154,7 @@ def mark_spans(
     """
 
     def rewrite(pdf: pd.DataFrame) -> pd.DataFrame:
+        drop_archive_finders()
         text = pdf["text"].iloc[0]
         rows = pdf[pdf["span_id"].notna()]
         # edits: (pos, tiebreak, text). tiebreak: end markers first (0),
@@ -301,6 +305,7 @@ def split_sentences(docs: DataFrame, spans: DataFrame | None = None) -> DataFram
     # applyInPandas (one pandas frame per group: ~100µs × n_docs of pure
     # overhead, plus a groupBy shuffle)
     def segment(batches):
+        drop_archive_finders()
         for pdf in batches:
             out: list[tuple] = []
             for doc_id, text, sp in zip(pdf["doc_id"], pdf["text"], pdf["_spans"]):

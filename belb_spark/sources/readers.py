@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from belb_spark.functions.pyworker import drop_archive_finders
+
 
 def read_tsv(
     spark: SparkSession,
@@ -116,6 +118,7 @@ def read_tar_members(
     Output: (archive, member, text)."""
 
     def parse(iterator):
+        drop_archive_finders()
         import io
         import tarfile
 
@@ -161,6 +164,7 @@ def read_bioc(spark: SparkSession, path: str, fmt: str = "json") -> DataFrame:
     """
 
     def parse(iterator):
+        drop_archive_finders()
         import json as _json
         import xml.etree.ElementTree as ET
 

@@ -32,6 +32,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from belb_spark.functions.pyworker import drop_archive_finders
+
 SESSION_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
@@ -72,6 +74,7 @@ def sessionize_stream(
         pdfs: Iterable[pd.DataFrame],
         state: GroupState,
     ) -> Iterator[pd.DataFrame]:
+        drop_archive_finders()
         (user_id,) = key
         chunks = list(pdfs)
         rows = (

@@ -177,6 +177,31 @@ def test_partial_resume_after_invalidation(spark, tiny_spark, ckpt_dir, result_r
     assert got == result_rows
 
 
+def test_resume_after_kill_before_manifest(spark, tiny_spark, ckpt_dir, result_rows):
+    """A run killed between the 03 Parquet write and its manifest leaves
+    data but no manifest: the rerun resumes 01/02, rebuilds 03 over the
+    leftover files and produces the same clusters."""
+    ckpt = pathlib.Path(ckpt_dir)
+    (ckpt / "03_candidates.manifest.json").unlink()
+    stray = ckpt / "03_candidates" / "part-99999-killed.snappy.parquet"
+    stray.write_bytes(b"torn write")
+    res = run_pipeline(
+        spark,
+        tiny_spark["repos"],
+        tiny_spark["synonym_dict"],
+        labeled_pairs=None,
+        checkpoint_dir=ckpt_dir,
+    )
+    by_stage = {s["stage"]: s["resumed"] for s in res.stages}
+    assert by_stage["01_normalize"] is True
+    assert by_stage["02_blocks"] is True
+    assert by_stage["03_candidates"] is False
+    assert not stray.exists()
+    assert (ckpt / "03_candidates.manifest.json").exists()
+    got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
+    assert got == result_rows
+
+
 def test_metrics_table_failure_warns(spark, tiny_spark, ckpt_dir, result, monkeypatch):
     """A failed metrics.parquet write is reported as a RuntimeWarning and
     metrics.json is still written."""
