@@ -25,6 +25,7 @@ from belb_spark.operators.evaluate import metrics_dict, pairwise_metrics
 from belb_spark.operators.normalize import exact_anchor, normalize
 from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score_pairs
+from belb_spark.session import codegen_compiles
 
 
 # One physical path per stage: every stage checkpoints synchronously (build →
@@ -107,6 +108,7 @@ def _run_pipeline_body(
     spark, repos, labeled_pairs, checkpoint_dir, cfg, sig, metrics, store,
     checks, synonym_dict,
 ) -> ERResult:
+    compiles_at_start = codegen_compiles(spark)
     # explicit partitioning at ingest, before any expression-heavy stage: a
     # single-file local parquet source otherwise yields ONE input split and
     # serializes stage 01. 3 waves per core, matching shuffle partitions: a
@@ -259,6 +261,9 @@ def _run_pipeline_body(
     violations = sha_final.result()
     assert violations == 0, f"sha256 invariant broken end-to-end: {violations}"
     checks.shutdown()
+    # generated classes compiled during the call (0 on a warm run). The
+    # counter is JVM-wide, so concurrent queries in the same JVM add to it.
+    metrics["codegen_compiles"] = codegen_compiles(spark) - compiles_at_start
 
     stage_log = store.metrics_table()
     (pathlib.Path(checkpoint_dir) / "metrics.json").write_text(

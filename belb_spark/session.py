@@ -4,7 +4,8 @@ One place to configure the engine so tests, bench.py and spark-submit jobs
 agree. Scale knobs follow SURVEY.md §7.4: shuffle partitions proportional to
 cores so local[8] vs local[32] is an honest N-vs-4N comparison; AQE enabled
 (incl. skew-join splitting) because the within-block self-join is skewed by
-construction; Arrow enabled for the vectorized scoring UDF.
+construction; Arrow enabled for the vectorized scoring UDF; the codegen
+class cache sized to the engine's working set, so warm runs compile nothing.
 """
 
 from __future__ import annotations
@@ -62,6 +63,13 @@ def get_spark(
         # reliable-checkpoint files (dedup pair materialization, CC rounds)
         # are GC'd with their RDDs instead of accumulating on disk
         .config("spark.cleaner.referenceTracking.cleanCheckpoints", "true")
+        # generated classes are cached per (context class loader, source) in
+        # an LRU of 100 entries by default. One TINY ER run needs 157 keys,
+        # one perfbench `queries` pass 141 and all queries() entries 709, so
+        # at 100 every warm run recompiled ~150 classes (~1 s). A resident
+        # entry costs ~28 KB of heap: a full cache is ~29 MB. Static conf,
+        # read once per JVM: it must be set on the JVM's first session.
+        .config("spark.sql.codegen.cache.maxEntries", "1024")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -77,3 +85,10 @@ def ensure_checkpoint_dir(spark: SparkSession) -> None:
         import tempfile
 
         sc.setCheckpointDir(tempfile.mkdtemp(prefix="belb_spark_rdd_ckpt_"))
+
+
+def codegen_compiles(spark: SparkSession) -> int:
+    """Classes Janino has compiled so far. The counter is JVM-wide: it counts
+    every session's and every thread's compiles, not one query's."""
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    return int(metrics.METRIC_COMPILATION_TIME().getCount())

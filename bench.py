@@ -89,6 +89,8 @@ def run_er(spark, scale: str) -> dict:
         "pairs_per_sec": round(pairs_total / max(wall, 1e-9), 1),
         "rows_per_sec": round(m["rows_in"] / max(wall, 1e-9), 1),
         "test_f1": m.get("eval", {}).get("test", {}).get("f1"),
+        # JVM-wide count of classes compiled during the run
+        "codegen_compiles": m["codegen_compiles"],
     }
 
 

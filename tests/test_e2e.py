@@ -42,6 +42,27 @@ def result_rows(result):
     return sorted((r["uid"], r["cluster"]) for r in result.assignment.collect())
 
 
+def test_warm_rerun_compiles_nothing(spark, tiny_spark, result_rows):
+    """A second run in the same session, into a fresh checkpoint dir,
+    rebuilds every stage from classes the first run compiled (the codegen
+    cache holds the pipeline's working set) and reproduces its clusters."""
+    d = tempfile.mkdtemp(prefix="belb_e2e_warm_")
+    try:
+        res = run_pipeline(
+            spark,
+            tiny_spark["repos"],
+            tiny_spark["synonym_dict"],
+            tiny_spark["labeled_pairs"],
+            checkpoint_dir=d,
+        )
+        got = sorted((r["uid"], r["cluster"]) for r in res.assignment.collect())
+    finally:
+        shutil.rmtree(d, ignore_errors=True)
+    assert not any(s["resumed"] for s in res.stages), res.stages
+    assert res.metrics["codegen_compiles"] == 0
+    assert got == result_rows
+
+
 def test_f1_target(result):
     ev = result.metrics["eval"]
     assert ev["test"]["f1"] >= 0.99, ev
