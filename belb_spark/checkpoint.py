@@ -30,6 +30,8 @@ from typing import Any, Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
+_DESCRIPTION = "spark.job.description"
+
 
 def config_signature(obj: Any) -> str:
     """Stable md5 of any jsonable config (dataclasses included)."""
@@ -124,10 +126,18 @@ class CheckpointStore:
             manifest_path.unlink()
             shutil.rmtree(data_dir, ignore_errors=True)
 
-        df = build()
-        shutil.rmtree(data_dir, ignore_errors=True)
-        df.write.mode("overwrite").parquet(str(data_dir))
-        out = self.spark.read.parquet(str(data_dir))
+        # the stage's jobs carry its name in the event log. Only the
+        # description: the job group belongs to whoever calls the pipeline
+        sc = self.spark.sparkContext
+        prev = sc.getLocalProperty(_DESCRIPTION)
+        sc.setJobDescription(name)
+        try:
+            df = build()
+            shutil.rmtree(data_dir, ignore_errors=True)
+            df.write.mode("overwrite").parquet(str(data_dir))
+            out = self.spark.read.parquet(str(data_dir))
+        finally:
+            sc.setLocalProperty(_DESCRIPTION, prev)
         # row counts + per-partition lineage straight from parquet footers —
         # no extra Spark job per stage
         import pyarrow.parquet as pq

@@ -226,18 +226,19 @@ def _run_pipeline_body(
         metrics["tuned_threshold"] = threshold
         metrics["dev_f1_at_tuned"] = dev_f1s[threshold]
 
-    # 5. connected components to fixpoint over the representatives, then
-    # every row takes its anchor's cluster. Anchors are group minima, so the
-    # component minimum over representatives is the minimum over all rows.
+    # 5. connected components over the representatives' edges, then every
+    # row takes its anchor's cluster in one left join. Anchors are group
+    # minima, so the component minimum over representatives is the minimum
+    # over all rows; an anchor with no edge is its own cluster.
     def build_assignment() -> DataFrame:
         cc = connected_components(
-            edges_from_scores(scores_res.df, threshold),
-            nodes=reps.select("uid"),
-            max_iter=cfg.cc_max_iter,
+            edges_from_scores(scores_res.df, threshold), max_iter=cfg.cc_max_iter
         )
-        return norm.select("uid", "anchor").join(
-            cc.withColumnRenamed("uid", "anchor"), "anchor"
-        ).select("uid", "cluster")
+        return (
+            norm.select("uid", "anchor")
+            .join(cc.withColumnRenamed("uid", "anchor"), "anchor", "left")
+            .select("uid", F.coalesce("cluster", "anchor").alias("cluster"))
+        )
 
     assign_res = store.run("05_clusters", sig, build_assignment)
     assignment = assign_res.df

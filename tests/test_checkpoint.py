@@ -39,3 +39,25 @@ def test_failed_metrics_leave_no_manifest_and_rebuild(spark, tmp_path):
     )
     assert again.resumed and len(builds) == 2
     assert again.metrics == {"n": 10}
+
+
+@pytest.mark.parametrize("outer", [None, "caller's description"])
+def test_stage_jobs_carry_the_stage_name(spark, tmp_path, outer):
+    """A stage's build and write run under the stage name as the Spark job
+    description; the caller's description comes back afterwards, and the
+    job group is left alone."""
+    from belb_spark.checkpoint import CheckpointStore
+
+    sc = spark.sparkContext
+    sc.setLocalProperty("spark.job.description", outer)
+
+    def build():
+        assert sc.getLocalProperty("spark.job.description") == "02_blocks"
+        return spark.range(10)
+
+    try:
+        CheckpointStore(spark, str(tmp_path)).run("02_blocks", "sig", build)
+        assert sc.getLocalProperty("spark.job.description") == outer
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+    finally:
+        sc.setLocalProperty("spark.job.description", None)
