@@ -933,17 +933,17 @@ def q_uid_dense_scalable(spark, sf_dir):
 
 
 def q_pairs_within_salt(spark, sf_dir):
-    """Hot-tier recall mode (pairs.candidate_pairs_salted hot_tier=
+    """Hot-tier recall mode (pairs.candidate_pairs hot_tier=
     'within_salt', VERDICT r3 #3 / r4 #6): language blocks are all hot at
     full_join_max=16, and rows_per_salt is set above every block size so
     the within-salt tier must recover EXACTLY the exhaustive within-block
     pair set — which is what the oracle computes."""
-    from belb_spark.operators.pairs import PairsConfig, candidate_pairs_salted
+    from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 
     blocks = _docs(spark, sf_dir).select(
         F.col("doc_id").alias("uid"), F.col("lang").alias("block_key")
     )
-    out = candidate_pairs_salted(
+    out = candidate_pairs(
         blocks,
         cfg=PairsConfig(full_join_max=16, anchor_rank=4),
         rows_per_salt=1_000_000,

@@ -4,12 +4,13 @@ Training-data-pipeline dedup family, each expressed Spark-first:
 
 - exact dedup — hash-groupBy (belb A7 ``dropDuplicates`` analogue,
   belb/preprocessing/data.py:472-491)
-- MinHash-LSH near-dup — shingle → minhash → band → bucket-join. Two hash
-  backends: ``xxhash64`` (fast JVM path) and ``md5`` (portable path whose
-  signature is reproducible in any engine — used for oracle checks; min over
-  fixed-width lowercase hex == numeric min, so no integer casts are needed
-  anywhere). The ER pipeline's blocking uses neither: its band keys come
-  from a blake2b Arrow UDF (blocking.py)
+- MinHash-LSH near-dup — shingle → minhash → band → bucket-join. The
+  signature is md5-based (:func:`md5_minhash_sig`), so it is reproducible
+  in any engine and the DuckDB oracles can check it; min over fixed-width
+  lowercase hex == numeric min, so no integer casts are needed anywhere.
+  xxhash64 only compresses the bucket keys fed to the pair builder
+  (:func:`_bucket_pairs`). The ER pipeline's blocking uses neither: its
+  band keys come from a blake2b Arrow UDF (blocking.py)
 - SimHash — bitwise majority over token hashes, built from md5 nibbles so it
   is engine-portable too
 - n-gram Jaccard — shingle-set similarity over candidate pairs
@@ -19,7 +20,7 @@ All operators are pure DataFrame expressions (no UDFs): shingling uses
 ``transform``; only ``explode`` materializes rows.
 
 Skew defense (shared with the ER pipeline): the band/shingle bucket
-self-joins route through :func:`pairs.candidate_pairs_salted`, so a hot
+self-joins route through :func:`pairs.candidate_pairs`, so a hot
 bucket (a boilerplate 5-gram shared by 10^5 files, a band key of a vendored
 blob) is anchor-capped AND salted across reducers instead of going O(n²) on
 one key. Buckets up to ``PairsConfig.full_join_max`` emit ALL pairs (the
@@ -51,7 +52,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from belb_spark.operators.blocking import shingles_col
-from belb_spark.operators.pairs import PairsConfig, candidate_pairs_salted, pair_stats
+from belb_spark.operators.pairs import PairsConfig, candidate_pairs, pair_stats
 
 HIGH_NIBBLE = ["8", "9", "a", "b", "c", "d", "e", "f"]  # hex digits with bit3 set
 
@@ -87,10 +88,10 @@ def md5_minhash_sig(shingles: Column, perms: int) -> list[Column]:
 def _bucket_pairs(exploded: DataFrame, cfg: PairsConfig) -> DataFrame:
     """(id, bucket_key) -> capped+salted candidate (id_a, id_b).
 
-    The same physical strategy as the ER pipeline's within-block self-join
-    (pairs.py): all pairs for buckets ≤ cfg.full_join_max, anchor→member
-    pairs (replicated-anchor salting) above — a hot bucket cannot emit O(n²)
-    pairs onto one reducer.
+    The ER pipeline's within-block pair builder
+    (:func:`pairs.candidate_pairs`): all pairs for buckets ≤
+    cfg.full_join_max, anchor→member pairs (replicated-anchor salting)
+    above — a hot bucket cannot emit O(n²) pairs onto one reducer.
 
     Bucket keys are xxhash64-compressed to 8 bytes before the builder: the
     window sort and both shuffles compare longs instead of ~30-70 char
@@ -105,7 +106,7 @@ def _bucket_pairs(exploded: DataFrame, cfg: PairsConfig) -> DataFrame:
         F.col(exploded.columns[0]).alias("uid"),
         F.xxhash64(F.col(exploded.columns[1])).alias("block_key"),
     )
-    return candidate_pairs_salted(blocks, cfg).select(
+    return candidate_pairs(blocks, cfg).select(
         F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b")
     )
 

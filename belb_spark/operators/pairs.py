@@ -11,13 +11,16 @@ pairs. Two structural defenses:
    scored; clustering expands the result through the anchor. A vendored
    file duplicated 10^5× is one row here.
 
-2. **Anchor-capped join.** Rows are ranked by uid within each block; the
-   join keeps a pair only if the smaller side is one of the first
-   ``anchor_rank`` rows OR the block is small (≤ full_join_max).
-   Connectivity to the block's anchors is preserved (that is all transitive
-   clustering needs), while a hot block of n rows emits ≤ anchor_rank·n pairs.
-   Dropped-pair counts are observable: emitted vs theoretical pair counts per
-   block land in the metrics table (no silent caps).
+2. **Anchor-capped, salted join** (:func:`candidate_pairs`). Blocks of
+   ≤ ``full_join_max`` rows emit all pairs. Above that, rows are ranked by
+   uid within the block and only the first ``anchor_rank`` rows (the
+   anchors) pair with the others. Members are hashed into salt buckets of
+   ~``rows_per_salt`` rows and the anchors are replicated into every
+   bucket, so a hot block of n rows emits ≤ anchor_rank·n pairs AND spreads
+   over several reducers. Connectivity to the block's anchors is preserved
+   (that is all transitive clustering needs). Dropped-pair counts are
+   observable: emitted vs theoretical pair counts land in the metrics
+   (no silent caps).
 
 Output is unique on (uid_a, uid_b), uid_a < uid_b (FIXTURES.md invariant 3).
 """
@@ -44,13 +47,11 @@ def _rank_and_size(blocks: DataFrame) -> DataFrame:
     table is shuffled and sorted once and walked once — the second sorted
     pass the r2 judge flagged (VERDICT "What's wrong" #2) is gone.
 
-    Callers that fan the ranked table into multiple consumers MUST pin an
-    explicit ``repartition("block_key")`` ABOVE this window (see
-    candidate_pairs / candidate_pairs_salted): the self-join branches prune
-    different column sets, which makes the window subtrees canonically
-    different — without the pinned exchange each branch re-evaluates the
-    whole block-key derivation (minhash over every doc) under its own copy
-    of the shuffle.
+    :func:`candidate_pairs` fans the ranked table into four branches. Each
+    branch re-runs this (cheap) window, but all of them read the ONE
+    ``block_key`` exchange below it: the subtrees under the window are
+    identical, AQE reuses the exchange, and the block-key derivation under
+    it (minhash over every doc) runs once.
     """
     w = Window.partitionBy("block_key").orderBy("uid")
     return blocks.withColumn("rn", F.row_number().over(w)).withColumn(
@@ -74,14 +75,15 @@ def _cap_policy(n: Column, cfg: PairsConfig) -> tuple[Column, Column]:
 
 
 def observed_pair_stats(cfg: PairsConfig) -> list:
-    """Aggregate expressions for a Spark Observation over the ranked LEFT
-    side of the candidate self-join: per-block facts are read off the
-    rn == 1 row (it exists exactly once per block and carries bn), so the
+    """Aggregate expressions for a Spark Observation over the ranked block
+    table (one row per (uid, block_key), under the repartition fence of
+    :func:`candidate_pairs`): per-block facts are read off the rn == 1 row
+    (it exists exactly once per block and carries bn), so the
     no-silent-caps accounting (emitted vs theoretical pairs, max block,
     block rows) rides the candidates action itself — no second evaluation
     of the live block-key derivation, no separate stats job."""
     theoretical, emitted = _cap_policy(F.col("bn").cast("long"), cfg)
-    first = F.col("rn_a") == 1
+    first = F.col("rn") == 1
     zero = F.lit(0).cast("long")
     return [
         F.count(F.lit(1)).alias("block_rows"),
@@ -92,103 +94,57 @@ def observed_pair_stats(cfg: PairsConfig) -> list:
 
 
 def candidate_pairs(
-    blocks: DataFrame, cfg: PairsConfig = PairsConfig(), observe=None
-) -> DataFrame:
-    """(uid, block_key) -> unique (uid_a, uid_b), uid_a < uid_b.
-
-    ``observe``: optional ``pyspark.sql.Observation`` that receives the
-    :func:`observed_pair_stats` aggregates when the returned plan executes.
-    """
-    # pinned exchange above the window: left/right prune different columns,
-    # so without it each side re-evaluates the window AND the (expensive)
-    # block-key derivation below it — decisive once blocks stopped being a
-    # checkpointed stage and carry the live minhash computation
-    ranked = _rank_and_size(blocks).repartition("block_key")
-    left = ranked.select(
-        F.col("block_key"),
-        F.col("uid").alias("uid_a"),
-        F.col("rn").alias("rn_a"),
-        F.col("bn"),
-    )
-    if observe is not None:
-        left = left.observe(observe, *observed_pair_stats(cfg))
-    # bn > 0 is vacuously true (bn counts the row's own block) — it exists
-    # to keep a window-column reference in this branch: without it Catalyst
-    # prunes the Window (and re-plans the exchange below it) for the right
-    # side only, the two subtrees stop being canonically equal, and the
-    # pinned exchange is evaluated twice instead of reused
-    # merge hint (r6): without it Catalyst may BROADCAST this side, wrapping
-    # it in a BroadcastExchange that re-evaluates the window tower instead
-    # of reading the pinned exchange (see candidate_pairs_salted); a
-    # shuffle-based join keeps both sides on the one materialized exchange
-    right = (
-        ranked.filter(F.col("bn") > 0)
-        .select(F.col("block_key"), F.col("uid").alias("uid_b"))
-        .hint("merge")
-    )
-    pairs = (
-        left.join(right, "block_key")
-        .filter(F.col("uid_a") < F.col("uid_b"))
-        .filter(
-            (F.col("bn") <= F.lit(cfg.full_join_max))
-            | (F.col("rn_a") <= F.lit(cfg.anchor_rank))
-        )
-        .select("uid_a", "uid_b")
-        .distinct()
-    )
-    return pairs
-
-
-def candidate_pairs_salted(
     blocks: DataFrame,
     cfg: PairsConfig = PairsConfig(),
+    observe=None,
     rows_per_salt: int = 512,
     hot_tier: str = "anchor",
 ) -> DataFrame:
-    """Salted physical strategy for the same logical pair set (north rule:
-    "salted, explicitly repartitioned" block keys).
+    """(uid, block_key) -> unique (uid_a, uid_b), uid_a < uid_b.
 
-    The anchor-capped join in :func:`candidate_pairs` bounds how many pairs
-    a hot block EMITS, but a block with 10^6 rows still lands on ONE shuffle
-    reducer. Here hot keys are split into salt buckets of ~rows_per_salt
-    rows, and only the block's ``anchor_rank`` anchor rows are replicated
-    into every bucket — pairs form between anchors and bucket members, so
-    connectivity through the anchors is preserved while no reducer sees more
-    than one bucket. Small blocks (≤ full_join_max) keep exhaustive
-    all-pairs semantics: every row is both anchor and member of one bucket.
+    Small blocks (≤ ``full_join_max`` rows) emit all pairs. A hot block's
+    rows are split into salt buckets of ~``rows_per_salt`` rows, and only
+    its ``anchor_rank`` anchor rows are replicated into every bucket: pairs
+    form between anchors and bucket members, so connectivity through the
+    anchors is preserved while no reducer reads more than one bucket of a
+    hot key, however hot.
 
-    Physical shape (r3): ONE window pass tags (rn, bn) — rank and size share
-    a single WindowExec (:func:`_rank_and_size`) — and an explicit
-    ``repartition(block_key)`` sits ABOVE the window, so every downstream
-    consumer (both sides of the small-block self-join, the hot members, the
-    hot anchors) reads that one reused exchange instead of re-evaluating the
-    explode+sort pipeline per branch (the r2 plan ran the full window twice;
-    AQE dedupes identical shuffle stages, but only below an exchange
-    boundary). The big table is sorted once and shuffled twice total
-    (window + post-window exchange) no matter how skewed the keys are.
+    Physical shape: a window tags (rn, bn) (:func:`_rank_and_size`) and
+    every branch (both sides of the small-block self-join, the hot members,
+    the hot anchors) reads the one reused ``block_key`` exchange below it.
+    The ``repartition("block_key")`` above the window is a fence over the
+    ranked table: Spark plans it away (the window's exchange already
+    partitions by block_key), but removing it changes every caller's plan.
+    Hot rows take one more shuffle, on (block_key, salt).
 
-    ``hot_tier`` (VERDICT r3 "What's wrong" #3): ``'anchor'`` (default)
-    emits only anchor→member pairs above the cap — connectivity-preserving,
-    which is all transitive CLUSTERING needs, but a hot block's
-    member–member near-dup pairs are absent from the standalone pair list
-    (counted in the drop stats, not emitted). ``'within_salt'`` additionally
-    emits ALL pairs inside each ≤``rows_per_salt``-row salt bucket — bounded
-    O(rows_per_salt·n) work with no single-reducer blowup, recovering the
-    bulk of member–member recall for recall-sensitive dedup. Cross-bucket
-    member pairs remain connected only through the replicated anchors (by
-    construction; still logged, still not silent).
+    ``observe``: optional ``pyspark.sql.Observation`` that receives the
+    :func:`observed_pair_stats` aggregates when the returned plan executes.
+    They sit on the ranked table under the fence, so each branch's window
+    pass carries an identical copy over all rows, and Spark reports one
+    value per observation name: the ledger counts every block once.
+
+    ``hot_tier``: ``'anchor'`` (default) emits only anchor→member pairs
+    above the cap — connectivity-preserving, which is all transitive
+    clustering needs; a hot block's member–member pairs are counted in the
+    ledger, not emitted. ``'within_salt'`` additionally emits ALL pairs
+    inside each salt bucket — bounded O(rows_per_salt·n) work that recovers
+    most member–member recall for standalone dedup. Cross-bucket member
+    pairs stay connected only through the replicated anchors.
     """
     if hot_tier not in ("anchor", "within_salt"):
         raise ValueError(
             f"hot_tier must be 'anchor' or 'within_salt', got {hot_tier!r}"
         )
-    ranked = _rank_and_size(blocks).repartition("block_key")
+    ranked = _rank_and_size(blocks)
+    if observe is not None:
+        ranked = ranked.observe(observe, *observed_pair_stats(cfg))
+    ranked = ranked.repartition("block_key")
 
-    # small blocks: plain within-block self-join, both sides off the reused
+    # small blocks: within-block self-join, both sides off the reused
     # exchange, already co-partitioned by block_key. The merge hint is
     # load-bearing (r6): Catalyst's size estimate otherwise BROADCASTS the
     # right side, which wraps it in a BroadcastExchange that re-evaluates
-    # the whole window tower instead of reading the pinned exchange
+    # the whole window tower instead of reading the reused exchange
     # (static broadcasts sit outside AQE stage reuse — measured 1.6x the
     # builder wall at sf1.0); a shuffle-based join keeps both sides on the
     # one materialized exchange and spills gracefully at any scale
@@ -201,11 +157,16 @@ def candidate_pairs_salted(
         .select("uid_a", "uid_b")
     )
 
-    # hot blocks: salt members; replicate anchors to every salt bucket
+    # hot blocks: salt members by pmod(xxhash64(uid), ceil(bn / rows_per_salt));
+    # replicate anchors to every salt bucket
     hot = ranked.filter(F.col("bn") > cfg.full_join_max)
-    n_salts = _n_salts(rows_per_salt)
-    members = _salted_hot_members(hot, rows_per_salt).select(
-        "block_key", "salt", F.col("uid").alias("uid_b")
+    n_salts = F.greatest(
+        F.lit(1), F.ceil(F.col("bn") / F.lit(rows_per_salt)).cast("int")
+    )
+    members = hot.select(
+        "block_key",
+        F.pmod(F.xxhash64("uid"), n_salts).cast("int").alias("salt"),
+        F.col("uid").alias("uid_b"),
     )
     anchors = (
         hot.filter(F.col("rn") <= cfg.anchor_rank)
@@ -239,34 +200,6 @@ def candidate_pairs_salted(
         )
         hot_pairs = hot_pairs.unionByName(within)
     return small_pairs.unionByName(hot_pairs).distinct()
-
-
-def _n_salts(rows_per_salt: int):
-    return F.greatest(F.lit(1), F.ceil(F.col("bn") / F.lit(rows_per_salt)).cast("int"))
-
-
-def _salted_hot_members(hot: DataFrame, rows_per_salt: int) -> DataFrame:
-    """Attach the deterministic salt bucket to hot-block member rows."""
-    return hot.withColumn(
-        "salt", F.pmod(F.xxhash64("uid"), _n_salts(rows_per_salt)).cast("int")
-    )
-
-
-def salt_distribution(
-    blocks: DataFrame, cfg: PairsConfig = PairsConfig(), rows_per_salt: int = 512
-) -> DataFrame:
-    """Members per (block_key, salt) reducer group for the HOT tier — the
-    observable skew bound behind :func:`candidate_pairs_salted`: after
-    salting, no join task reads a group materially bigger than
-    ``rows_per_salt`` (hash jitter aside), no matter how hot the key. One
-    row per group: (block_key, salt, members)."""
-    ranked = _rank_and_size(blocks)
-    hot = ranked.filter(F.col("bn") > cfg.full_join_max)
-    return (
-        _salted_hot_members(hot, rows_per_salt)
-        .groupBy("block_key", "salt")
-        .agg(F.count(F.lit(1)).alias("members"))
-    )
 
 
 def pair_stats(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> DataFrame:

@@ -144,19 +144,19 @@ def embedding_cosine_pairs(
     """
     from functools import reduce
 
-    from belb_spark.operators.pairs import PairsConfig, candidate_pairs_salted
+    from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 
-    # slim (id, table<<planes | bucket) self-join through the shared
-    # anchor-capped + salted pair builder: a degenerate embedding set
-    # collapsing into one bucket cannot go O(n²) on a single reducer (same
-    # defense as the text-dedup family); buckets ≤ full_join_max keep
-    # exhaustive all-pairs semantics. The table id rides the high bits of
-    # the (long) block key, so one builder pass covers all tables and the
-    # final distinct dedupes pairs found by several tables. The block table
-    # takes a lazy localCheckpoint (r6): the builder's four branches
-    # otherwise re-evaluate the n_tables × n_planes projection tower per
-    # branch (static broadcasts sit outside AQE stage reuse — measured 2×
-    # the candidate wall at sf1.0).
+    # slim (id, table<<planes | bucket) self-join through
+    # pairs.candidate_pairs, the anchor-capped + salted builder the ER
+    # pipeline and text dedup also use: a degenerate embedding set
+    # collapsing into one bucket cannot go O(n²) on a single reducer, and
+    # buckets ≤ full_join_max keep exhaustive all-pairs semantics. The
+    # table id rides the high bits of the (long) block key, so one builder
+    # pass covers all tables and the final distinct dedupes pairs found by
+    # several tables. The block table takes a lazy localCheckpoint (r6):
+    # the builder's four branches otherwise re-evaluate the n_tables ×
+    # n_planes projection tower per branch (static broadcasts sit outside
+    # AQE stage reuse — measured 2× the candidate wall at sf1.0).
     per_table = [
         srp_lsh_buckets(embeddings, n_planes, dim, id_col, vec_col, table=t).select(
             F.col("vec_id").alias("uid"),
@@ -167,7 +167,7 @@ def embedding_cosine_pairs(
     blocks = reduce(lambda a, b: a.unionByName(b), per_table).localCheckpoint(
         eager=False
     )
-    cand = candidate_pairs_salted(blocks, PairsConfig()).select(
+    cand = candidate_pairs(blocks, PairsConfig()).select(
         F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b")
     )
     # per-VECTOR norm, computed once on the 1-row-per-id side and carried

@@ -22,7 +22,7 @@ from belb_spark.checkpoint import CheckpointStore, config_signature, input_finge
 from belb_spark.operators.blocking import BlockingConfig, block_keys
 from belb_spark.operators.clustering import connected_components
 from belb_spark.operators.evaluate import metrics_dict, pairwise_metrics
-from belb_spark.operators.normalize import exact_anchor, normalize
+from belb_spark.operators.normalize import check_sha_invariant, exact_anchor, normalize
 from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score_pairs
 from belb_spark.session import codegen_compiles
@@ -30,9 +30,9 @@ from belb_spark.session import codegen_compiles
 
 # One physical path per stage: every stage checkpoints synchronously (build →
 # plain-Parquet write at the build's own partitioning → read back), and the
-# within-block self-join is the anchor-capped builder. Only logical knobs
-# live here; they are all part of the resume signature. Physical choices
-# are not knobs: CC checkpoint durability follows the master
+# within-block self-join is the anchor-capped, salted builder. Only logical
+# knobs live here; they are all part of the resume signature. Physical
+# choices are not knobs: CC checkpoint durability follows the master
 # (clustering.reliable_checkpoints).
 @dataclass(frozen=True)
 class ERConfig:
@@ -157,12 +157,11 @@ def _run_pipeline_body(
     metrics["exact_dup_edges"] = norm_res.rows - norm_res.metrics["representatives"]
 
     def _sha_violations(df: DataFrame) -> int:
-        joined = repos_uid.select("uid", "content").join(
-            df.select("uid", "content_sha"), "uid"
+        return check_sha_invariant(
+            repos_uid.select("uid", "content").join(
+                df.select("uid", "content_sha"), "uid"
+            )
         )
-        return joined.filter(
-            F.sha2(F.col("content"), 256) != F.col("content_sha")
-        ).count()
 
     sha_stage1 = checks.submit(_sha_violations, norm)
 

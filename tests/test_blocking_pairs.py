@@ -64,17 +64,31 @@ def test_anchor_cap_bounds_hot_blocks(blocks):
         assert r["pairs_emitted"] < r["pairs_theoretical"]
 
 
-def test_salted_strategy_emits_same_pairs(blocks):
-    """candidate_pairs_salted is a physical variant (replicated-anchor
-    salting) of the anchor-capped join — identical logical pair set."""
-    from belb_spark.operators.pairs import candidate_pairs_salted
+def test_candidate_pairs_match_reference(blocks):
+    """candidate_pairs equals a pure-Python reference of the anchor cap over
+    the collected blocks: every pair inside a block of ≤ full_join_max rows,
+    otherwise the pairs (a, b), a < b, whose a is among the block's first
+    anchor_rank uids — whatever the salt granularity."""
+    members: dict[str, list[int]] = {}
+    for r in blocks.select("block_key", "uid").collect():
+        members.setdefault(r["block_key"], []).append(r["uid"])
 
-    cfg = PairsConfig(full_join_max=16, anchor_rank=4)
-    plain = candidate_pairs(blocks, cfg)
-    salted = candidate_pairs_salted(blocks, cfg, rows_per_salt=8)
-    assert salted.filter(F.col("uid_a") >= F.col("uid_b")).count() == 0
-    assert plain.exceptAll(salted).count() == 0
-    assert salted.exceptAll(plain).count() == 0
+    def expected(cfg):
+        out = set()
+        for uids in members.values():
+            us = sorted(uids)
+            left = us if len(us) <= cfg.full_join_max else us[: cfg.anchor_rank]
+            out.update((a, b) for a in left for b in us if a < b)
+        return out
+
+    assert max(map(len, members.values())) > 64, "fixture should have hot blocks"
+    for cfg in (PairsConfig(), PairsConfig(full_join_max=16, anchor_rank=4)):
+        want = expected(cfg)
+        for rows_per_salt in (8, 512):
+            got = candidate_pairs(blocks, cfg, rows_per_salt=rows_per_salt).collect()
+            pairs = [(r["uid_a"], r["uid_b"]) for r in got]
+            assert len(pairs) == len(set(pairs)), (cfg, rows_per_salt)
+            assert set(pairs) == want, (cfg, rows_per_salt)
 
 
 def test_exact_duplicates_contract_to_min_uid_anchor(spark):
@@ -95,19 +109,15 @@ def test_within_salt_hot_tier_recovers_member_pairs(spark):
     while each reducer group stays bounded by ~rows_per_salt."""
     import pandas as pd
 
-    from belb_spark.operators.pairs import (
-        PairsConfig,
-        candidate_pairs_salted,
-        salt_distribution,
-    )
+    from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 
     # one hot block of 120 rows + one small block of 5
     rows = [(i, "hot") for i in range(120)] + [(1000 + i, "cold") for i in range(5)]
     blocks = spark.createDataFrame(pd.DataFrame(rows, columns=["uid", "block_key"]))
     cfg = PairsConfig(full_join_max=8, anchor_rank=2)
 
-    anchor = candidate_pairs_salted(blocks, cfg, rows_per_salt=16)
-    within = candidate_pairs_salted(blocks, cfg, rows_per_salt=16, hot_tier="within_salt")
+    anchor = candidate_pairs(blocks, cfg, rows_per_salt=16)
+    within = candidate_pairs(blocks, cfg, rows_per_salt=16, hot_tier="within_salt")
 
     a_set = {(r["uid_a"], r["uid_b"]) for r in anchor.collect()}
     w_set = {(r["uid_a"], r["uid_b"]) for r in within.collect()}
@@ -116,8 +126,8 @@ def test_within_salt_hot_tier_recovers_member_pairs(spark):
 
     # expected recovered pairs: all pairs within each (block_key, salt)
     # bucket of the hot tier. Salts recomputed HERE from the raw documented
-    # rule (pmod(xxhash64(uid), ceil(bn/rows_per_salt))) — independent of
-    # the _salted_hot_members helper under test
+    # rule (pmod(xxhash64(uid), ceil(bn/rows_per_salt))), not read back
+    # from the builder under test
     n_salts = -(-120 // 16)  # ceil(bn / rows_per_salt) for the hot block
     salted = blocks.filter(F.col("block_key") == "hot").select(
         "uid",
@@ -137,5 +147,7 @@ def test_within_salt_hot_tier_recovers_member_pairs(spark):
     assert w_set == a_set | expected_within
 
     # the bound still holds: no reducer group materially over rows_per_salt
-    dist = salt_distribution(blocks, cfg, rows_per_salt=16)
-    assert dist.agg(F.max("members")).collect()[0][0] <= 2 * 16
+    assert max(map(len, buckets.values())) <= 2 * 16
+
+    with pytest.raises(ValueError, match="hot_tier"):
+        candidate_pairs(blocks, cfg, hot_tier="all")

@@ -1,3 +1,4 @@
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from belb_spark.operators.evaluate import tune_threshold
@@ -56,12 +57,14 @@ def test_salt_distribution_bounds_hot_blocks(spark):
     """The observable skew bound of the salted pair builder on a corpus with
     hot prototypes (datagen SMALL: 4 prototypes with ~100 members each):
     after salting, no candidate-join reducer group exceeds ~rows_per_salt
-    members. (That the salted pair set equals the capped one is
-    test_blocking_pairs.py::test_salted_strategy_emits_same_pairs.)"""
+    members. Groups are counted here from the builder's documented salt rule
+    pmod(xxhash64(uid), ceil(bn / rows_per_salt)) over blocks of more than
+    full_join_max rows. (That the pair set is the anchor-capped one is
+    test_blocking_pairs.py::test_candidate_pairs_match_reference.)"""
     from belb_spark.datagen import SMALL, generate
     from belb_spark.operators.blocking import block_keys
     from belb_spark.operators.normalize import normalize
-    from belb_spark.operators.pairs import PairsConfig, salt_distribution
+    from belb_spark.operators.pairs import PairsConfig
 
     tables = generate(SMALL)
     repos = spark.createDataFrame(tables["repos"])
@@ -71,7 +74,18 @@ def test_salt_distribution_bounds_hot_blocks(spark):
     # granularity small enough to force splitting of the hot blocks
     rows_per_salt = 32
     blocks = block_keys(normalize(repos, syn))
-    dist = salt_distribution(blocks, PairsConfig(), rows_per_salt).toPandas()
+    bn = F.count(F.lit(1)).over(Window.partitionBy("block_key"))
+    dist = (
+        blocks.withColumn("bn", bn)
+        .filter(F.col("bn") > PairsConfig().full_join_max)
+        .withColumn(
+            "salt",
+            F.pmod(F.xxhash64("uid"), F.ceil(F.col("bn") / rows_per_salt)),
+        )
+        .groupBy("block_key", "salt")
+        .agg(F.count(F.lit(1)).alias("members"))
+        .toPandas()
+    )
     assert len(dist) > 0  # hot tier non-empty: the prototypes ARE hot
     assert dist["members"].max() <= 2 * rows_per_salt
     # and the hot blocks genuinely split across several reducer groups
