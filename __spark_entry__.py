@@ -648,35 +648,22 @@ def q_sample_stratified(spark, sf_dir):
 def q_stream_hourly_window(spark, sf_dir):
     """§2.11 streaming twin #2, oracle-gated: availableNow drain of the
     events table through the watermarked tumbling-window aggregation
-    (streaming/incremental.windowed_event_counts semantics) into a
-    complete-mode memory sink — append mode would hold back windows the
-    watermark has not passed, complete emits the full result, which must
-    equal the batch GROUP BY the oracle computes. Sums ride DECIMAL(18,2)
-    so accumulation order cannot drift the doubles."""
+    (streaming/incremental.windowed_event_counts) into a complete-mode
+    memory sink — append mode would hold back windows the watermark has
+    not passed, complete emits the full result, which must equal the batch
+    GROUP BY the oracle computes."""
     import os
     import tempfile
     import uuid
 
-    from belb_spark.streaming.incremental import read_repo_stream
+    from belb_spark.streaming.incremental import (
+        read_repo_stream,
+        windowed_event_counts,
+    )
 
     ingest = tempfile.mkdtemp(prefix="belb_stream_ev_")
     os.symlink(f"{sf_dir}/events.parquet", os.path.join(ingest, "events.parquet"))
-    stream = read_repo_stream(spark, ingest)
-    events = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    agg = (
-        events.withWatermark("ts", "2 hours")
-        .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("cnt"),
-            F.sum(F.col("value").cast("decimal(18,2)")).alias("sv"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"),
-            "event_type",
-            F.col("cnt").cast("long").alias("cnt"),
-            F.col("sv").cast("double").alias("sum_value"),
-        )
-    )
+    agg = windowed_event_counts(read_repo_stream(spark, ingest))
     name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
     q = (
         agg.writeStream.format("memory")
@@ -958,7 +945,7 @@ def q_mm_ppm_features(spark, sf_dir):
     """Multimodal image path end to end (VERDICT r4 #8): JVM-built binary
     P6 PPM payloads (multimodal.synth_ppm_col) decoded by the REAL numpy
     decoder inside the single mapInPandas stage
-    (multimodal.extract_features fake_decode=False); the 4×4 grayscale
+    (multimodal.extract_features); the 4×4 grayscale
     grid feature has the closed form (doc_id*31 + k*17) % 256 that the
     oracle recomputes without decoding."""
     from belb_spark.operators.multimodal import extract_features, synth_ppm_col
@@ -968,7 +955,7 @@ def q_mm_ppm_features(spark, sf_dir):
         F.lit("image").alias("kind"),
         synth_ppm_col(F.col("doc_id")).alias("payload"),
     )
-    feats = extract_features(media, fake_decode=False)
+    feats = extract_features(media)
     return feats.select(
         F.col("media_id").cast("long").alias("doc_id"),
         F.posexplode("feature").alias("k", "fval"),
@@ -989,7 +976,7 @@ def q_mm_wav_features(spark, sf_dir):
         F.lit("audio").alias("kind"),
         synth_wav_col(F.col("doc_id")).alias("payload"),
     )
-    feats = extract_features(media, fake_decode=False)
+    feats = extract_features(media)
     return feats.select(
         F.col("media_id").cast("long").alias("doc_id"),
         F.posexplode("feature").alias("k", "fval"),

@@ -54,6 +54,7 @@ def token_jaccard(a: str | Column, b: str | Column) -> Column:
 
 # ------------------------------------------------------------- Python tier
 def jaro(s1: str, s2: str) -> float:
+    """Scalar Jaro similarity, the core of the :func:`jaro_winkler` reference."""
     if s1 == s2:
         return 1.0
     l1, l2 = len(s1), len(s2)
@@ -81,6 +82,7 @@ def jaro(s1: str, s2: str) -> float:
 
 
 def jaro_winkler(s1: str, s2: str, prefix_weight: float = 0.1) -> float:
+    """Scalar reference for :func:`jaro_winkler_batch` (tests/test_simfns.py)."""
     j = jaro(s1, s2)
     prefix = 0
     for a, b in zip(s1[:4], s2[:4]):
@@ -96,7 +98,8 @@ def levenshtein_norm(s1, s2) -> float:
     For the scoring stage this runs on TOKEN sequences, not characters —
     O(tokens²) instead of O(chars²), ~100× cheaper on code files while
     ranking near-duplicates the same way (a token edit is the unit of
-    perturbation in a code corpus)."""
+    perturbation in a code corpus). Scalar reference for
+    :func:`levenshtein_norm_batch` (tests/test_simfns.py)."""
     if s1 == s2:
         return 1.0
     l1, l2 = len(s1), len(s2)
@@ -115,74 +118,9 @@ def levenshtein_norm(s1, s2) -> float:
     return 1.0 - prev[l1] / l2
 
 
-def indel_distance(s1: str, s2: str) -> int:
-    """Insert/delete-only edit distance (= Levenshtein with substitution
-    cost 2 = len1 + len2 - 2·LCS) — the distance python-Levenshtein's
-    ``ratio`` normalizes (belb/scripts/stats.py:203-216)."""
-    l1, l2 = len(s1), len(s2)
-    if l1 == 0 or l2 == 0:
-        return l1 + l2
-    if l1 > l2:
-        s1, s2, l1, l2 = s2, s1, l2, l1
-    prev = list(range(l1 + 1))
-    for j in range(1, l2 + 1):
-        cur = [j] + [0] * l1
-        c2 = s2[j - 1]
-        for i in range(1, l1 + 1):
-            cost = 0 if s1[i - 1] == c2 else 2
-            cur[i] = min(prev[i] + 1, cur[i - 1] + 1, prev[i - 1] + cost)
-        prev = cur
-    return prev[l1]
-
-
-def levenshtein_ratio(s1: str, s2: str) -> float:
-    """python-Levenshtein ``.ratio`` semantics: (l1+l2-indel)/(l1+l2),
-    1.0 for two empty strings. The reference-faithful similarity for A13
-    parity ('ab' vs 'cd' → 0.0, unlike the uniform-cost normalization in
-    relational.group_similarity_stats which DuckDB can mirror)."""
-    tot = len(s1) + len(s2)
-    if tot == 0:
-        return 1.0
-    return (tot - indel_distance(s1, s2)) / tot
-
-
-def levenshtein_ratio_batch(s1: list[str], s2: list[str]) -> np.ndarray:
-    """Batched :func:`levenshtein_ratio`: the same column-update DP as
-    :func:`levenshtein_norm_batch` (minimum.accumulate closes the insertion
-    chain) with substitution cost 2 over codepoint matrices."""
-    B = len(s1)
-    if B == 0:
-        return np.empty(0, dtype=np.float64)
-    swap = [len(a) > len(b) for a, b in zip(s1, s2)]
-    short = [b if s else a for a, b, s in zip(s1, s2, swap)]
-    long_ = [a if s else b for a, b, s in zip(s1, s2, swap)]
-    width1 = max((len(s) for s in short), default=0) or 1
-    width2 = max((len(s) for s in long_), default=0) or 1
-    A, L1 = _codepoint_matrix(short, width1, _PAD_A)
-    Bm, L2 = _codepoint_matrix(long_, width2, _PAD_B)
-    T1 = A.shape[1]
-    idx = np.arange(T1 + 1, dtype=np.int32)[None, :]
-    prev = np.broadcast_to(np.arange(T1 + 1, dtype=np.int32), (B, T1 + 1)).copy()
-    for j in range(1, Bm.shape[1] + 1):
-        bj = Bm[:, j - 1][:, None]
-        cur0 = np.minimum(
-            prev[:, :-1] + np.where(A == bj, 0, 2).astype(np.int32),
-            prev[:, 1:] + 1,
-        )
-        full0 = np.concatenate(
-            (np.full((B, 1), j, dtype=np.int32), cur0), axis=1
-        )
-        cur = np.minimum.accumulate(full0 - idx, axis=1) + idx
-        act = (j <= L2)[:, None]
-        prev = np.where(act, cur, prev)
-    dist = prev[np.arange(B), L1]
-    tot = L1 + L2
-    with np.errstate(divide="ignore", invalid="ignore"):
-        out = (tot - dist) / np.maximum(tot, 1)
-    return np.where(tot == 0, 1.0, out)
-
-
 def char_ngram_cosine(s1: str, s2: str, n: int = 3) -> float:
+    """Scalar reference for the cosine term of :func:`rich_score_batch`
+    (tests/test_simfns.py)."""
     if s1 == s2:
         return 1.0
     if len(s1) < n or len(s2) < n:
@@ -363,21 +301,6 @@ def _ngram_profile(s: str, n: int = 3) -> tuple[np.ndarray, np.ndarray]:
         codes |= cp[j : len(cp) - n + 1 + j]
     u, c = np.unique(codes, return_counts=True)
     return u, c.astype(np.float64)
-
-
-def char_ngram_cosine_np(s1: str, s2: str, n: int = 3) -> float:
-    """numpy twin of char_ngram_cosine (identical semantics)."""
-    if s1 == s2:
-        return 1.0
-    if len(s1) < n or len(s2) < n:
-        return 0.0
-    u1, c1 = _ngram_profile(s1, n)
-    u2, c2 = _ngram_profile(s2, n)
-    _, i1, i2 = np.intersect1d(u1, u2, assume_unique=True, return_indices=True)
-    dot = float((c1[i1] * c2[i2]).sum())
-    n1 = sqrt(float((c1 * c1).sum()))
-    n2 = sqrt(float((c2 * c2).sum()))
-    return dot / (n1 * n2) if n1 and n2 else 0.0
 
 
 _LEN_CHUNK = 2048  # pairs per DP chunk after length-sorting (bounds padding)

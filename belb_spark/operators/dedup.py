@@ -26,7 +26,8 @@ blob) is anchor-capped AND salted across reducers instead of going O(n²) on
 one key. Buckets up to ``PairsConfig.full_join_max`` emit ALL pairs (the
 exhaustive semantics the DuckDB oracles verify); bigger buckets emit
 anchor→member pairs only — bounded, connectivity-preserving, and observable
-via :func:`bucket_pair_stats` (no silent drops).
+via :func:`pairs.pair_stats` over the (id, bucket_key) rows (no silent
+drops).
 
 Lifecycle (r6): the per-doc DISTINCT-shingle ARRAY table (id, arr) is the
 shared base of every consumer — MinHash signatures are per-row
@@ -52,7 +53,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from belb_spark.operators.blocking import shingles_col
-from belb_spark.operators.pairs import PairsConfig, candidate_pairs, pair_stats
+from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 
 HIGH_NIBBLE = ["8", "9", "a", "b", "c", "d", "e", "f"]  # hex digits with bit3 set
 
@@ -109,16 +110,6 @@ def _bucket_pairs(exploded: DataFrame, cfg: PairsConfig) -> DataFrame:
     return candidate_pairs(blocks, cfg).select(
         F.col("uid_a").alias("id_a"), F.col("uid_b").alias("id_b")
     )
-
-
-def bucket_pair_stats(exploded: DataFrame, cfg: PairsConfig) -> DataFrame:
-    """Emitted-vs-theoretical pair counts per bucket (no silent caps): the
-    dedup-side twin of pairs.pair_stats. Input (id, bucket_key)."""
-    blocks = exploded.select(
-        F.col(exploded.columns[0]).alias("uid"),
-        F.col(exploded.columns[1]).alias("block_key"),
-    )
-    return pair_stats(blocks, cfg)
 
 
 def _doc_shingles(df: DataFrame, id_col: str, text_col: str, width: int) -> DataFrame:

@@ -281,11 +281,9 @@ def group_similarity_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     python-Levenshtein's ``ratio`` (that normalizes the INDEL distance,
     substitution cost 2: 'ab' vs 'cd' is 0.0 there, 0.5 here; ADVICE r3).
     The uniform-cost formula is used because both engines have the identical
-    builtin, so the DuckDB oracle mirrors it exactly; the reference-faithful
-    ``Levenshtein.ratio`` lives in
-    :func:`belb_spark.functions.simfns.levenshtein_ratio` (scalar + batch,
-    unit-pinned against python-Levenshtein semantics) for callers that need
-    parity, but has no SQL builtin to oracle against. Output is the SUM of
+    builtin, so the DuckDB oracle mirrors it exactly; the indel-distance
+    ``Levenshtein.ratio`` has no SQL builtin to oracle against, and the
+    engine has no implementation of it. Output is the SUM of
     the ratio in parts-per-million as BIGINT: both engines compute the
     identical double per pair (integer inputs, same ops) and integer sums
     are order-independent, so the oracle hash-matches without

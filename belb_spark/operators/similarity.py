@@ -251,9 +251,9 @@ def ivf_centroids(
     """Deterministic IVF-flat coarse quantizer: the centroids are the first
     ``n_cells`` corpus vectors by id — no iterative training, so the cell
     function is reproducible in any engine (the DuckDB oracle recomputes the
-    same cells) and stable across partitionings. On a real cluster you plug
-    k-means centroids into the same assignment/search plan; only this
-    function changes. Driver-side collect is bounded at n_cells rows."""
+    same cells) and stable across partitionings. Trained (k-means)
+    centroids are out of scope. Driver-side collect is bounded at n_cells
+    rows."""
     rows = (
         embeddings.select(
             F.col(id_col).alias("cid"),
@@ -264,148 +264,6 @@ def ivf_centroids(
         .collect()
     )
     return [(int(r["cid"]), list(r["v"])) for r in rows]
-
-
-def ivf_centroids_kmeans(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-    n_iter: int = 5,
-    sample: int = 4096,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """Trained IVF coarse quantizer (VERDICT r3 #4): seeded spherical
-    k-means (Lloyd's, ``n_iter`` rounds) over a BOUNDED deterministic
-    sample, run driver-side in numpy. Deterministic end to end: the sample
-    is the first ``sample`` rows in (xxhash64(id, seed), id) order, the
-    init is the first ``n_cells`` sample rows, assignment ties break toward
-    the lower cell index (numpy argmax), and empty cells keep their
-    previous centroid. Cell ids are 0..n_cells-1 (dense), so the trained
-    quantizer plugs into the same :func:`ivf_assign`/:func:`ivf_topk`
-    plan as the first-K baseline — only the centroid list changes.
-
-    Driver memory is bounded by ``sample`` rows regardless of corpus size;
-    at 10^12 rows you would raise ``sample`` to ~10^5-10^6 (still trivial
-    driver-side) or swap in a distributed groupBy-mean k-means behind this
-    same return type."""
-    import numpy as np
-
-    rows = (
-        embeddings.select(
-            F.col(id_col).alias("cid"),
-            F.col(vec_col).cast("array<double>").alias("v"),
-        )
-        .orderBy(F.xxhash64(F.col("cid").cast("string"), F.lit(seed)), F.col("cid"))
-        .limit(sample)
-        .collect()
-    )
-    X = np.array([list(r["v"]) for r in rows], dtype=np.float64)
-    if len(X) == 0:
-        return []
-    n_cells = min(n_cells, len(X))
-    Xn = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
-    C = Xn[:n_cells].copy()
-    for _ in range(n_iter):
-        assign = np.argmax(Xn @ C.T, axis=1)
-        for c in range(n_cells):
-            members = Xn[assign == c]
-            if len(members):
-                m = members.mean(axis=0)
-                nm = np.linalg.norm(m)
-                if nm > 1e-12:
-                    C[c] = m / nm
-    return [(i, [float(x) for x in C[i]]) for i in range(n_cells)]
-
-
-def ivf_centroids_kmeans_distributed(
-    embeddings: DataFrame,
-    n_cells: int = 8,
-    n_iter: int = 5,
-    sample: int | None = None,
-    seed: int = 42,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> list[tuple[int, list[float]]]:
-    """The distributed groupBy-mean Lloyd's variant the driver-side
-    :func:`ivf_centroids_kmeans` docstring promises (VERDICT r4 #5):
-    spherical k-means where every round is ONE Spark aggregation over the
-    full corpus — assignment is a pure-JVM literal-centroid argmax
-    (same expression family as :func:`ivf_assign`, unrounded cosines,
-    ties to the lower cell id exactly like numpy argmax), the new
-    centroids are a ``posexplode`` + ``groupBy(cell, dim).avg`` whose
-    result is n_cells × dim rows — bounded driver traffic regardless of
-    corpus size, which is what a 10^12-row corpus needs.
-
-    Determinism matches the driver path formula for formula: rows are
-    L2-normalized with the same ``x / max(norm, 1e-12)`` guard, init is
-    the first ``n_cells`` rows in (xxhash64(id, seed), id) order, empty
-    or degenerate cells keep their previous centroid. Pass ``sample`` to
-    restrict to the same deterministic sample the driver path uses —
-    the equivalence test runs both on one sample and compares centroids
-    (bit-near: the only divergence is float summation order, numpy
-    pairwise vs JVM sequential fold).
-    """
-    base = embeddings.select(
-        F.col(id_col).alias("cid"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    if sample is not None:
-        base = (
-            base.orderBy(
-                F.xxhash64(F.col("cid").cast("string"), F.lit(seed)), F.col("cid")
-            ).limit(sample)
-        )
-    nv = F.greatest(
-        F.sqrt(F.aggregate(F.transform("v", lambda x: x * x), F.lit(0.0),
-                           lambda a, b: a + b)),
-        F.lit(1e-12),
-    )
-    vn = base.select(
-        "cid", F.transform("v", lambda x: x / nv).alias("v")
-    ).persist()
-    try:
-        init = (
-            vn.orderBy(
-                F.xxhash64(F.col("cid").cast("string"), F.lit(seed)), F.col("cid")
-            )
-            .limit(n_cells)
-            .collect()
-        )
-        if not init:
-            return []
-        C = [list(r["v"]) for r in init]
-        for _ in range(n_iter):
-            # argmax assignment: struct (cos, -cid) + array_max == highest
-            # cosine, ties to the lower cell id (numpy argmax semantics)
-            cells = []
-            for cid, w in enumerate(C):
-                wcol = F.lit([float(x) for x in w])
-                cells.append(
-                    F.named_struct(
-                        F.lit("c"), _dot(F.col("v"), wcol),
-                        F.lit("n"), F.lit(-cid),
-                    )
-                )
-            best = F.array_max(F.array(*cells))
-            sums = (
-                vn.select((-best["n"]).cast("int").alias("cell"),
-                          F.posexplode("v").alias("pos", "x"))
-                .groupBy("cell", "pos")
-                .agg(F.avg("x").alias("m"))
-                .collect()
-            )
-            means: dict[int, dict[int, float]] = {}
-            for r in sums:
-                means.setdefault(r["cell"], {})[r["pos"]] = r["m"]
-            for c, byp in means.items():
-                m = [byp[p] for p in sorted(byp)]
-                nm = sum(x * x for x in m) ** 0.5
-                if nm > 1e-12:
-                    C[c] = [x / nm for x in m]
-        return [(i, [float(x) for x in C[i]]) for i in range(len(C))]
-    finally:
-        vn.unpersist()
 
 
 def _sql_darray(w: list[float]) -> str:
@@ -454,21 +312,6 @@ def _cell_scores_sql(vec_sql: str, centroids: list[tuple[int, list[float]]]) -> 
     return "array(" + ",".join(cells) + ")"
 
 
-def ivf_assign(
-    embeddings: DataFrame,
-    centroids: list[tuple[int, list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(vec_id, cell): each vector lands in the cell of its highest-cosine
-    centroid. Pure JVM expressions (the centroid matrix is a literal); at
-    scale ``cell`` is the partition/bucket key of the vector table."""
-    best = F.array_max(F.expr(_cell_scores_sql(_vec_sql(vec_col), centroids)))
-    return embeddings.select(
-        F.col(id_col).alias("vec_id"), (-best["n"]).cast("long").alias("cell")
-    )
-
-
 def ivf_topk(
     embeddings: DataFrame,
     queries: DataFrame,
@@ -477,28 +320,24 @@ def ivf_topk(
     n_probe: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    centroids: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """IVF-flat approximate top-k: corpus vectors are inverted by coarse
     cell; each query probes its ``n_probe`` nearest cells and exact-cosine
     re-ranks only those cells' vectors. Output (query_id, vec_id, rank,
-    cosine), rank deterministic via (cosine 3dp desc, vec_id).
-
-    ``centroids``: pass :func:`ivf_centroids_kmeans` output for a trained
-    quantizer (better recall); default is the deterministic first-K
-    baseline that the DuckDB oracle reproduces.
+    cosine), rank deterministic via (cosine 3dp desc, vec_id). The
+    centroids are :func:`ivf_centroids`' first-K baseline, which the DuckDB
+    oracle reproduces.
 
     Scale shape: the corpus side is shuffled ONCE by cell (at rest this is
     the table's bucket/partition key, so the probe join is partition-pruned
     to n_probe cells per query); the query→cell probe list is tiny and
     broadcast. Nothing driver-side except the bounded centroid fetch."""
-    if centroids is None:
-        centroids = ivf_centroids(embeddings, n_cells, id_col, vec_col)
+    centroids = ivf_centroids(embeddings, n_cells, id_col, vec_col)
 
-    # cell computed INLINE (same expression as ivf_assign): the cell is a
-    # per-row function of the vector, so the former id-equi-join of the
-    # corpus with its own assignment table was a corpus self-join (one
-    # whole extra shuffle + join of the big side) for zero information.
+    # cell computed INLINE: the cell is a per-row function of the vector
+    # (its highest-cosine centroid), so an id-equi-join of the corpus with
+    # its own assignment table would be a corpus self-join (one whole extra
+    # shuffle + join of the big side) for zero information.
     # The centroid matrix enters as ONE parsed SQL literal (_cell_scores_sql)
     # — the py4j-built tree cost ~1.1 s of driver round-trips per plan build.
     cells = F.expr(_cell_scores_sql(_vec_sql(vec_col), centroids))  # parsed once

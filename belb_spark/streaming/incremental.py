@@ -2,17 +2,15 @@
 
 The reference is pure batch (SURVEY.md §2.11) — its generator/queue prefetch
 is I/O overlap, not stream semantics. These jobs are the Spark-native
-incremental path a 100 TB corpus actually needs: new files land in the
-ingest directory, and each micro-batch extends the dedup/metrics state
-without reprocessing history.
+incremental path: new files land in the ingest directory, and each
+micro-batch extends the dedup/metrics state without reprocessing history.
 
-Design notes for scale:
 - file source + ``Trigger.AvailableNow`` gives replayable, checkpointed
   incremental batches (the streaming twin of CheckpointStore resume);
 - exact dedup uses ``dropDuplicates`` on the content hash with state kept
-  in the streaming state store — at scale, bound it with a watermark on the
-  ingest timestamp so state does not grow unbounded;
-- windowed aggregation uses event-time + watermark for late data.
+  in the streaming state store, one entry per distinct content;
+- windowed aggregation uses event-time + watermark for late data, and is
+  the query ``stream_hourly_window``.
 
 Tested with availableNow against the equivalent batch computation
 (tests/test_streaming.py).
@@ -41,30 +39,10 @@ def read_repo_stream(
 def incremental_exact_dedup(stream: DataFrame, content_col: str = "content") -> DataFrame:
     """Emit only first-seen contents across all micro-batches (state-store
     backed). Output adds ``content_sha``. State grows with distinct
-    contents — use :func:`incremental_exact_dedup_bounded` when the stream
-    is unbounded."""
+    contents: there is no watermark, so no entry ever expires."""
     return stream.withColumn(
         "content_sha", F.sha2(F.col(content_col), 256)
     ).dropDuplicates(["content_sha"])
-
-
-def incremental_exact_dedup_bounded(
-    stream: DataFrame,
-    content_col: str = "content",
-    ts_col: str = "ingest_ts",
-    watermark: str = "24 hours",
-) -> DataFrame:
-    """Watermark-bounded incremental dedup: duplicates are suppressed within
-    the watermark horizon and state entries EXPIRE with it
-    (``dropDuplicatesWithinWatermark``) — the state store stays O(distinct
-    contents per horizon) on an unbounded 100 TB ingest stream, at the cost
-    of re-admitting a duplicate that reappears after the horizon."""
-    s = stream.withColumn(
-        "content_sha", F.sha2(F.col(content_col), 256)
-    ).withColumn(ts_col, F.col(ts_col).cast("timestamp"))
-    return s.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
-        ["content_sha"]
-    )
 
 
 def windowed_event_counts(
@@ -73,19 +51,24 @@ def windowed_event_counts(
     watermark: str = "2 hours",
     ts_col: str = "ts",
 ) -> DataFrame:
-    """Event-time tumbling window counts with late-data watermark."""
+    """Event-time tumbling window counts with late-data watermark. Sums
+    ride DECIMAL(18,2) and are cast to double once, so accumulation order
+    cannot drift the doubles."""
     # parquet written by pandas carries TIMESTAMP_NTZ; watermarks require
     # TIMESTAMP (with tz) — session tz is pinned UTC so the cast is lossless
     events = events.withColumn(ts_col, F.col(ts_col).cast("timestamp"))
     return (
         events.withWatermark(ts_col, watermark)
         .groupBy(F.window(F.col(ts_col), window).alias("w"), "event_type")
-        .agg(F.count(F.lit(1)).alias("cnt"), F.sum("value").alias("sum_value"))
+        .agg(
+            F.count(F.lit(1)).alias("cnt"),
+            F.sum(F.col("value").cast("decimal(18,2)")).alias("sv"),
+        )
         .select(
             F.col("w.start").alias("window_start"),
             "event_type",
             "cnt",
-            "sum_value",
+            F.col("sv").cast("double").alias("sum_value"),
         )
     )
 

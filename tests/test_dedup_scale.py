@@ -15,13 +15,12 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from belb_spark.operators.dedup import (
-    bucket_pair_stats,
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
     tokens_col,
 )
 from belb_spark.operators.blocking import shingles_col
-from belb_spark.operators.pairs import PairsConfig
+from belb_spark.operators.pairs import PairsConfig, pair_stats
 
 N_HOT = 120  # docs sharing one boilerplate 5-gram (a hot shingle bucket)
 
@@ -74,12 +73,12 @@ def test_capped_pairs_subset_of_exhaustive(spark):
 
 def test_bucket_pair_stats_reports_drops(spark):
     docs = _hot_corpus(spark)
-    ex = docs.select(
-        F.col("doc_id").alias("id"),
-        F.explode(shingles_col(tokens_col("text"), 5)).alias("s"),
+    blocks = docs.select(
+        F.col("doc_id").alias("uid"),
+        F.explode(shingles_col(tokens_col("text"), 5)).alias("block_key"),
     )
     cfg = PairsConfig(full_join_max=16, anchor_rank=4)
-    stats = bucket_pair_stats(ex, cfg).filter(F.col("block_size") > 16).collect()
+    stats = pair_stats(blocks, cfg).filter(F.col("block_size") > 16).collect()
     assert len(stats) == 1  # exactly the hot boilerplate shingle
     row = stats[0]
     assert row["block_size"] == N_HOT
@@ -112,7 +111,8 @@ def test_dense_ids_avoids_global_window(spark):
     """dense_ids ranks the DISTINCT key table and broadcast-joins back —
     no single-partition sort of the full table (VERDICT r1 'what's wrong' #1)."""
     from belb_spark.operators.relational import dense_ids
-    from belb_spark.plans import plan_string, uses_broadcast_join
+    from belb_spark.plans import plan_string
+    from plan_checks import uses_broadcast_join
 
     df = dense_ids(spark, "/root/testdata/sf0.001")
     assert uses_broadcast_join(df)

@@ -9,10 +9,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from belb_spark.operators import relational as R
-from belb_spark.plans import (
+from belb_spark.plans import plan_string
+from plan_checks import (
     arrow_eval_count,
+    final_plan_section,
     has_pushed_filters,
-    plan_string,
+    shuffle_count,
     uses_broadcast_join,
 )
 
@@ -73,23 +75,22 @@ def test_q1_agg_single_exchange(spark):
     # one partial-agg + one exchange + one final-agg: a codegen defeat (the
     # r2 CaseWhen incident, commit 5dd65f5) or a lost partial aggregation
     # would add exchanges and show up here instead of as a bench mystery
-    from belb_spark.plans import shuffle_count
-
     df = R.tpch_q1(spark, SF)
     assert shuffle_count(df) == 1
 
 
-def test_candidate_pairs_reuses_pinned_exchange_live(spark, tiny_spark):
-    """ADVICE r3: the scaling claims rest on the pinned repartition exchange
-    being evaluated ONCE across the self-join branches of a LIVE (non-
-    checkpointed) block derivation. AQE performs that reuse at runtime, so
-    assert on the executed final plan: the expensive subtree (two Arrow
-    stages: tokenizer + band keys) appears exactly once, and the other join
-    side reads a ReusedExchange of it."""
+def test_candidate_pairs_reuses_window_exchange_live(spark, tiny_spark):
+    """ADVICE r3: the scaling claims rest on the ``block_key`` exchange below
+    the ranking window being evaluated ONCE across the self-join branches of
+    a LIVE (non-checkpointed) block derivation. The ``repartition``
+    above the window never becomes an exchange of its own: Spark plans it
+    away. AQE performs the reuse at runtime, so assert on the executed final
+    plan: the expensive subtree (two Arrow stages: tokenizer + band keys)
+    appears exactly once, and the other branches read a ReusedExchange of
+    the window's exchange."""
     from belb_spark.operators.blocking import BlockingConfig, block_keys
     from belb_spark.operators.normalize import normalize
     from belb_spark.operators.pairs import candidate_pairs
-    from belb_spark.plans import final_plan_section
 
     # vacuous filter makes this plan canonically unique: other test files
     # cache an identical normalize(repos) plan, and the cache manager would
@@ -121,7 +122,8 @@ def test_dedup_r6_plan_shape(spark, tiny_spark):
         assert "array_distinct(transform" not in s, s[:2000]
         assert "ExistingRDD" in s
         assert "ShuffledHashJoin" in s
-        # builder self-joins ride the pinned exchange via the merge hint
+        # the merge hint keeps the builder self-joins shuffle-based, on the
+        # window's block_key exchange, instead of broadcasting one side
         assert "SortMergeJoin" in s
 
 
@@ -147,7 +149,6 @@ def test_block_keys_has_no_global_distinct(spark, tiny_spark):
     .distinct() would add a 17M-row shuffle at xxl."""
     from belb_spark.operators.blocking import BlockingConfig, block_keys
     from belb_spark.operators.normalize import normalize
-    from belb_spark.plans import plan_string, shuffle_count
 
     norm = normalize(
         tiny_spark["repos"].filter(F.col("uid") >= -2), tiny_spark["synonym_dict"]

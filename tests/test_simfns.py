@@ -76,11 +76,6 @@ def test_batch_kernels_match_scalar_reference():
     for i in range(len(cases)):
         assert lev[i] == pytest.approx(simfns.levenshtein_norm(t1[i], t2[i]), abs=1e-12)
 
-    for a, b in cases:
-        assert simfns.char_ngram_cosine_np(a, b) == pytest.approx(
-            simfns.char_ngram_cosine(a, b), abs=1e-9
-        )
-
 
 def test_rich_score_batch_matches_scalar_composition():
     cases = _random_cases(n=120, seed=13)
@@ -107,29 +102,3 @@ def test_token_jaccard_spark(spark):
     out = df.select(simfns.token_jaccard("ta", "tb").alias("j")).collect()
     assert out[0]["j"] == pytest.approx(2 / 4)
     assert out[1]["j"] == pytest.approx(1.0)
-
-
-def test_levenshtein_ratio_pins_python_levenshtein_semantics():
-    # python-Levenshtein.ratio normalizes the INDEL distance (sub cost 2):
-    # these values are the library's own outputs (ADVICE r3 — the uniform-
-    # cost formula in relational.group_similarity_stats gives 0.5 for the
-    # first case)
-    assert simfns.levenshtein_ratio("ab", "cd") == pytest.approx(0.0)
-    assert simfns.levenshtein_ratio("hello", "hallo") == pytest.approx(0.8)
-    assert simfns.levenshtein_ratio("", "") == pytest.approx(1.0)
-    assert simfns.levenshtein_ratio("a", "") == pytest.approx(0.0)
-    assert simfns.levenshtein_ratio("abc", "abc") == pytest.approx(1.0)
-    assert simfns.levenshtein_ratio("kitten", "sitting") == pytest.approx(
-        (6 + 7 - simfns.indel_distance("kitten", "sitting")) / 13
-    )
-    # indel == l1 + l2 - 2*LCS: LCS(kitten, sitting) = 4 ("ittn")
-    assert simfns.indel_distance("kitten", "sitting") == 6 + 7 - 2 * 4
-
-
-def test_levenshtein_ratio_batch_matches_scalar():
-    cases = _random_cases(n=150, seed=29)
-    got = simfns.levenshtein_ratio_batch(
-        [a for a, _ in cases], [b for _, b in cases]
-    )
-    for i, (a, b) in enumerate(cases):
-        assert got[i] == pytest.approx(simfns.levenshtein_ratio(a, b), abs=1e-12)

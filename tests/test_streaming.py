@@ -83,66 +83,3 @@ def test_windowed_counts_match_batch(spark, workdir):
         batch.select("window_start", "event_type", "cnt")
     )
     assert diff.count() == 0
-
-
-def test_bounded_dedup_state_expires(spark, workdir):
-    """dropDuplicatesWithinWatermark: duplicates inside the horizon are
-    suppressed; a duplicate arriving after the watermark passed its state
-    entry is re-admitted (state expired — the bounded-state contract)."""
-    import pandas as pd
-
-    from belb_spark.streaming.incremental import incremental_exact_dedup_bounded
-
-    in_dir, out_dir, ckpt = (
-        str(workdir / "in"),
-        str(workdir / "out"),
-        str(workdir / "ckpt"),
-    )
-    wave1 = pd.DataFrame(
-        {
-            "content": ["aaa", "aaa", "bbb"],
-            "ingest_ts": pd.to_datetime(
-                ["2024-01-01 00:00", "2024-01-01 00:30", "2024-01-01 00:40"]
-            ),
-        }
-    )
-    spark.createDataFrame(wave1).write.mode("overwrite").parquet(in_dir)
-    schema = "content string, ingest_ts timestamp"
-    stream = incremental_exact_dedup_bounded(
-        spark.readStream.schema(schema).parquet(in_dir),
-        watermark="1 hour",
-    )
-    run_available_now(stream, ckpt, out_dir)
-    out1 = spark.read.parquet(out_dir)
-    assert out1.count() == 2  # in-horizon duplicate suppressed
-
-    # wave 2: advances the watermark far past wave-1 state (expiry happens
-    # at the END of the batch that moves the watermark)
-    wave2 = pd.DataFrame(
-        {
-            "content": ["ccc"],
-            "ingest_ts": pd.to_datetime(["2024-01-03 00:00"]),
-        }
-    )
-    spark.createDataFrame(wave2).write.mode("append").parquet(in_dir)
-    stream = incremental_exact_dedup_bounded(
-        spark.readStream.schema(schema).parquet(in_dir),
-        watermark="1 hour",
-    )
-    run_available_now(stream, ckpt, out_dir)
-    assert spark.read.parquet(out_dir).count() == 3
-
-    # wave 3: 'aaa' reappears AFTER its state expired -> re-admitted
-    wave3 = pd.DataFrame(
-        {
-            "content": ["aaa"],
-            "ingest_ts": pd.to_datetime(["2024-01-03 00:05"]),
-        }
-    )
-    spark.createDataFrame(wave3).write.mode("append").parquet(in_dir)
-    stream = incremental_exact_dedup_bounded(
-        spark.readStream.schema(schema).parquet(in_dir),
-        watermark="1 hour",
-    )
-    run_available_now(stream, ckpt, out_dir)
-    assert spark.read.parquet(out_dir).count() == 4  # expired dup re-admitted
