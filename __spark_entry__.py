@@ -580,8 +580,11 @@ def q_stream_dedup_exact(spark, sf_dir):
     dedup, checkpointed to a scratch dir. WHICH row of a duplicate group
     survives a micro-batch is not contracted (dropDuplicates keeps an
     arbitrary one) — the DISTINCT content-hash set is, and must equal the
-    batch semantics the oracle computes."""
+    batch semantics the oracle computes. The ingest and checkpoint dirs are
+    removed once the drain returns; the output dir stays, because the
+    returned DataFrame reads it lazily."""
     import os
+    import shutil
     import tempfile
 
     from belb_spark.streaming.incremental import (
@@ -593,14 +596,17 @@ def q_stream_dedup_exact(spark, sf_dir):
     # the file stream source ingests a DIRECTORY; testdata ships the table
     # as one parquet file — link it into a scratch ingest dir
     ingest = tempfile.mkdtemp(prefix="belb_stream_in_")
-    os.symlink(
-        f"{sf_dir}/documents.parquet", os.path.join(ingest, "documents.parquet")
-    )
-    stream = read_repo_stream(spark, ingest)
-    dd = incremental_exact_dedup(stream, "text")
     ck = tempfile.mkdtemp(prefix="belb_stream_ck_")
     outp = tempfile.mkdtemp(prefix="belb_stream_out_")
-    run_available_now(dd, ck, outp)
+    try:
+        os.symlink(
+            f"{sf_dir}/documents.parquet", os.path.join(ingest, "documents.parquet")
+        )
+        stream = read_repo_stream(spark, ingest)
+        run_available_now(incremental_exact_dedup(stream, "text"), ck, outp)
+    finally:
+        shutil.rmtree(ingest, ignore_errors=True)
+        shutil.rmtree(ck, ignore_errors=True)
     return spark.read.parquet(outp).select("content_sha").distinct()
 
 
@@ -651,8 +657,10 @@ def q_stream_hourly_window(spark, sf_dir):
     (streaming/incremental.windowed_event_counts) into a complete-mode
     memory sink — append mode would hold back windows the watermark has
     not passed, complete emits the full result, which must equal the batch
-    GROUP BY the oracle computes."""
+    GROUP BY the oracle computes. The ingest dir is removed once the drain
+    returns: the memory sink holds the result."""
     import os
+    import shutil
     import tempfile
     import uuid
 
@@ -662,17 +670,20 @@ def q_stream_hourly_window(spark, sf_dir):
     )
 
     ingest = tempfile.mkdtemp(prefix="belb_stream_ev_")
-    os.symlink(f"{sf_dir}/events.parquet", os.path.join(ingest, "events.parquet"))
-    agg = windowed_event_counts(read_repo_stream(spark, ingest))
     name = f"stream_hourly_{uuid.uuid4().hex[:8]}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    try:
+        os.symlink(f"{sf_dir}/events.parquet", os.path.join(ingest, "events.parquet"))
+        agg = windowed_event_counts(read_repo_stream(spark, ingest))
+        q = (
+            agg.writeStream.format("memory")
+            .queryName(name)
+            .outputMode("complete")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination()
+    finally:
+        shutil.rmtree(ingest, ignore_errors=True)
     return spark.table(name)
 
 

@@ -9,8 +9,10 @@ Training-data-pipeline dedup family, each expressed Spark-first:
   in any engine and the DuckDB oracles can check it; min over fixed-width
   lowercase hex == numeric min, so no integer casts are needed anywhere.
   xxhash64 only compresses the bucket keys fed to the pair builder
-  (:func:`_bucket_pairs`). The ER pipeline's blocking uses neither: its
-  band keys come from a blake2b Arrow UDF (blocking.py)
+  (:func:`_bucket_pairs`). The ER pipeline's blocking shingles through the
+  same :func:`blocking.shingles_col` but min-hashes with ``xxhash64(p,
+  shingle)`` (blocking.py); dedup keeps md5 because its DuckDB oracles need
+  a hash that both engines compute alike
 - SimHash — bitwise majority over token hashes, built from md5 nibbles so it
   is engine-portable too
 - n-gram Jaccard — shingle-set similarity over candidate pairs

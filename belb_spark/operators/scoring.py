@@ -15,28 +15,22 @@ reported on test — belb split discipline, belb/corpora/parser.py:19-27).
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from belb_spark.functions.simfns import make_rich_score_udf, token_jaccard
 
 
-@dataclass(frozen=True)
-class ScoringConfig:
-    jaccard_prefilter: float = 0.35   # cheap JVM cut before Arrow transfer
-    w_jacc: float = 0.5
-    w_jw: float = 0.25
-    w_lev: float = 0.35
-    w_cos: float = 0.40
-    clip_chars: int = 600
-    threshold: float = 0.62           # final edge cut (dev-tuned)
+JACCARD_PREFILTER = 0.35   # cheap JVM cut before Arrow transfer
+W_JACC = 0.5
+W_JW = 0.25
+W_LEV = 0.35
+W_COS = 0.40
+CLIP_CHARS = 600
+THRESHOLD = 0.62           # final edge cut (unless tuned on dev)
 
 
-def score_pairs(
-    pairs: DataFrame, normalized: DataFrame, cfg: ScoringConfig = ScoringConfig()
-) -> DataFrame:
+def score_pairs(pairs: DataFrame, normalized: DataFrame) -> DataFrame:
     """(uid_a, uid_b) + normalized (uid, token_set, norm_text) ->
     (uid_a, uid_b, score).
 
@@ -66,20 +60,20 @@ def score_pairs(
             "uid_b",
         )
         .withColumn("jacc", token_jaccard("ts_a", "ts_b"))
-        .filter(F.col("jacc") >= F.lit(cfg.jaccard_prefilter))
+        .filter(F.col("jacc") >= F.lit(JACCARD_PREFILTER))
     )
     # the Python-UDF stage gets its own exchange at 3 waves per core:
     # pipelining the UDF straight off the payload join raised local[4]
     # throughput but left local[16] flat, lowering the N→4N scaling ratio
     # (measured r4 at xxl)
     payloads = payloads.repartition(3 * spark.sparkContext.defaultParallelism)
-    rich = make_rich_score_udf(cfg.w_jw, cfg.w_lev, cfg.w_cos, cfg.clip_chars)
+    rich = make_rich_score_udf(W_JW, W_LEV, W_COS, CLIP_CHARS)
     return payloads.select(
         "uid_a",
         "uid_b",
         (
-            F.col("jacc") * cfg.w_jacc
-            + rich(F.col("nt_a"), F.col("nt_b")) * (1.0 - cfg.w_jacc)
+            F.col("jacc") * W_JACC
+            + rich(F.col("nt_a"), F.col("nt_b")) * (1.0 - W_JACC)
         ).alias("score"),
     )
 

@@ -12,36 +12,34 @@ from __future__ import annotations
 import dataclasses
 import json
 import pathlib
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 from typing import Any
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from belb_spark.checkpoint import CheckpointStore, config_signature, input_fingerprint
-from belb_spark.operators.blocking import BlockingConfig, block_keys
+from belb_spark.operators.blocking import block_keys
 from belb_spark.operators.clustering import connected_components
 from belb_spark.operators.evaluate import metrics_dict, pairwise_metrics
 from belb_spark.operators.normalize import check_sha_invariant, exact_anchor, normalize
-from belb_spark.operators.pairs import PairsConfig, candidate_pairs
-from belb_spark.operators.scoring import ScoringConfig, edges_from_scores, score_pairs
+from belb_spark.operators.pairs import candidate_pairs
+from belb_spark.operators.scoring import THRESHOLD, edges_from_scores, score_pairs
 from belb_spark.session import codegen_compiles
 
 
 # One physical path per stage: every stage checkpoints synchronously (build →
 # plain-Parquet write at the build's own partitioning → read back), and the
 # within-block self-join is the anchor-capped, salted builder. Only logical
-# knobs live here; they are all part of the resume signature. Physical
-# choices are not knobs: CC checkpoint durability follows the master
-# (clustering.reliable_checkpoints).
+# knobs live here; they are all part of the resume signature. Blocking,
+# pair and scoring parameters are module constants, covered by the stage
+# schema version. Physical choices are not knobs: CC checkpoint durability
+# follows the master (clustering.reliable_checkpoints).
 @dataclass(frozen=True)
 class ERConfig:
-    blocking: BlockingConfig = field(default_factory=BlockingConfig)
-    pairs: PairsConfig = field(default_factory=PairsConfig)
-    scoring: ScoringConfig = field(default_factory=ScoringConfig)
     cc_max_iter: int = 30
     # tune the edge threshold on labeled dev pairs (belb split discipline)
-    # instead of using scoring.threshold verbatim
+    # instead of using scoring.THRESHOLD verbatim
     tune_on_dev: bool = False
 
 
@@ -49,8 +47,10 @@ class ERConfig:
 # retyped): a resume against parquet written by another version must rebuild
 # rather than fail mid-pipeline on a missing column. v3 = pair stats are
 # committed in the 03_candidates manifest. v4 = 01_normalize stores the
-# exact-duplicate anchor and 02–04 hold representatives only.
-_STAGE_SCHEMA_VERSION = 4
+# exact-duplicate anchor and 02–04 hold representatives only. v5 = band
+# keys are xxhash64 min-hashes (were blake2b); bump too when a blocking,
+# pair or scoring constant changes what a stage holds.
+_STAGE_SCHEMA_VERSION = 5
 
 
 @dataclass
@@ -171,7 +171,7 @@ def _run_pipeline_body(
     # parquet round-trip feeds the self-join branches cheaper than
     # re-flowing the live minhash, 52.5s vs 45.8s for 02+03 at local[16];
     # keep the two-stage shape.)
-    blocks_res = store.run("02_blocks", sig, lambda: block_keys(reps, cfg.blocking))
+    blocks_res = store.run("02_blocks", sig, lambda: block_keys(reps))
     metrics["block_rows"] = blocks_res.rows
 
     # 3. candidate pairs between representatives. The no-silent-caps
@@ -183,7 +183,7 @@ def _run_pipeline_body(
     cand_res = store.run(
         "03_candidates",
         sig,
-        lambda: candidate_pairs(blocks_res.df, cfg.pairs, observe=pair_obs),
+        lambda: candidate_pairs(blocks_res.df, observe=pair_obs),
         metrics=lambda: dict(pair_obs.get),
     )
     stats = cand_res.metrics
@@ -193,13 +193,11 @@ def _run_pipeline_body(
     metrics["candidate_pairs"] = cand_res.rows
 
     # 4. scoring
-    scores_res = store.run(
-        "04_scores", sig, lambda: score_pairs(cand_res.df, reps, cfg.scoring)
-    )
+    scores_res = store.run("04_scores", sig, lambda: score_pairs(cand_res.df, reps))
     metrics["pairs_scored"] = scores_res.rows
     metrics["scoring_wall_sec"] = scores_res.wall_sec
 
-    threshold = cfg.scoring.threshold
+    threshold = THRESHOLD
     if cfg.tune_on_dev and labeled_pairs is not None:
         from belb_spark.operators.evaluate import tune_threshold
 

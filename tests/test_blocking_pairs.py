@@ -1,7 +1,7 @@
 import pytest
 from pyspark.sql import functions as F
 
-from belb_spark.operators.blocking import BlockingConfig, block_keys
+from belb_spark.operators.blocking import block_keys
 from belb_spark.operators.normalize import exact_anchor, normalize
 from belb_spark.operators.pairs import PairsConfig, candidate_pairs, pair_stats
 
@@ -13,12 +13,12 @@ def norm(tiny_spark):
 
 @pytest.fixture(scope="module")
 def blocks(norm):
-    return block_keys(norm, BlockingConfig()).cache()
+    return block_keys(norm).cache()
 
 
 def test_block_keys_deterministic(norm):
-    a = block_keys(norm, BlockingConfig())
-    b = block_keys(norm, BlockingConfig())
+    a = block_keys(norm)
+    b = block_keys(norm)
     assert a.exceptAll(b).count() == 0 and b.exceptAll(a).count() == 0
 
 
@@ -32,6 +32,33 @@ def test_key_families_present(blocks):
     # exactly two families: exact duplicates are contracted at normalize
     mh = {f for f in fams if f.startswith("mh")}
     assert mh and fams - mh == {"pfx"}
+
+
+def test_band_keys_are_min_hashes_over_shingles(spark):
+    """Band key b is ``mh{b}:`` + min-hashes 2b and 2b+1, where min-hash p
+    is the min of ``xxhash64(p, shingle)`` over ``shingles_col``: an empty
+    token array has no shingles and keeps only its prefix key, a 1- or
+    2-token row has one whole-text shingle and all 8 band keys, and equal
+    token arrays get equal key sets."""
+    rows = [
+        (1, []),
+        (2, ["a"]),
+        (3, ["a", "b"]),
+        (4, ["w", "x", "y", "z"]),
+        (5, ["w", "x", "y", "z"]),
+    ]
+    df = spark.createDataFrame(rows, "uid long, norm_tokens array<string>")
+    keys: dict[int, set[str]] = {}
+    for r in block_keys(df).collect():
+        keys.setdefault(r["uid"], set()).add(r["block_key"])
+
+    assert keys[1] == {"pfx:"}
+    for uid in (2, 3):
+        mh = {k.split(":")[0] for k in keys[uid] if k.startswith("mh")}
+        assert mh == {f"mh{b}" for b in range(8)}, keys[uid]
+    assert keys[4] == keys[5]
+    h0, h1 = spark.sql("SELECT xxhash64(0, 'a b'), xxhash64(1, 'a b')").first()
+    assert f"mh0:{h0}_{h1}" in keys[3]
 
 
 def test_positive_pairs_covered_by_blocking(blocks, tiny_spark):

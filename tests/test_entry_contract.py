@@ -65,3 +65,19 @@ def test_query_matches_oracle(spark, duck, name):
             assert np.allclose(sdf[c], odf[c], rtol=0, atol=0, equal_nan=True), c
         else:
             assert sdf[c].equals(odf[c]), c
+
+
+def test_stream_queries_remove_scratch_dirs(spark, tmp_path, monkeypatch):
+    """Both streaming queries remove their ingest and checkpoint dirs once
+    the drain returns. Only the dedup output dir stays: the returned
+    DataFrame reads it lazily."""
+    import tempfile
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    qs = entrymod.queries()
+    for name in ("stream_dedup_exact", "stream_hourly_window"):
+        assert qs[name](spark, SF).collect(), name
+    left = [p.name for p in tmp_path.iterdir()]
+    scratch = ("belb_stream_in_", "belb_stream_ck_", "belb_stream_ev_")
+    assert not [n for n in left if n.startswith(scratch)], left
+    assert [n for n in left if n.startswith("belb_stream_out_")], left

@@ -41,10 +41,10 @@ def test_scan_prunes_columns(spark):
 
 
 def test_scoring_has_exactly_one_python_stage(spark, tiny_spark):
-    from belb_spark.operators.blocking import BlockingConfig, block_keys
+    from belb_spark.operators.blocking import block_keys
     from belb_spark.operators.normalize import normalize
     from belb_spark.operators.pairs import candidate_pairs
-    from belb_spark.operators.scoring import ScoringConfig, score_pairs
+    from belb_spark.operators.scoring import score_pairs
 
     norm = normalize(tiny_spark["repos"], tiny_spark["synonym_dict"])
     # normalization itself is one Arrow stage (tokenize+canonicalize fused)
@@ -52,10 +52,10 @@ def test_scoring_has_exactly_one_python_stage(spark, tiny_spark):
     # stage boundary (the pipeline checkpoints here) — downstream plans
     # must not re-evaluate upstream Python stages
     norm_ck = norm.localCheckpoint(eager=True)
-    blocks = block_keys(norm_ck, BlockingConfig())
-    assert arrow_eval_count(blocks) == 1  # the band-key UDF only
+    blocks = block_keys(norm_ck)
+    assert arrow_eval_count(blocks) == 0  # band keys are JVM min-hashes
     pairs = candidate_pairs(blocks).localCheckpoint(eager=True)
-    scored = score_pairs(pairs, norm_ck, ScoringConfig())
+    scored = score_pairs(pairs, norm_ck)
     # scoring adds exactly ONE Python stage (the rich scorer); the Jaccard
     # prefilter stays JVM-side
     s = plan_string(scored, "simple")
@@ -85,10 +85,10 @@ def test_candidate_pairs_reuses_window_exchange_live(spark, tiny_spark):
     a LIVE (non-checkpointed) block derivation. The ``repartition``
     above the window never becomes an exchange of its own: Spark plans it
     away. AQE performs the reuse at runtime, so assert on the executed final
-    plan: the expensive subtree (two Arrow stages: tokenizer + band keys)
-    appears exactly once, and the other branches read a ReusedExchange of
-    the window's exchange."""
-    from belb_spark.operators.blocking import BlockingConfig, block_keys
+    plan: the expensive subtree (the tokenizer's Arrow stage under the
+    band-key min-hashes) appears exactly once, and the other branches read a
+    ReusedExchange of the window's exchange."""
+    from belb_spark.operators.blocking import block_keys
     from belb_spark.operators.normalize import normalize
     from belb_spark.operators.pairs import candidate_pairs
 
@@ -98,10 +98,10 @@ def test_candidate_pairs_reuses_window_exchange_live(spark, tiny_spark):
     # node counts below
     repos = tiny_spark["repos"].filter(F.col("uid") >= -1)
     norm = normalize(repos, tiny_spark["synonym_dict"])
-    pairs = candidate_pairs(block_keys(norm, BlockingConfig()))
+    pairs = candidate_pairs(block_keys(norm))
     pairs.collect()
     s = final_plan_section(pairs)
-    assert s.count("ArrowEvalPython") == 2, s
+    assert s.count("ArrowEvalPython") == 1, s
     assert s.count("ReusedExchange") >= 1, s
 
 
@@ -147,12 +147,12 @@ def test_block_keys_has_no_global_distinct(spark, tiny_spark):
     prefixed and per-row unique) — the plan must carry exactly ONE exchange
     (the pinned block_key repartition) and no aggregate; a reintroduced
     .distinct() would add a 17M-row shuffle at xxl."""
-    from belb_spark.operators.blocking import BlockingConfig, block_keys
+    from belb_spark.operators.blocking import block_keys
     from belb_spark.operators.normalize import normalize
 
     norm = normalize(
         tiny_spark["repos"].filter(F.col("uid") >= -2), tiny_spark["synonym_dict"]
     )
-    blocks = block_keys(norm, BlockingConfig())
+    blocks = block_keys(norm)
     assert shuffle_count(blocks) == 1
     assert "HashAggregate" not in plan_string(blocks, "simple")

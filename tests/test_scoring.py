@@ -9,7 +9,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from belb_spark.operators.scoring import ScoringConfig, score_pairs
+from belb_spark.operators.scoring import score_pairs
 
 
 def test_whitespace_symbols_not_conflated(spark):
@@ -30,7 +30,7 @@ def test_whitespace_symbols_not_conflated(spark):
     )
     scored = {
         (r["uid_a"], r["uid_b"]): r["score"]
-        for r in score_pairs(pairs, normalized, ScoringConfig()).collect()
+        for r in score_pairs(pairs, normalized).collect()
     }
     # identical token sequences: jaccard 1.0, full score
     assert (1, 3) in scored and scored[(1, 3)] > 0.9
