@@ -114,8 +114,10 @@ def q_simhash(spark, sf_dir):
 
 
 def q_cc_clusters(spark, sf_dir):
-    """Near-dup clusters: CC over ngram-jaccard edges (iterative large-star/
-    small-star — the pipeline's clustering operator on real testdata)."""
+    """Near-dup clusters: CC over ngram-jaccard edges (the pipeline's
+    clustering operator on real testdata: union-find on the driver up to
+    clustering.DRIVER_EDGE_BOUND edges, large-star/small-star rounds
+    above)."""
     docs = _docs(spark, sf_dir)
     edges = ngram_jaccard_pairs(docs, "doc_id", "text", NGRAM_W, 0.3).select(
         F.col("id_a").alias("uid_a"), F.col("id_b").alias("uid_b")
@@ -2201,8 +2203,9 @@ FROM documents GROUP BY lang
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship on sf0.001: near-duplicate document clusters — MinHash-LSH
-    blocking → Jaccard scoring → large-star/small-star clustering, the same
-    skeleton as the full ER pipeline (belb_spark.pipeline)."""
+    blocking → Jaccard scoring → connected-components clustering (driver
+    union-find below clustering.DRIVER_EDGE_BOUND edges), the same skeleton
+    as the full ER pipeline (belb_spark.pipeline)."""
     sf_dir = "/root/testdata/sf0.001"
     docs = _docs(spark, sf_dir)
     edges = minhash_lsh_pairs(docs, "doc_id", "text", 8, 2, 3, 0.2).select(

@@ -97,7 +97,7 @@ def _bucket_pairs(exploded: DataFrame, cfg: PairsConfig) -> DataFrame:
     above — a hot bucket cannot emit O(n²) pairs onto one reducer.
 
     Bucket keys are xxhash64-compressed to 8 bytes before the builder: the
-    window sort and both shuffles compare longs instead of ~30-70 char
+    window sort and the join's shuffles compare longs instead of ~30-70 char
     shingle/band strings. Provably output-neutral here: a 64-bit collision
     can only ADD candidate pairs, and every emitted pair is verified with
     the true shingle-set Jaccard (> 0 requires a genuinely shared shingle,

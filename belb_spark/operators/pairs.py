@@ -14,13 +14,15 @@ pairs. Two structural defenses:
 2. **Anchor-capped, salted join** (:func:`candidate_pairs`). Blocks of
    ≤ ``full_join_max`` rows emit all pairs. Above that, rows are ranked by
    uid within the block and only the first ``anchor_rank`` rows (the
-   anchors) pair with the others. Members are hashed into salt buckets of
-   ~``rows_per_salt`` rows and the anchors are replicated into every
-   bucket, so a hot block of n rows emits ≤ anchor_rank·n pairs AND spreads
-   over several reducers. Connectivity to the block's anchors is preserved
-   (that is all transitive clustering needs). Dropped-pair counts are
-   observable: emitted vs theoretical pair counts land in the metrics
-   (no silent caps).
+   anchors) pair with the others. Every row is hashed into a salt bucket of
+   ~``rows_per_salt`` rows of its block and the left rows (all rows of a
+   small block, a hot block's anchors) are replicated into every bucket, so
+   one equi-join on (block_key, salt) serves every block: a hot block of n
+   rows emits ≤ anchor_rank·n pairs AND spreads over several reducers.
+   Singleton blocks are purged before the join. Connectivity to the block's
+   anchors is preserved (that is all transitive clustering needs).
+   Dropped-pair counts are observable: emitted vs theoretical pair counts
+   land in the metrics (no silent caps).
 
 Output is unique on (uid_a, uid_b), uid_a < uid_b (FIXTURES.md invariant 3).
 """
@@ -47,11 +49,10 @@ def _rank_and_size(blocks: DataFrame) -> DataFrame:
     table is shuffled and sorted once and walked once — the second sorted
     pass the r2 judge flagged (VERDICT "What's wrong" #2) is gone.
 
-    :func:`candidate_pairs` fans the ranked table into four branches. Each
-    branch re-runs this (cheap) window, but all of them read the ONE
-    ``block_key`` exchange below it: the subtrees under the window are
-    identical, AQE reuses the exchange, and the block-key derivation under
-    it (minhash over every doc) runs once.
+    Both sides of :func:`candidate_pairs`' join re-run this (cheap) window,
+    but both read the ONE ``block_key`` exchange below it: the subtrees
+    under the window are identical, AQE reuses the exchange, and the
+    block-key derivation under it (minhash over every doc) runs once.
     """
     w = Window.partitionBy("block_key").orderBy("uid")
     return blocks.withColumn("rn", F.row_number().over(w)).withColumn(
@@ -76,8 +77,8 @@ def _cap_policy(n: Column, cfg: PairsConfig) -> tuple[Column, Column]:
 
 def observed_pair_stats(cfg: PairsConfig) -> list:
     """Aggregate expressions for a Spark Observation over the ranked block
-    table (one row per (uid, block_key), under the repartition fence of
-    :func:`candidate_pairs`): per-block facts are read off the rn == 1 row
+    table (one row per (uid, block_key), before :func:`candidate_pairs`
+    purges singleton blocks): per-block facts are read off the rn == 1 row
     (it exists exactly once per block and carries bn), so the
     no-silent-caps accounting (emitted vs theoretical pairs, max block,
     block rows) rides the candidates action itself — no second evaluation
@@ -102,34 +103,36 @@ def candidate_pairs(
 ) -> DataFrame:
     """(uid, block_key) -> unique (uid_a, uid_b), uid_a < uid_b.
 
-    Small blocks (≤ ``full_join_max`` rows) emit all pairs. A hot block's
-    rows are split into salt buckets of ~``rows_per_salt`` rows, and only
-    its ``anchor_rank`` anchor rows are replicated into every bucket: pairs
-    form between anchors and bucket members, so connectivity through the
-    anchors is preserved while no reducer reads more than one bucket of a
-    hot key, however hot.
+    Blocks of ≤ ``full_join_max`` rows emit all pairs. Above that only a
+    block's ``anchor_rank`` smallest uids (its anchors) pair with the other
+    rows, so connectivity through the anchors is preserved while a hot block
+    of n rows emits ≤ anchor_rank·n pairs.
 
-    Physical shape: a window tags (rn, bn) (:func:`_rank_and_size`) and
-    every branch (both sides of the small-block self-join, the hot members,
-    the hot anchors) reads the one reused ``block_key`` exchange below it.
-    The ``repartition("block_key")`` above the window is a fence over the
-    ranked table: Spark plans it away (the window's exchange already
-    partitions by block_key), but removing it changes every caller's plan.
-    Hot rows take one more shuffle, on (block_key, salt).
+    Physical shape: ONE salted equi-join on ``(block_key, salt)``. A window
+    tags (rn, bn) (:func:`_rank_and_size`); singleton blocks (bn == 1) are
+    purged after it, since they cannot pair. Each row gets
+    ``salt = pmod(xxhash64(uid), ceil(bn / rows_per_salt))``, so no bucket
+    holds much more than ``rows_per_salt`` rows, however hot its block. The
+    right side is every row in its own salt; the left side is every row of
+    a small block and the anchors of a hot block, each replicated into every
+    salt of its block. Both sides read the one reused ``block_key`` exchange
+    below the window and take one ``(block_key, salt)`` exchange each; a
+    final ``distinct`` drops pairs that share several blocks.
 
     ``observe``: optional ``pyspark.sql.Observation`` that receives the
     :func:`observed_pair_stats` aggregates when the returned plan executes.
-    They sit on the ranked table under the fence, so each branch's window
-    pass carries an identical copy over all rows, and Spark reports one
-    value per observation name: the ledger counts every block once.
+    They sit on the ranked table before the purge, so both join sides carry
+    an identical copy over all rows, and Spark reports one value per
+    observation name: the ledger counts every block once.
 
-    ``hot_tier``: ``'anchor'`` (default) emits only anchor→member pairs
-    above the cap — connectivity-preserving, which is all transitive
-    clustering needs; a hot block's member–member pairs are counted in the
-    ledger, not emitted. ``'within_salt'`` additionally emits ALL pairs
-    inside each salt bucket — bounded O(rows_per_salt·n) work that recovers
-    most member–member recall for standalone dedup. Cross-bucket member
-    pairs stay connected only through the replicated anchors.
+    ``hot_tier``: ``'anchor'`` (default) emits only the anchors' pairs above
+    the cap — connectivity-preserving, which is all transitive clustering
+    needs; a hot block's member–member pairs are counted in the ledger, not
+    emitted. ``'within_salt'`` also puts every non-anchor row on the left in
+    its own salt, so ALL pairs inside each salt bucket are emitted — bounded
+    O(rows_per_salt·n) work that recovers most member–member recall for
+    standalone dedup. Cross-bucket member pairs stay connected only through
+    the anchors.
     """
     if hot_tier not in ("anchor", "within_salt"):
         raise ValueError(
@@ -138,68 +141,38 @@ def candidate_pairs(
     ranked = _rank_and_size(blocks)
     if observe is not None:
         ranked = ranked.observe(observe, *observed_pair_stats(cfg))
-    ranked = ranked.repartition("block_key")
-
-    # small blocks: within-block self-join, both sides off the reused
-    # exchange, already co-partitioned by block_key. The merge hint is
-    # load-bearing (r6): Catalyst's size estimate otherwise BROADCASTS the
-    # right side, which wraps it in a BroadcastExchange that re-evaluates
-    # the whole window tower instead of reading the reused exchange
-    # (static broadcasts sit outside AQE stage reuse — measured 1.6x the
-    # builder wall at sf1.0); a shuffle-based join keeps both sides on the
-    # one materialized exchange and spills gracefully at any scale
-    small = ranked.filter(F.col("bn") <= cfg.full_join_max)
-    s_left = small.select("block_key", F.col("uid").alias("uid_a"))
-    s_right = small.select("block_key", F.col("uid").alias("uid_b")).hint("merge")
-    small_pairs = (
-        s_left.join(s_right, "block_key")
-        .filter(F.col("uid_a") < F.col("uid_b"))
-        .select("uid_a", "uid_b")
-    )
-
-    # hot blocks: salt members by pmod(xxhash64(uid), ceil(bn / rows_per_salt));
-    # replicate anchors to every salt bucket
-    hot = ranked.filter(F.col("bn") > cfg.full_join_max)
     n_salts = F.greatest(
         F.lit(1), F.ceil(F.col("bn") / F.lit(rows_per_salt)).cast("int")
     )
-    members = hot.select(
-        "block_key",
-        F.pmod(F.xxhash64("uid"), n_salts).cast("int").alias("salt"),
-        F.col("uid").alias("uid_b"),
-    )
-    anchors = (
-        hot.filter(F.col("rn") <= cfg.anchor_rank)
-        .withColumn("salt_arr", F.sequence(F.lit(0), n_salts - 1))
-        .select(
-            "block_key",
-            F.explode("salt_arr").alias("salt"),
-            F.col("uid").alias("uid_a"),
-        )
-    )
-    # same merge hint as the small self-join: keep the members side on its
-    # pinned (block_key, salt) exchange instead of a broadcast re-evaluation
-    members_p = members.repartition("block_key", "salt").hint("merge")
-    hot_pairs = (
-        anchors.join(members_p, ["block_key", "salt"])
-        .filter(F.col("uid_a") != F.col("uid_b"))
-        .select(
-            F.least("uid_a", "uid_b").alias("uid_a"),
-            F.greatest("uid_a", "uid_b").alias("uid_b"),
-        )
+    salt = F.pmod(F.xxhash64("uid"), n_salts).cast("int")
+    # a left row that pairs with every row of its block sits in every salt;
+    # a hot block's other rows sit on the left only under within_salt, in
+    # their own salt (a NULL array explodes to no row)
+    left_salts = F.when(
+        (F.col("bn") <= cfg.full_join_max) | (F.col("rn") <= cfg.anchor_rank),
+        F.sequence(F.lit(0), n_salts - 1),
     )
     if hot_tier == "within_salt":
-        # exhaustive pairs inside each salt bucket: both sides read the same
-        # pinned (block_key, salt) exchange, every reducer group is bounded
-        # by ~rows_per_salt members
-        w_left = members_p.select("block_key", "salt", F.col("uid_b").alias("uid_a"))
-        within = (
-            w_left.join(members_p, ["block_key", "salt"])
-            .filter(F.col("uid_a") < F.col("uid_b"))
-            .select("uid_a", "uid_b")
-        )
-        hot_pairs = hot_pairs.unionByName(within)
-    return small_pairs.unionByName(hot_pairs).distinct()
+        left_salts = left_salts.otherwise(F.array(salt))
+    rows = ranked.filter(F.col("bn") > 1).select(
+        "block_key", "uid", salt.alias("salt"), left_salts.alias("left_salts")
+    )
+    left = rows.select(
+        "block_key", F.explode("left_salts").alias("salt"), F.col("uid").alias("uid_a")
+    )
+    # the merge hint is load-bearing (r6): Catalyst's size estimate otherwise
+    # BROADCASTS the right side, which wraps it in a BroadcastExchange that
+    # re-evaluates the whole window tower instead of reading the reused
+    # exchange (static broadcasts sit outside AQE stage reuse — measured 1.6x
+    # the builder wall at sf1.0); a shuffle-based join keeps both sides on
+    # the one materialized exchange and spills gracefully at any scale
+    right = rows.select("block_key", "salt", F.col("uid").alias("uid_b")).hint("merge")
+    return (
+        left.join(right, ["block_key", "salt"])
+        .filter(F.col("uid_a") < F.col("uid_b"))
+        .select("uid_a", "uid_b")
+        .distinct()
+    )
 
 
 def pair_stats(blocks: DataFrame, cfg: PairsConfig = PairsConfig()) -> DataFrame:

@@ -65,7 +65,8 @@ def run_pipeline(
     repos: DataFrame,
     synonym_dict: DataFrame | None = None,
     labeled_pairs: DataFrame | None = None,
-    checkpoint_dir: str | None = None,
+    *,
+    checkpoint_dir: str,
     cfg: ERConfig = ERConfig(),
 ) -> ERResult:
     # the resume signature covers config, input identity AND the stage
@@ -81,10 +82,6 @@ def run_pipeline(
     )
     metrics: dict[str, Any] = {}
 
-    if checkpoint_dir is None:
-        import tempfile
-
-        checkpoint_dir = tempfile.mkdtemp(prefix="belb_spark_ckpt_")
     store = CheckpointStore(spark, checkpoint_dir)
 
     # sha-invariant / QAQC count jobs run on a side thread, overlapped with
@@ -168,7 +165,7 @@ def _run_pipeline_body(
     # 2. blocking keys of the representatives — checkpointed. (Measured
     # alternative at xxl: fusing blocks into the candidates stage saved one
     # stage floor but cost MORE in the fused window tower — the compact
-    # parquet round-trip feeds the self-join branches cheaper than
+    # parquet round-trip feeds the pair builder's join cheaper than
     # re-flowing the live minhash, 52.5s vs 45.8s for 02+03 at local[16];
     # keep the two-stage shape.)
     blocks_res = store.run("02_blocks", sig, lambda: block_keys(reps))
@@ -267,22 +264,4 @@ def _run_pipeline_body(
     (pathlib.Path(checkpoint_dir) / "metrics.json").write_text(
         json.dumps({"stages": stage_log, "metrics": metrics}, indent=2, default=str)
     )
-    # metrics as a queryable table (Iceberg metrics table in prod)
-    try:
-        import pandas as _pd
-
-        _pd.DataFrame(
-            [
-                {k: v for k, v in e.items() if not isinstance(v, (list, dict))}
-                for e in stage_log
-            ]
-        ).to_parquet(pathlib.Path(checkpoint_dir) / "metrics.parquet", index=False)
-    except Exception as err:  # noqa: BLE001 - metrics.json is authoritative
-        import warnings
-
-        warnings.warn(
-            f"metrics.parquet not written (metrics.json was): {err!r}",
-            RuntimeWarning,
-            stacklevel=3,
-        )
     return ERResult(assignment=assignment, metrics=metrics, stages=stage_log)

@@ -51,9 +51,12 @@ def main() -> int:
     from belb_spark.pipeline import ERConfig
 
     er_cfg = ERConfig(tune_on_dev=args.tune)
-    res = run_pipeline(
-        spark, repos, syn, lp, checkpoint_dir=args.checkpoint_dir, cfg=er_cfg
-    )
+    # only res.metrics is read below, so a run without --checkpoint-dir
+    # drops its checkpoints when the call returns
+    with tempfile.TemporaryDirectory() as tmp:
+        res = run_pipeline(
+            spark, repos, syn, lp, checkpoint_dir=args.checkpoint_dir or tmp, cfg=er_cfg
+        )
     print(json.dumps({"scale": args.scale, **res.metrics}, default=str))
 
     f1 = res.metrics["eval"]["test"]["f1"]

@@ -95,27 +95,45 @@ def test_candidate_pairs_match_reference(blocks):
     """candidate_pairs equals a pure-Python reference of the anchor cap over
     the collected blocks: every pair inside a block of ≤ full_join_max rows,
     otherwise the pairs (a, b), a < b, whose a is among the block's first
-    anchor_rank uids — whatever the salt granularity."""
+    anchor_rank uids — whatever the salt granularity. With
+    hot_tier='within_salt' every pair inside a salt bucket is added, the
+    salts recomputed here from the documented rule
+    pmod(xxhash64(uid), ceil(bn / rows_per_salt))."""
     members: dict[str, list[int]] = {}
     for r in blocks.select("block_key", "uid").collect():
         members.setdefault(r["block_key"], []).append(r["uid"])
+    uid_hash = {
+        r["uid"]: r["h"]
+        for r in blocks.select("uid", F.xxhash64("uid").alias("h")).distinct().collect()
+    }
 
-    def expected(cfg):
+    def expected(cfg, rows_per_salt, hot_tier):
         out = set()
         for uids in members.values():
             us = sorted(uids)
             left = us if len(us) <= cfg.full_join_max else us[: cfg.anchor_rank]
             out.update((a, b) for a in left for b in us if a < b)
+            if hot_tier == "within_salt":
+                n_salts = -(-len(us) // rows_per_salt)
+                buckets: dict[int, list[int]] = {}
+                for u in us:
+                    buckets.setdefault(uid_hash[u] % n_salts, []).append(u)
+                for bucket in buckets.values():
+                    out.update((a, b) for a in bucket for b in bucket if a < b)
         return out
 
     assert max(map(len, members.values())) > 64, "fixture should have hot blocks"
     for cfg in (PairsConfig(), PairsConfig(full_join_max=16, anchor_rank=4)):
-        want = expected(cfg)
         for rows_per_salt in (8, 512):
-            got = candidate_pairs(blocks, cfg, rows_per_salt=rows_per_salt).collect()
-            pairs = [(r["uid_a"], r["uid_b"]) for r in got]
-            assert len(pairs) == len(set(pairs)), (cfg, rows_per_salt)
-            assert set(pairs) == want, (cfg, rows_per_salt)
+            for hot_tier in ("anchor", "within_salt"):
+                want = expected(cfg, rows_per_salt, hot_tier)
+                got = candidate_pairs(
+                    blocks, cfg, rows_per_salt=rows_per_salt, hot_tier=hot_tier
+                ).collect()
+                pairs = [(r["uid_a"], r["uid_b"]) for r in got]
+                case = (cfg, rows_per_salt, hot_tier)
+                assert len(pairs) == len(set(pairs)), case
+                assert set(pairs) == want, case
 
 
 def test_exact_duplicates_contract_to_min_uid_anchor(spark):

@@ -223,28 +223,6 @@ def test_resume_after_kill_before_manifest(spark, tiny_spark, ckpt_dir, result_r
     assert got == result_rows
 
 
-def test_metrics_table_failure_warns(spark, tiny_spark, ckpt_dir, result, monkeypatch):
-    """A failed metrics.parquet write is reported as a RuntimeWarning and
-    metrics.json is still written."""
-    import pandas as pd
-
-    def fail(*_a, **_k):
-        raise OSError("disk full")
-
-    monkeypatch.setattr(pd.DataFrame, "to_parquet", fail)
-    metrics_json = pathlib.Path(ckpt_dir) / "metrics.json"
-    metrics_json.unlink()
-    with pytest.warns(RuntimeWarning, match="metrics.parquet"):
-        run_pipeline(
-            spark,
-            tiny_spark["repos"],
-            tiny_spark["synonym_dict"],
-            labeled_pairs=None,
-            checkpoint_dir=ckpt_dir,
-        )
-    assert json.loads(metrics_json.read_text())["stages"]
-
-
 def test_resume_rebuilds_on_config_change(spark, tiny_spark, ckpt_dir):
     cfg = ERConfig(cc_max_iter=29)  # different signature
     res3 = run_pipeline(

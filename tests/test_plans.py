@@ -81,13 +81,12 @@ def test_q1_agg_single_exchange(spark):
 
 def test_candidate_pairs_reuses_window_exchange_live(spark, tiny_spark):
     """ADVICE r3: the scaling claims rest on the ``block_key`` exchange below
-    the ranking window being evaluated ONCE across the self-join branches of
-    a LIVE (non-checkpointed) block derivation. The ``repartition``
-    above the window never becomes an exchange of its own: Spark plans it
-    away. AQE performs the reuse at runtime, so assert on the executed final
-    plan: the expensive subtree (the tokenizer's Arrow stage under the
-    band-key min-hashes) appears exactly once, and the other branches read a
-    ReusedExchange of the window's exchange."""
+    the ranking window being evaluated ONCE across both sides of the salted
+    join of a LIVE (non-checkpointed) block derivation. AQE performs the
+    reuse at runtime, so assert on the executed final plan: the expensive
+    subtree (the tokenizer's Arrow stage under the band-key min-hashes)
+    appears exactly once, and the other side reads a ReusedExchange of the
+    window's exchange."""
     from belb_spark.operators.blocking import block_keys
     from belb_spark.operators.normalize import normalize
     from belb_spark.operators.pairs import candidate_pairs
@@ -103,6 +102,22 @@ def test_candidate_pairs_reuses_window_exchange_live(spark, tiny_spark):
     s = final_plan_section(pairs)
     assert s.count("ArrowEvalPython") == 1, s
     assert s.count("ReusedExchange") >= 1, s
+
+
+def test_candidate_pairs_is_one_salted_join(spark, tiny_spark):
+    """Every block, small or hot, pairs through ONE (block_key, salt)
+    equi-join: a second join (a separate small-block self-join, anchors ×
+    members, or a within-salt self-join) would add exchanges and stage
+    rounds even where no block is hot."""
+    from belb_spark.operators.blocking import block_keys
+    from belb_spark.operators.normalize import normalize
+    from belb_spark.operators.pairs import candidate_pairs
+
+    blocks = block_keys(normalize(tiny_spark["repos"], tiny_spark["synonym_dict"]))
+    for hot_tier in ("anchor", "within_salt"):
+        s = plan_string(candidate_pairs(blocks, hot_tier=hot_tier), "simple")
+        assert s.count("SortMergeJoin") == 1, s
+        assert s.count("Join") == 1, s
 
 
 def test_dedup_r6_plan_shape(spark, tiny_spark):

@@ -35,7 +35,7 @@ def test_tune_threshold_unscored_pairs_count_as_negative(spark):
     assert abs(f1s[t] - 2 / 3) < 1e-9
 
 
-def test_pipeline_tuned_run(spark, tiny_spark):
+def test_pipeline_tuned_run(spark, tiny_spark, tmp_path):
     from belb_spark.pipeline import ERConfig, run_pipeline
 
     res = run_pipeline(
@@ -43,6 +43,7 @@ def test_pipeline_tuned_run(spark, tiny_spark):
         tiny_spark["repos"],
         tiny_spark["synonym_dict"],
         tiny_spark["labeled_pairs"],
+        checkpoint_dir=str(tmp_path),
         cfg=ERConfig(tune_on_dev=True),
     )
     assert "tuned_threshold" in res.metrics
