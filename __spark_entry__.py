@@ -727,10 +727,21 @@ def q_semi_anti(spark, sf_dir):
 
 
 def q_history_fixpoint(spark, sf_dir):
-    return R.history_fixpoint(spark, sf_dir).select(
+    """J2 to fixpoint (kb.resolve_history) over a synthetic history edge
+    k → k // 7 for every customer key k ≥ 7 (a forest rooted at 1..6).
+    Both history columns are strings, like the ids the operator resolves,
+    so the join never coerces types. Output (c_custkey, root, depth)."""
+    from belb_spark.operators.kb import resolve_history
+
+    cust = R.load(spark, sf_dir, "customer").select("c_custkey")
+    hist = cust.filter(F.col("c_custkey") >= 7).select(
+        F.col("c_custkey").cast("string").alias("old_identifier"),
+        F.expr("c_custkey div 7").cast("string").alias("new_identifier"),
+    )
+    return resolve_history(cust, hist, id_col="c_custkey").select(
         F.col("c_custkey").cast("long"),
-        F.col("root").cast("long"),
-        F.col("depth").cast("long"),
+        F.col("resolved").cast("long").alias("root"),
+        F.col("hops").cast("long").alias("depth"),
     )
 
 
@@ -747,8 +758,18 @@ def q_synset_agg(spark, sf_dir):
 
 
 def q_name_homonyms(spark, sf_dir):
-    return R.name_homonyms(spark, sf_dir).select(
-        "token", F.col("n_langs").cast("long"), F.col("total").cast("long")
+    """A3 NAME_HOMONYMS (kb.name_homonyms): tokens used by >1 lang, with
+    each lang as an identifier and each token as a name."""
+    from belb_spark.operators.kb import name_homonyms
+
+    names = R.load(spark, sf_dir, "documents").select(
+        F.col("lang").alias("identifier"),
+        F.explode(F.split("text", " ")).alias("name"),
+    ).filter(F.col("name") != "")
+    return name_homonyms(names).select(
+        F.col("name").alias("token"),
+        F.col("n_identifiers").cast("long").alias("n_langs"),
+        F.col("n_rows").cast("long").alias("total"),
     )
 
 
@@ -918,15 +939,13 @@ def q_split_assignment(spark, sf_dir):
 
 
 def q_uid_dense_scalable(spark, sf_dir):
-    """W1 scale path (normalize.assign_uids_scalable): dense deterministic
-    1-based uid in (source, doc_id) order WITHOUT a single-partition global
-    sort — literal-boundary bucketing + bucket-local windows + broadcast
-    offsets. The oracle is a plain row_number(), so this row pins that the
-    bucketed path equals the global sort at any partition count."""
-    from belb_spark.operators.normalize import assign_uids_scalable
+    """W1 dense uids (normalize.assign_uids): deterministic 1-based uid in
+    (source, doc_id) order, the row_number over one global sort that the
+    pipeline runs when its input has no uid column."""
+    from belb_spark.operators.normalize import assign_uids
 
     docs = _docs(spark, sf_dir).select("doc_id", "source")
-    out = assign_uids_scalable(docs, keys=["source", "doc_id"])
+    out = assign_uids(docs, keys=("source", "doc_id"))
     return out.select(
         F.col("doc_id").cast("long"), F.col("uid").cast("long")
     )

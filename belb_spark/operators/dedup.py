@@ -51,10 +51,11 @@ over a pair table checkpoints it itself.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from belb_spark.operators.blocking import shingles_col
+from belb_spark.operators.normalize import min_id_per_key
 from belb_spark.operators.pairs import PairsConfig, candidate_pairs
 
 HIGH_NIBBLE = ["8", "9", "a", "b", "c", "d", "e", "f"]  # hex digits with bit3 set
@@ -68,13 +69,9 @@ def tokens_col(text: str | Column, sep: str = " ") -> Column:
 def exact_dedup(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(id, text) -> (id, rep_id, group_size): rep = min id of the identical-
     text group (md5 bucket). Window-based — no self-join."""
-    w = Window.partitionBy("h")
-    return (
-        df.select(F.col(id_col), F.md5(F.col(text_col)).alias("h"))
-        .withColumn("rep_id", F.min(id_col).over(w))
-        .withColumn("group_size", F.count(F.lit(1)).over(w))
-        .select(F.col(id_col), "rep_id", "group_size")
-    )
+    return min_id_per_key(
+        df, id_col, F.md5(F.col(text_col)), "rep_id", size_col="group_size"
+    ).select(F.col(id_col), "rep_id", "group_size")
 
 
 def md5_minhash_sig(shingles: Column, perms: int) -> list[Column]:
@@ -252,14 +249,9 @@ def synset_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """belb's identical-synset merge (belb/kbs/query.py:97-194): rows whose
     *distinct token set* is identical share a cluster; cluster id = min id
     (first identifier becomes canonical). Output (id, cluster)."""
-    w = Window.partitionBy("synset_key")
-    return (
-        df.select(
-            F.col(id_col).alias("id"),
-            F.md5(
-                F.concat_ws("", F.array_sort(F.array_distinct(tokens_col(text_col))))
-            ).alias("synset_key"),
-        )
-        .withColumn("cluster", F.min("id").over(w))
-        .select("id", "cluster")
+    synset_key = F.md5(
+        F.concat_ws("", F.array_sort(F.array_distinct(tokens_col(text_col))))
+    )
+    return min_id_per_key(df, id_col, synset_key, "cluster").select(
+        F.col(id_col).alias("id"), "cluster"
     )

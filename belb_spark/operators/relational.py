@@ -108,35 +108,6 @@ def semi_anti_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def history_fixpoint(spark: SparkSession, sf_dir: str, div: int = 7) -> DataFrame:
-    """J2 to fixpoint: identifier-history chain resolution. belb resolves ONE
-    hop (belb/kbs/kb.py:455-486) + manual patches; here chains are followed
-    to their root by iterated self-joins (log-depth doubling).
-
-    Synthetic history edge: k → k // div (a forest rooted at 1..div-1).
-    Output (c_custkey, root, depth)."""
-    cust = load(spark, sf_dir, "customer").select("c_custkey")
-    cur = cust.select(
-        F.col("c_custkey"),
-        F.col("c_custkey").alias("root"),
-        F.lit(0).alias("depth"),
-    )
-    # follow parent(k) = k/div until parent would be 0; ≤ log_div(max) rounds
-    for _ in range(12):
-        nxt_root = F.when(
-            (F.col("root") / div).cast("long") >= 1, (F.col("root") / div).cast("long")
-        ).otherwise(F.col("root"))
-        stepped = cur.select(
-            "c_custkey",
-            nxt_root.alias("root"),
-            F.when((F.col("root") / div).cast("long") >= 1, F.col("depth") + 1)
-            .otherwise(F.col("depth"))
-            .alias("depth"),
-        )
-        cur = stepped
-    return cur
-
-
 def explode_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E1/E5: explode(split) + count (synonym pipe-split analogue,
     belb/kbs/ncbi_gene/ncbi_gene.py:91-119)."""
@@ -156,23 +127,6 @@ def synset_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.groupBy("source").agg(
         F.array_join(F.array_sort(F.collect_set("lang")), ",").alias("langs"),
         F.count(F.lit(1)).alias("n_docs"),
-    )
-
-
-def name_homonyms(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 NAME_HOMONYMS: names used by >1 identifier
-    (belb/kbs/query.py:234-291); here: tokens appearing in >1 lang."""
-    docs = load(spark, sf_dir, "documents")
-    tok = docs.select(
-        "lang", F.explode(F.split("text", " ")).alias("token")
-    ).filter(F.col("token") != "")
-    return (
-        tok.groupBy("token")
-        .agg(
-            F.countDistinct("lang").alias("n_langs"),
-            F.count(F.lit(1)).alias("total"),
-        )
-        .filter(F.col("n_langs") > 1)
     )
 
 

@@ -22,7 +22,12 @@ from belb_spark.checkpoint import CheckpointStore, config_signature, input_finge
 from belb_spark.operators.blocking import block_keys
 from belb_spark.operators.clustering import connected_components
 from belb_spark.operators.evaluate import metrics_dict, pairwise_metrics
-from belb_spark.operators.normalize import check_sha_invariant, exact_anchor, normalize
+from belb_spark.operators.normalize import (
+    assign_uids,
+    check_sha_invariant,
+    exact_anchor,
+    normalize,
+)
 from belb_spark.operators.pairs import candidate_pairs
 from belb_spark.operators.scoring import THRESHOLD, edges_from_scores, score_pairs
 from belb_spark.session import codegen_compiles
@@ -113,9 +118,8 @@ def _run_pipeline_body(
     repos_in = repos.repartition(3 * spark.sparkContext.defaultParallelism)
     # content lives ONLY here — uid-addressable for the sha checks. The 01
     # checkpoint stores (uid, content_sha, norm_tokens, anchor): content was
-    # ~half its bytes and nothing downstream needs it (VERDICT r2 #1).
-    from belb_spark.operators.normalize import assign_uids
-
+    # ~half its bytes and nothing downstream needs it (VERDICT r2 #1). uids
+    # are assigned once: normalize and the sha checks read the same ones.
     repos_uid = assign_uids(repos_in)
 
     # 1. normalize (content untouched; sha carried) + exact-duplicate
@@ -131,7 +135,7 @@ def _run_pipeline_body(
     def build_normalized() -> DataFrame:
         return (
             exact_anchor(
-                normalize(repos_in, synonym_dict).select(
+                normalize(repos_uid, synonym_dict).select(
                     "uid", "content_sha", "norm_tokens"
                 )
             )

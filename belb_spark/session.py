@@ -33,8 +33,9 @@ def get_spark(
     """Build (or fetch) the configured SparkSession.
 
     master defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default all cores).
-    ``shuffle_partitions`` defaults to cores (single-box: 1 wave of tasks per
-    shuffle; on a real cluster you would size this to ~2-3x total cores).
+    ``shuffle_partitions`` defaults to ``max(cores, 8)`` (single-box: one
+    wave of tasks per shuffle from 8 cores up; on a real cluster you would
+    size this to ~2-3x total cores).
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")

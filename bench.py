@@ -73,10 +73,12 @@ def run_er(spark, scale: str) -> dict:
     import tempfile
 
     ckpt = tempfile.mkdtemp(prefix="belb_bench_ckpt_")
-    t0 = time.time()
-    res = run_pipeline(spark, repos, syn, lp, checkpoint_dir=ckpt)
-    wall = time.time() - t0
-    shutil.rmtree(ckpt, ignore_errors=True)
+    try:
+        t0 = time.time()
+        res = run_pipeline(spark, repos, syn, lp, checkpoint_dir=ckpt)
+        wall = time.time() - t0
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
     m = res.metrics
     pairs_total = m["pairs_scored"] + m["exact_dup_edges"]
     return {

@@ -6,8 +6,9 @@ directory is parsed. Code outside ``belb_spark`` (``__spark_entry__.py``,
 code inside ``belb_spark`` that defines nothing. A top-level function, class
 or assigned name is live once a live body names it (as a name, an attribute
 or an import); a definition whose only callers are themselves dead stays
-dead. Names are matched without their module, so a shared name can hide a
-dead definition, never invent one.
+dead. Names are matched without their module, so a shared name could hide
+a dead definition; a second guard keeps every top-level name in one
+``belb_spark`` module.
 """
 
 from __future__ import annotations
@@ -18,7 +19,7 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 
 # Kept with no engine caller: the scalar references that the batch kernels
-# are tested against, the paper's J2/A2/A4 operators (each the only
+# are tested against, the paper's A2/A4 operators (each the only
 # implementation), the corpus-model readers and span checks (S5/S8/T2), and
 # the package version.
 KEPT = {
@@ -26,7 +27,6 @@ KEPT = {
     "jaro_winkler",
     "levenshtein_norm",
     "char_ngram_cosine",
-    "resolve_history",
     "synset",
     "identifier_homonyms",
     "OBSOLETE",
@@ -97,3 +97,17 @@ def dead_definitions() -> list[str]:
 def test_no_library_definition_is_reached_only_by_tests():
     dead = dead_definitions()
     assert not dead, "no caller outside tests/:\n" + "\n".join(dead)
+
+
+def test_no_top_level_name_is_defined_in_two_library_modules():
+    """Names are matched without their module, so a name defined in two
+    modules would let the live definition hide a dead twin."""
+    mods: dict[str, set[str]] = {}
+    for path in _sources():
+        rel = path.relative_to(REPO).as_posix()
+        if rel.startswith("belb_spark/"):
+            for stmt in ast.parse(path.read_text(), filename=rel).body:
+                for name in _defined(stmt):
+                    mods.setdefault(name, set()).add(rel)
+    dup = sorted(f"{n}: {', '.join(sorted(m))}" for n, m in mods.items() if len(m) > 1)
+    assert not dup, "defined in more than one module:\n" + "\n".join(dup)

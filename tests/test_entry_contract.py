@@ -18,6 +18,10 @@ SUBSET = [
     "window_running_total",
     "history_fixpoint",
     "events_hourly_window",
+    "uid_dense_scalable",
+    "name_homonyms",
+    "dedup_exact",
+    "dedup_synset_clusters",
 ]
 
 

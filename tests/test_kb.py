@@ -127,6 +127,10 @@ def test_identifier_homonyms_identical_synsets_merge(spark):
             (5, "n1", 0), (5, "n2", 1),
             (9, "n1", 0), (9, "n2", 1),     # identical synset as 5
             (7, "n1", 0),                   # different synset
+            # one string split at two points: joining names with \x01
+            # would key 11 and 12 alike
+            (11, "a\x01b", 0), (11, "c", 1),
+            (12, "a", 0), (12, "b\x01c", 1),
         ],
         "identifier int, name string, description int",
     )

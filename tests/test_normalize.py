@@ -64,35 +64,9 @@ def test_fused_udf_matches_split_and_map_canonicalize(spark, tiny_spark):
     assert ref.exceptAll(fused).count() == 0
 
 
-def test_assign_uids_scalable_matches_global(spark, tiny_spark):
-    """The range-partitioned uid assignment is bit-identical to the global
-    row_number (W1), with no single-partition sort of the full table."""
-    from pyspark.sql import functions as F
-
-    from belb_spark.operators.normalize import assign_uids, assign_uids_scalable
-
-    repos = tiny_spark["repos"].drop("uid")
-    want = {
-        (r["repo"], r["path"], r["commit"]): r["uid"]
-        for r in assign_uids(repos).select("repo", "path", "commit", "uid").collect()
-    }
-    got_df = assign_uids_scalable(repos, partitions=4)
-    got = {
-        (r["repo"], r["path"], r["commit"]): r["uid"]
-        for r in got_df.select("repo", "path", "commit", "uid").collect()
-    }
-    assert got == want
-    n = len(got)
-    assert sorted(got.values()) == list(range(1, n + 1))  # dense 1..n
-
-
-def test_assign_uids_scalable_dense_at_size(spark):
-    """ADVICE r2 regression: the old repartitionByRange-derived bucket ids
-    re-sampled per job, so the offsets job and the uid job disagreed at real
-    sizes (60k rows -> 58,347 distinct uids). Bucket ids are now literal
-    boundary comparisons — dense 1..n at 20k rows, every execution."""
-    from belb_spark.operators.normalize import assign_uids_scalable
-
+def test_assign_uids_dense_at_size(spark):
+    """Dense, unique 1..n uids at 20k rows spread over 16 partitions, and
+    the same assignment on every execution of the same DataFrame."""
     n = 20_000
     repos = (
         spark.range(n)
@@ -103,7 +77,7 @@ def test_assign_uids_scalable_dense_at_size(spark):
         )
         .repartition(16)
     )
-    out = assign_uids_scalable(repos, partitions=8)
+    out = assign_uids(repos)
     agg = out.agg(
         F.countDistinct("uid").alias("d"),
         F.min("uid").alias("lo"),
@@ -111,7 +85,6 @@ def test_assign_uids_scalable_dense_at_size(spark):
         F.count(F.lit(1)).alias("n"),
     ).collect()[0]
     assert (agg["d"], agg["lo"], agg["hi"], agg["n"]) == (n, 1, n, n)
-    # re-executing the SAME DataFrame (fresh jobs, fresh sampling in the old
-    # code) must reproduce the identical assignment
+    # re-executing the SAME DataFrame must reproduce the identical assignment
     again = out.agg(F.countDistinct("uid")).collect()[0][0]
     assert again == n
