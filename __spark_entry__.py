@@ -1414,7 +1414,7 @@ FROM h
     sql["dedup_synset_clusters"] = f"""
 WITH k AS (
   SELECT doc_id,
-         md5(array_to_string(list_sort(list_distinct({_TOKS})), '')) AS sk
+         md5(array_to_string(list_sort(list_distinct({_TOKS})), chr(1))) AS sk
   FROM documents
 )
 SELECT doc_id::BIGINT AS doc_id,

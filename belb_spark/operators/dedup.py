@@ -250,7 +250,7 @@ def synset_clusters(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     *distinct token set* is identical share a cluster; cluster id = min id
     (first identifier becomes canonical). Output (id, cluster)."""
     synset_key = F.md5(
-        F.concat_ws("", F.array_sort(F.array_distinct(tokens_col(text_col))))
+        F.concat_ws("\x01", F.array_sort(F.array_distinct(tokens_col(text_col))))
     )
     return min_id_per_key(df, id_col, synset_key, "cluster").select(
         F.col(id_col).alias("id"), "cluster"

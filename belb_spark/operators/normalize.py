@@ -36,10 +36,15 @@ def assign_uids(
     that scale pre-assign uids at ingest (e.g. zipWithIndex per Iceberg
     partition + partition offsets). The testdata generator pre-assigns uids
     the same way, so this is only used when ``uid`` is absent.
+
+    Rows that tie on ``keys`` are ordered by their remaining columns, so
+    every evaluation of the same input gives each row the same uid (rows
+    equal in every column are interchangeable).
     """
     if "uid" in repos.columns:
         return repos
-    w = Window.orderBy(*keys)
+    rest = [c for c in repos.columns if c not in keys]
+    w = Window.orderBy(*keys, *rest)
     return repos.withColumn("uid", F.row_number().over(w).cast("long"))
 
 

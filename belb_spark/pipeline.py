@@ -118,8 +118,10 @@ def _run_pipeline_body(
     repos_in = repos.repartition(3 * spark.sparkContext.defaultParallelism)
     # content lives ONLY here — uid-addressable for the sha checks. The 01
     # checkpoint stores (uid, content_sha, norm_tokens, anchor): content was
-    # ~half its bytes and nothing downstream needs it (VERDICT r2 #1). uids
-    # are assigned once: normalize and the sha checks read the same ones.
+    # ~half its bytes and nothing downstream needs it (VERDICT r2 #1).
+    # normalize and the sha checks both read repos_uid; assign_uids orders
+    # key ties by the other columns, so its two evaluations give each row
+    # the same uid.
     repos_uid = assign_uids(repos_in)
 
     # 1. normalize (content untouched; sha carried) + exact-duplicate

@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from belb_spark.operators.dedup import (
     minhash_lsh_pairs,
     ngram_jaccard_pairs,
+    synset_clusters,
     tokens_col,
 )
 from belb_spark.operators.blocking import shingles_col
@@ -127,3 +128,14 @@ def test_dense_ids_avoids_global_window(spark):
     expected["want"] = range(1, len(expected) + 1)
     merged = pdf.merge(expected, on="p_brand")
     assert (merged["brand_id"] == merged["want"]).all()
+
+
+def test_synset_clusters_keeps_split_token_sets_apart(spark):
+    """Equal distinct-token sets share the min id; token sets whose
+    concatenations coincide ('ab c' vs 'a bc') stay apart."""
+    df = spark.createDataFrame(
+        [(1, "ab c"), (2, "a bc"), (3, "c ab ab"), (4, "bc a")],
+        "doc_id long, text string",
+    )
+    got = {r["id"]: r["cluster"] for r in synset_clusters(df, "doc_id", "text").collect()}
+    assert got == {1: 1, 2: 2, 3: 1, 4: 2}

@@ -43,6 +43,18 @@ def test_assign_uids_deterministic_row_number(spark):
     assert out == {"r1": 1, "r2": 2}
 
 
+def test_assign_uids_key_ties_are_stable(spark):
+    """Rows sharing (repo, path, commit) get the same uid on every
+    evaluation, whatever the input's order and partitioning."""
+    rows = [("r", "p", "c", "go", f"body {i}") for i in range(40)]
+    schema = "repo string, path string, commit string, lang string, content string"
+    a = spark.createDataFrame(rows, schema).repartition(1)
+    b = spark.createDataFrame(rows[::-1], schema).repartition(5)
+    uid_of = lambda df: {r["content"]: r["uid"] for r in assign_uids(df).collect()}
+    assert uid_of(a) == uid_of(b)
+    assert sorted(uid_of(a).values()) == list(range(1, 41))
+
+
 def test_normalize_without_dict(spark, tiny_spark):
     norm = normalize(tiny_spark["repos"], None)
     assert norm.filter(F.col("norm_tokens").isNull()).count() == 0
